@@ -10,13 +10,18 @@ cluster — a 100 TB log scan is just a text scan + projections.
 Pipeline (SURVEY §2.A):
 
   raw line (STRING)
-    -> parse_combined_log:    9-field struct (A2), null-out on regex miss
+    -> parse_combined_log:    9 fields from one regex pass (A2), null-out
+       on regex miss
     -> drop unparseable (A3)
     -> status filter (A4; the reference's *documented intent* is
        status == 200 — its code has an inverted comparison, which we
        expose via ``keep_non_200`` for literal parity; SURVEY §2.E.1)
     -> project_log_fields:    (clientIP, accessDate, sectionId,
        articleId) with the sentinel row on date-parse failure (A5-A8)
+
+The line regex (A2) and the date parse + id regexes (A5-A7) each sit
+behind a pushdown barrier (:func:`_computed_once`), so a query's own
+filters never copy them: each runs once per line, not once per predicate.
 
 Semantics notes implemented exactly (SURVEY §2.E):
   - request split requires exactly 3 tokens (method, uri, proto);
@@ -60,19 +65,67 @@ SENTINEL_IP = "0.0.0.0"
 SENTINEL_DATE = "0000-00-00 00:00:00"
 
 
+# regexp_replace template that packs the 9 groups of a matched line into
+# one string. A group is cut out of it by counting delimiters it cannot
+# contain (see _field): the status $6 (``\d{3}``) and the ``\S+`` fields
+# $1/$2/$3/$7 hold no space and lead, so they are the first five
+# space-separated fields; $5/$8/$9 (``[^"]*``) hold no '"' and trail, so
+# they are the 4th-, 3rd- and 2nd-last '"'-separated fields; the date $4
+# (``[^\]]*``) follows the fifth space and ends at the next ']'. The
+# closing '"' fences off the one piece of a matched line the regex does
+# not consume: Java's ``$`` may match before a final line terminator that
+# ``\s*`` cannot eat (U+0085, U+2028, U+2029), and that terminator is
+# copied after the template.
+_PACK_TEMPLATE = '$6 $1 $2 $3 $7 $4]"$5"$8"$9"'
+
+
+def _field(s: Column, delim: str, n: int) -> Column:
+    """The n-th ``delim``-separated field of ``s``, counted from the left
+    (n > 0) or from the right (n < 0)."""
+    return F.substring_index(F.substring_index(s, delim, n), delim, -1 if n > 0 else 1)
+
+
+def _computed_once(df: DataFrame, *cols: Column) -> DataFrame:
+    """``df.select(*cols)``, read back out of a one-element ``inline``.
+
+    Catalyst pushes a filter below a projection by substituting the
+    projected expressions into the predicate, so over a plain projection
+    every filter on a parsed column carries its own copy of the parse.
+    Nothing is pushed through generator output, so columns selected here
+    are computed once per row whatever filters callers add above them.
+    """
+    return df.select(F.inline(F.array(F.struct(*cols))))
+
+
 def parse_combined_log(df: DataFrame, line_col: str = "line") -> DataFrame:
     """A2: raw line -> 9 string columns; regex miss -> all-null fields.
 
-    One pass of ``regexp_extract`` per field. Catalyst evaluates the
-    shared regex per row inside codegen; no Python crosses the boundary.
+    The combined-log regex runs once per line (behind
+    :func:`_computed_once`): ``regexp_replace`` packs the 9 groups into
+    one string (:data:`_PACK_TEMPLATE`), and the fields are cut out of it
+    with ``substring_index``. A miss leaves the line unchanged, so
+    ``packed != line`` is exactly "matched": a match has 16 literal
+    characters around its groups and the template 10, so its packed form
+    is at least 6 characters shorter.
     """
     line = F.col(line_col)
-    matched = line.rlike(COMBINED_LOG_REGEX)
-    cols = [
-        F.when(matched, F.regexp_extract(line, COMBINED_LOG_REGEX, i + 1)).alias(name)
-        for i, name in enumerate(LOG_FIELDS)
-    ]
-    return df.select(line.alias(line_col), *cols)
+    packed = _computed_once(
+        df,
+        line.alias(line_col),
+        F.regexp_replace(line, COMBINED_LOG_REGEX, _PACK_TEMPLATE).alias("_packed"),
+    )
+    p = F.nullif(F.col("_packed"), line)  # null on a regex miss
+    # '$4]"$5"$8"$9"': everything after the fifth space
+    bracketed = F.substr(p, F.length(F.substring_index(p, " ", 5)) + 2)
+    groups = (  # $1 .. $9
+        _field(p, " ", 2), _field(p, " ", 3), _field(p, " ", 4),
+        F.substring_index(bracketed, "]", 1), _field(p, '"', -4),
+        _field(p, " ", 1), _field(p, " ", 5), _field(p, '"', -3),
+        _field(p, '"', -2),
+    )
+    return packed.select(
+        line, *(g.alias(name) for g, name in zip(groups, LOG_FIELDS))
+    )
 
 
 def drop_unparseable(df: DataFrame) -> DataFrame:
@@ -106,7 +159,7 @@ def normalized_date(date_time: Column) -> Column:
     a real TimestampType; callers needing the reference's string format
     apply :func:`formatted_date`.
     """
-    naive = F.regexp_extract(date_time, r"^([^ ]+)", 1)
+    naive = F.substring_index(date_time, " ", 1)
     # try_to_timestamp: null (not ANSI error) on unparseable input —
     # the parser's contract is "sentinel row on bad date", never a crash.
     return F.try_to_timestamp(naive, F.lit("dd/MMM/yyyy:HH:mm:ss"))
@@ -130,9 +183,12 @@ def article_id(uri: Column) -> Column:
 def _id_from_uri(uri: Column, pattern: str) -> Column:
     # try_cast: a hostile URI with an overlong id (> INT_MAX digits)
     # must degrade to 0 ("not a hit"), never ANSI-abort a 100 TB scan.
-    extracted = F.regexp_extract(uri, pattern, 1)
+    # nullif keeps the '' of a miss away from try_cast, whose failure
+    # path is several times slower, and evaluates the regex once (Spark
+    # computes nullif's operand as a common expression).
     return F.coalesce(
-        F.when(extracted != "", extracted).try_cast("int"), F.lit(0)
+        F.nullif(F.regexp_extract(uri, pattern, 1), F.lit("")).try_cast("int"),
+        F.lit(0),
     )
 
 
@@ -147,18 +203,28 @@ def project_log_fields(df: DataFrame) -> DataFrame:
     event-time operations.
     """
     uri = request_uri(F.col("request"))
-    ts = normalized_date(F.col("dateTime"))
+    # The date parse and the URI regexes run once per row, ahead of the
+    # sentinel CASEs (Catalyst shares no subexpression across their
+    # branches) and of the filters the queries add on the ids.
+    typed = _computed_once(
+        df,
+        F.col("clientIpAddress"),
+        normalized_date(F.col("dateTime")).alias("ts"),
+        section_id(uri).alias("sid"),
+        article_id(uri).alias("aid"),
+    )
+    ts = F.col("ts")
     bad_date = ts.isNull()
-    return df.select(
+    return typed.select(
         F.when(bad_date, F.lit(SENTINEL_IP))
         .otherwise(F.col("clientIpAddress"))
         .alias("clientIP"),
         F.when(bad_date, F.lit(SENTINEL_DATE))
         .otherwise(formatted_date(ts))
         .alias("accessDate"),
-        F.when(bad_date, F.lit(None).cast("timestamp")).otherwise(ts).alias("accessTs"),
-        F.when(bad_date, F.lit(0)).otherwise(section_id(uri)).alias("sectionId"),
-        F.when(bad_date, F.lit(0)).otherwise(article_id(uri)).alias("articleId"),
+        ts.alias("accessTs"),
+        F.when(bad_date, F.lit(0)).otherwise(F.col("sid")).alias("sectionId"),
+        F.when(bad_date, F.lit(0)).otherwise(F.col("aid")).alias("articleId"),
     )
 
 
@@ -168,8 +234,9 @@ def parse_access_logs(
     """Full A2-A8 chain: raw lines -> the reference's ``logs`` view shape.
 
     Works identically on batch DataFrames and streaming DataFrames
-    (all expressions are stateless projections/filters), which is what
-    makes the engine's batch/stream dual-mode possible.
+    (all steps are stateless projections, filters and one-row
+    generators), which is what makes the engine's batch/stream
+    dual-mode possible.
     """
     parsed = drop_unparseable(parse_combined_log(df, line_col))
     filtered = filter_status(parsed, keep_non_200=keep_non_200)

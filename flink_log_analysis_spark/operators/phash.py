@@ -117,7 +117,7 @@ def synth_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
         for pdf in it:
             yield pd.DataFrame(
-                {"doc_id": pdf[id_col], "img": pdf[id_col].map(make)}
+                {id_col: pdf[id_col], "img": pdf[id_col].map(make)}
             )
 
     return df.select(id_col).mapInPandas(
@@ -180,7 +180,7 @@ def block_stats(
             cols = pdf[img_col].map(one)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    id_col: pdf[id_col],
                     "width": cols.map(lambda t: t[0]).astype("int32"),
                     "height": cols.map(lambda t: t[1]).astype("int32"),
                     "total": cols.map(lambda t: t[2]).astype("int64"),
@@ -543,7 +543,7 @@ def dct_signatures_arrow(
             cols = pdf[img_col].map(one)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf[id_col],
+                    id_col: pdf[id_col],
                     "width": cols.map(lambda r: r[0]).astype("int32"),
                     "height": cols.map(lambda r: r[1]).astype("int32"),
                     "hash_hi": cols.map(lambda r: r[2]).astype("int64"),

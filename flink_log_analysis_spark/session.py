@@ -16,6 +16,7 @@ module centralizes the session config we want everywhere:
 
 from __future__ import annotations
 
+import hashlib
 import os
 from contextlib import contextmanager
 
@@ -245,7 +246,11 @@ def manufactured_input(
         return path
     root = os.environ.get("SPARK_GRAFT_INPUT_CACHE")
     if root:
-        key = prefix + _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
+        # The readable slug alone collapses distinct paths (/a/b_c and
+        # /a/b/c both read a_b_c); a hash of the raw path keeps them apart.
+        slug = _re.sub(r"[^A-Za-z0-9.]+", "_", sf_dir.strip("/"))
+        digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:8]
+        key = f"{prefix}{slug}_{digest}"
         path = os.path.join(root, key)
         if not os.path.exists(os.path.join(path, subdir, "_SUCCESS")):
             os.makedirs(path, exist_ok=True)

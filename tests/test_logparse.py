@@ -150,3 +150,62 @@ def test_synthetic_corpus_roundtrip(spark):
     assert 0 < agg.max_tid <= 1000
     # a row is never both a section and an article hit
     assert out.filter((F.col("sectionId") != 0) & (F.col("articleId") != 0)).count() == 0
+
+
+def test_combined_log_regex_once_per_query_plan(spark):
+    """Plan guard: each reference query's optimized plan holds the
+    combined-log regex exactly once; without the parse's barriers,
+    filter pushdown substitutes it into every predicate (18 / 18 / 28
+    copies). The date parse must not be copied into the queries' own
+    filters either."""
+    from flink_log_analysis_spark.streaming.runner import (
+        client_ip_access_agg,
+        hot_article_agg,
+        hot_section_agg,
+        parsed_log_stream,
+    )
+
+    logs = parsed_log_stream(_lines_df(spark, [SECTION_LINE]))
+    sections = spark.createDataFrame([(2, "s")], "fid int, name string")
+    articles = spark.createDataFrame([(9, "a")], "tid int, subject string")
+    for agg in (
+        hot_section_agg(logs, sections),
+        hot_article_agg(logs, articles),
+        client_ip_access_agg(logs),
+    ):
+        plan = agg._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count(logparse.COMBINED_LOG_REGEX) == 1, plan
+        assert plan.count("try_to_timestamp") == 1, plan
+
+
+def test_packed_cut_matches_group_extract(spark):
+    """The one-pass cut equals a ``regexp_extract`` per group, in Java
+    regex semantics, on lines whose fields hold the delimiters the cut
+    counts, and on lines ending in a line terminator Java's ``$`` stops
+    before but ``\\s*`` cannot consume."""
+    lines = [
+        ARTICLE_LINE,
+        ABORTED_LINE,
+        GARBAGE_LINE,
+        'a]"$\\ b]" c"[ [d "q" x] "GET /a]b\\ HTTP/1.1" 200 "[$1] "r]f" "u]a"',
+        '1.1.1.1 - - [] "" 200 - "" ""',
+        '1.1.1.1 - - [ 27/Aug/2020:10:20:53] "GET / HTTP/1.1" 200 1 "-" "UA" \t ',
+        '1.1.1.1 - - [27/Aug/2020:10:20:53 +0800] "GET / HTTP/1.1" 200 1 "-" "UA" ',
+        '1.1.1.1 - - [27/Aug/2020:10:20:53 +0800] "GET / HTTP/1.1" 200 1 "-" "UA" \u0085',
+        '1.1.1.1 - - [27/Aug/2020:10:20:53 +0800] "GET / HTTP/1.1" 200 1 "-" "UA" x',
+        '1.1.1.1  - - [27/Aug/2020:10:20:53 +0800] "GET / HTTP/1.1" 200 1 "-" "UA"',
+    ]
+    df = spark.createDataFrame([(ln,) for ln in lines], "line string")
+    line = F.col("line")
+    matched = line.rlike(logparse.COMBINED_LOG_REGEX)
+    want = df.select(
+        line,
+        *(
+            F.when(matched, F.regexp_extract(line, logparse.COMBINED_LOG_REGEX, i + 1))
+            .alias(name)
+            for i, name in enumerate(logparse.LOG_FIELDS)
+        ),
+    )
+    got = logparse.parse_combined_log(df)
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert got.filter(F.col("clientIpAddress").isNotNull()).count() == 7

@@ -59,14 +59,24 @@ ts_valid = st.builds(
     st.sampled_from(["+0800", "-0700", "+0000"]),
 )
 ts_garbage = st.sampled_from(
-    ["99/Zzz/20x0:99:99:99 +0800", "not-a-date", "31/Feb/2020:10:00:00 +0000"]
+    ["99/Zzz/20x0:99:99:99 +0800", "not-a-date", "31/Feb/2020:10:00:00 +0000",
+     "", " 27/Aug/2020:10:20:53 +0800"]
 )
-ts_s = st.one_of(ts_valid, ts_garbage)
+# A date whose zone part holds the '"' and '[' the request side counts.
+ts_quoted = st.builds(lambda t: t.replace(" ", ' "[', 1), ts_valid)
+ts_s = st.one_of(ts_valid, ts_garbage, ts_quoted)
+
+# Hostile ASCII content: every field may hold each delimiter its regex
+# group allows, which is what the one-pass parse cuts around. ASCII
+# only, because Python's \s and \d are Unicode-aware and Java's are not.
+token_s = st.text(alphabet='ab.-]["$\\', min_size=1, max_size=6)  # \S+
+quoted_s = st.text(alphabet='ab /?=&]$\\[\t', max_size=12)      # [^"]*
 
 uri_s = st.one_of(
     st.builds(lambda n: f"/forum.php?mod=forumdisplay&fid={n}", st.integers(1, 9999)),
     st.builds(lambda n: f"/forum.php?mod=viewthread&tid={n}&extra=x", st.integers(1, 9999)),
     st.builds(lambda n: f"/forum.php?mod=ajax&fid={n}", st.integers(1, 99)),
+    st.builds(lambda n: f"/f]$\\.php?mod=viewthread&tid={n}]", st.integers(1, 99)),
     st.sampled_from(["/index.php", "/a%20b", "/x?y=z"]),
     # overlong id that must degrade to 0, never ANSI-crash
     st.just("/forum.php?mod=viewthread&tid=99999999999999999999"),
@@ -76,19 +86,33 @@ request_s = st.one_of(
     st.builds(lambda u: f"POST {u} HTTP/1.0", uri_s),
     st.just("-"),                       # aborted request
     st.builds(lambda u: f"GET {u}", uri_s),  # 2 tokens -> no uri
+    st.builds(lambda u: f"GET  {u} HTTP/1.1", uri_s),  # double space
+    st.builds(lambda u: f"GET\t{u} HTTP/1.1]", uri_s),
+    quoted_s,
 )
 status_s = st.sampled_from(["200", "404", "403", "500", "408"])
-referer_s = st.sampled_from(
-    ["-", "http://kms-4/forum.php?mod=forumdisplay&fid=46", "http://x/y?tid=9"]
+referer_s = st.one_of(
+    st.sampled_from(
+        ["-", "http://kms-4/forum.php?mod=forumdisplay&fid=46", "http://x/y?tid=9"]
+    ),
+    quoted_s,
 )
-ua_s = st.sampled_from(["Mozilla/5.0 (X11; Linux)", "curl/8.0.1", "-"])
+ua_s = st.one_of(
+    st.sampled_from(["Mozilla/5.0 (X11; Linux)", "curl/8.0.1", "-", "a] b"]),
+    quoted_s,
+)
+sep_s = st.sampled_from([" ", " ", " ", "  "])  # a double space never matches
+tail_s = st.sampled_from(["", "", " ", "\t", " \t ", "  "])
 
 wellformed = st.builds(
-    lambda ip, ts, rq, stc, nb, ref, ua:
-        f'{ip} - - [{ts}] "{rq}" {stc} {nb} "{ref}" "{ua}"',
-    ip_s, ts_s, request_s, status_s,
-    st.one_of(st.integers(0, 10 ** 6).map(str), st.just("-")),
-    referer_s, ua_s,
+    lambda ip, ident, user, ts, rq, stc, nb, ref, ua, sep, tail:
+        f'{ip}{sep}{ident} {user} [{ts}] "{rq}" {stc} {nb} "{ref}" "{ua}"{tail}',
+    st.one_of(ip_s, token_s),
+    st.one_of(st.just("-"), token_s),
+    st.one_of(st.just("-"), token_s),
+    ts_s, request_s, status_s,
+    st.one_of(st.integers(0, 10 ** 6).map(str), st.just("-"), token_s),
+    referer_s, ua_s, sep_s, tail_s,
 )
 garbage = st.one_of(
     st.text(max_size=80).filter(lambda s: '"' not in s and "\n" not in s),

@@ -313,3 +313,28 @@ def test_dct_arrow_envelope_fallback_matches(spark):
     assert (fast["hash_hi"], fast["hash_lo"]) == (
         slow["hash_hi"], slow["hash_lo"]
     )
+
+
+def test_dct_arrow_non_default_id_col(spark):
+    """The Arrow stages must carry the caller's id column by name: a
+    frame keyed by ``img_id`` hashes exactly like the same frame keyed
+    by ``doc_id``."""
+    from flink_log_analysis_spark.operators import mediacodecs as mc
+
+    rows = []
+    for i, (w, h) in enumerate([(32, 32), (6, 5)]):
+        px = [[((r * 3 + c * 11 + i * 17) % 256,) * 3 for c in range(w)]
+              for r in range(h)]
+        rows.append((i, bytearray(mc.encode_bmp(px))))
+    by_doc = spark.createDataFrame(rows, "doc_id bigint, img binary")
+    by_img = by_doc.withColumnRenamed("doc_id", "img_id")
+    want = {r["doc_id"]: r for r in ph.dct_signatures_arrow(by_doc).collect()}
+    got_df = ph.dct_signatures_arrow(by_img, id_col="img_id")
+    assert got_df.columns[0] == "img_id"
+    got = {r["img_id"]: r for r in got_df.collect()}
+    assert set(got) == set(want)
+    for k in want:
+        for col in ("width", "height", "hash_hi", "hash_lo"):
+            assert got[k][col] == want[k][col], (k, col)
+    stats = ph.block_stats(by_img, id_col="img_id").collect()
+    assert sorted(r["img_id"] for r in stats) == sorted(want)

@@ -86,3 +86,25 @@ def test_date32_parquet_normalized(spark):
         assert dict(df.dtypes)["ts"] == "timestamp"
         [row] = df.select(F.unix_micros("ts").alias("us")).collect()
         assert row.us == 19723 * 86400 * 1_000_000
+
+
+def test_manufactured_input_keys_keep_paths_apart(monkeypatch, tmp_path):
+    """The run-cache key must not collapse distinct sf_dir paths whose
+    readable slugs coincide (/a/b_c and /a/b/c)."""
+    from flink_log_analysis_spark.session import manufactured_input
+
+    monkeypatch.setenv("SPARK_GRAFT_INPUT_CACHE", str(tmp_path))
+    built = []
+
+    def build(path):
+        built.append(path)
+        os.makedirs(os.path.join(path, "lines"))
+        open(os.path.join(path, "lines", "_SUCCESS"), "w").close()
+
+    a = manufactured_input({}, "/a/b_c", "logs_", "lines", build)
+    b = manufactured_input({}, "/a/b/c", "logs_", "lines", build)
+    assert a != b
+    assert built == [a, b]
+    # a fresh process cache still reuses the run-scoped dir
+    assert manufactured_input({}, "/a/b_c", "logs_", "lines", build) == a
+    assert len(built) == 2

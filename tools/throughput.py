@@ -3,9 +3,9 @@
 
 The reference is a log-parsing streaming job; its per-node ceiling is
 the parser. This measures the engine's full A2-A8 columnar parse chain
-(regex validate -> 9-field extract -> status filter -> date normalize
--> id extract -> sentinel projection) on generated lines, end to end,
-on local[$SPARK_GRAFT_CPUS].
+(one regex pass packing the 9 fields -> field cut -> status filter ->
+date normalize -> id extract -> sentinel projection) on generated
+lines, end to end, on local[$SPARK_GRAFT_CPUS].
 
 Prints one JSON line: {"lines": N, "seconds": s, "mlines_per_s": x}.
 Usage: python tools/throughput.py [--lines 2000000]
