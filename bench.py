@@ -47,8 +47,7 @@ differ):
   first-execution contamination; with the deep warm in place it was
   redundant — and the stacked executions (up to 7 per slow query) made
   the r16 driver bench time out (BENCH_r16.json rc=124, the round's
-  defining failure). The "retried"/"retry_times" keys stay in the
-  detail line (always empty) so the format is stable.
+  defining failure).
 - The sf0.01 warm pass (rounds 5-16) is gone for the same reason: the
   deep warm at the timed SF strictly subsumes its JIT coverage, so the
   extra pass only cost wall-clock inside the driver's window.
@@ -151,8 +150,6 @@ EXCLUDE = (
 def assemble_lines(
     timings: dict,
     errors: dict,
-    retried: list,
-    retry_samples: dict,
     prebuild: dict,
     prebuild_errors: dict,
     sf: float,
@@ -172,8 +169,6 @@ def assemble_lines(
         "methodology": METHODOLOGY,
         "queries": timings,
         "errors": errors,
-        "retried": retried,
-        "retry_times": retry_samples,
         "prebuild": prebuild,
         "prebuild_errors": prebuild_errors,
         "phase_wall": phase_wall or {},
@@ -321,7 +316,7 @@ def run_slice(
     # ONCE PER BENCH RUN (r16 ran them once per matching chunk — 82s of
     # duplicated untimed work in the 8-core driver run); a manual slice
     # run without the env var keeps the name-triggered behavior.
-    def _index_economics(prefix, build_key, build_fn, search_key, search):
+    def _index_economics(prefix, build_key, build_fn, search_key):
         from pyspark.sql import functions as F
 
         from flink_log_analysis_spark.operators import similarity as _sim
@@ -340,7 +335,7 @@ def run_slice(
 
             def _pruned_search() -> None:
                 q = _emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-                res, _ = getattr(_sim, search)(
+                res, _ = _sim.knn_persisted(
                     spark, _idx, q, k=K, n_probe=IVF_INDEX_PROBE
                 )
                 res.write.format("noop").mode("overwrite").save()
@@ -370,7 +365,6 @@ def run_slice(
                 emb, idx, n_cells=IVF_INDEX_CELLS, seed=42
             ),
             "ivf_index_search_pruned",
-            "knn_ivf_persisted",
         )
     if "pq" in econ:
         from flink_log_analysis_spark.plans.llm_similarity import (
@@ -391,7 +385,6 @@ def run_slice(
             "pq_index_build",
             _pq_build,
             "pq_index_search_pruned",
-            "knn_pq_persisted",
         )
 
     # Manufactured JSONL/CSV inputs are shared corpus snapshots like
@@ -472,6 +465,80 @@ def run_slice(
     return timings, errors, prebuild, prebuild_errors, phase_wall
 
 
+def run_chunks(
+    names: list[str], chunk: int, launch
+) -> tuple[dict, dict, dict, dict, dict]:
+    """Run ``names`` in contiguous chunks of ``chunk`` through
+    ``launch(part, econ)`` — which returns the chunk's JSON payload and
+    raises when the chunk dies — and merge the payloads into
+    (timings, errors, prebuild, prebuild_errors, phase_wall).
+
+    The index-economics blocks (``econ``: "ivf", "pq") run once per
+    bench run, in the first chunk whose names match. A flag is cleared
+    only when the chunk that carried it returned its payload; a chunk
+    that times out or crashes hands its flags to the next chunk, so one
+    dead chunk cannot cost the run its ``*_index_build`` /
+    ``*_index_search_pruned`` rows. Flags the last chunk could not
+    deliver are reported under ``prebuild_errors``."""
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    prebuild: dict[str, float] = {}
+    prebuild_errors: dict[str, str] = {}
+    phase_wall: dict[str, float] = {}
+    econ_pending = {"ivf", "pq"}
+    carried: set[str] = set()
+    n_chunks = (len(names) + chunk - 1) // chunk
+    t_run0 = time.perf_counter()
+    for i in range(0, len(names), chunk):
+        part = names[i : i + chunk]
+        want = set(carried)
+        if "ivf" in econ_pending and "knn_ivf" in part:
+            want.add("ivf")
+        if "pq" in econ_pending and any(
+            n.startswith(("knn_pq", "knn_ivf_pq")) for n in part
+        ):
+            want.add("pq")
+        t_c0 = time.perf_counter()
+        try:
+            payload = launch(part, ",".join(sorted(want)))
+        except Exception as exc:  # noqa: BLE001 — a dead chunk loses
+            # its queries' timings but must not kill the bench line.
+            for n in part:
+                if n not in timings:
+                    errors[n] = f"chunk failed: {exc}"[:300]
+            carried = want
+            continue
+        econ_pending -= want
+        carried = set()
+        timings.update(payload["queries"])
+        errors.update(payload["errors"])
+        for k, v in payload.get("prebuild", {}).items():
+            prebuild[k] = round(prebuild.get(k, 0.0) + v, 3)
+        prebuild_errors.update(payload.get("prebuild_errors", {}))
+        pw = payload.get("phase_wall", {})
+        for k, v in pw.items():
+            phase_wall[k] = round(phase_wall.get(k, 0.0) + v, 3)
+        # Per-chunk progress to stderr: makes a run that times out
+        # diagnosable from captured output (which chunk, how long,
+        # which phase is eating the budget).
+        print(
+            f"[bench] chunk {i // chunk + 1}/{n_chunks} "
+            f"({len(part)}q) wall={time.perf_counter() - t_c0:.1f}s "
+            f"boot={pw.get('session_boot', 0):.1f} "
+            f"prebuild={pw.get('prebuild', 0):.1f} "
+            f"deep_warm={pw.get('deep_warm', 0):.1f} "
+            f"timed={pw.get('timed', 0):.1f} "
+            f"elapsed={time.perf_counter() - t_run0:.0f}s",
+            file=sys.stderr,
+            flush=True,
+        )
+    for flag in sorted(carried):
+        prebuild_errors[f"{flag}_index_build"] = (
+            "not run: the chunk carrying it failed and no chunk followed"
+        )
+    return timings, errors, prebuild, prebuild_errors, phase_wall
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([\d.]+)", sf_dir)
@@ -501,11 +568,7 @@ def main() -> None:
     # families, and keeping a family in one JVM lets its shared plan
     # fragments hit the codegen cache; striding was measured 28% worse
     # (every chunk re-compiles every family).
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    prebuild: dict[str, float] = {}
-    prebuild_errors: dict[str, str] = {}
-    phase_wall: dict[str, float] = {}
+
     # Run-scoped manufactured-input cache shared across chunk JVMs
     # (see module docstring) — created fresh per bench run, deleted on
     # exit, so every invocation still computes from the parquet inputs.
@@ -513,84 +576,38 @@ def main() -> None:
     if not os.environ.get("SPARK_GRAFT_INPUT_CACHE"):
         own_input_cache = tempfile.mkdtemp(prefix="bench_inputs_")
         os.environ["SPARK_GRAFT_INPUT_CACHE"] = own_input_cache
-    # Index-economics blocks run once per bench run, in the first
-    # chunk whose names match (empty env = already done / not needed).
-    econ_pending = {"ivf", "pq"}
 
-    def _econ_for(part: list[str]) -> str:
-        want = set()
-        if "ivf" in econ_pending and "knn_ivf" in part:
-            want.add("ivf")
-        if "pq" in econ_pending and any(
-            n.startswith(("knn_pq", "knn_ivf_pq")) for n in part
-        ):
-            want.add("pq")
-        econ_pending.difference_update(want)
-        return ",".join(sorted(want))
+    def launch(part: list[str], econ: str) -> dict:
+        env = dict(
+            os.environ,
+            SPARK_GRAFT_BENCH_SLICE=",".join(part),
+            SPARK_GRAFT_BENCH_ECON=econ,
+        )
+        proc = subprocess.run(
+            [sys.executable, os.path.abspath(__file__)],
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=1800,
+        )
+        for ln in reversed(proc.stdout.strip().splitlines()):
+            if ln.startswith("{"):
+                return json.loads(ln)
+        raise RuntimeError(
+            f"chunk produced no JSON (rc={proc.returncode}): "
+            f"{proc.stderr[-300:]}"
+        )
 
-    t_run0 = time.perf_counter()
     try:
-        for i in range(0, len(names), chunk):
-            part = names[i : i + chunk]
-            env = dict(
-                os.environ,
-                SPARK_GRAFT_BENCH_SLICE=",".join(part),
-                SPARK_GRAFT_BENCH_ECON=_econ_for(part),
-            )
-            t_c0 = time.perf_counter()
-            try:
-                proc = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__)],
-                    env=env,
-                    capture_output=True,
-                    text=True,
-                    timeout=1800,
-                )
-                payload = None
-                for ln in reversed(proc.stdout.strip().splitlines()):
-                    if ln.startswith("{"):
-                        payload = json.loads(ln)
-                        break
-                if payload is None:
-                    raise RuntimeError(
-                        f"chunk produced no JSON (rc={proc.returncode}): "
-                        f"{proc.stderr[-300:]}"
-                    )
-                timings.update(payload["queries"])
-                errors.update(payload["errors"])
-                for k, v in payload.get("prebuild", {}).items():
-                    prebuild[k] = round(prebuild.get(k, 0.0) + v, 3)
-                prebuild_errors.update(payload.get("prebuild_errors", {}))
-                for k, v in payload.get("phase_wall", {}).items():
-                    phase_wall[k] = round(phase_wall.get(k, 0.0) + v, 3)
-                # Per-chunk progress to stderr: makes a driver-window
-                # timeout diagnosable from captured output (which
-                # chunk, how long, which phase is eating the budget).
-                pw = payload.get("phase_wall", {})
-                print(
-                    f"[bench] chunk {i // chunk + 1}/"
-                    f"{(len(names) + chunk - 1) // chunk} "
-                    f"({len(part)}q) wall={time.perf_counter() - t_c0:.1f}s "
-                    f"boot={pw.get('session_boot', 0):.1f} "
-                    f"prebuild={pw.get('prebuild', 0):.1f} "
-                    f"deep_warm={pw.get('deep_warm', 0):.1f} "
-                    f"timed={pw.get('timed', 0):.1f} "
-                    f"elapsed={time.perf_counter() - t_run0:.0f}s",
-                    file=sys.stderr,
-                    flush=True,
-                )
-            except Exception as exc:  # noqa: BLE001 — a dead chunk loses
-                # its queries' timings but must not kill the bench line.
-                for n in part:
-                    if n not in timings:
-                        errors[n] = f"chunk failed: {exc}"[:300]
+        (timings, errors, prebuild, prebuild_errors,
+         phase_wall) = run_chunks(names, chunk, launch)
     finally:
         if own_input_cache:
             shutil.rmtree(own_input_cache, ignore_errors=True)
             os.environ.pop("SPARK_GRAFT_INPUT_CACHE", None)
 
     detail, compact = assemble_lines(
-        timings, errors, [], {}, prebuild, prebuild_errors, sf,
+        timings, errors, prebuild, prebuild_errors, sf,
         phase_wall=phase_wall,
     )
     total = compact["value"]

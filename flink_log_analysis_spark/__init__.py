@@ -10,7 +10,7 @@ re-expressed Spark-first:
   client-ip-access: filter -> broadcast dim join -> group count -> top-k)
   as batch + Structured Streaming dual-mode plans — see :mod:`.plans`.
 - Keyed upsert sinks and streaming top-k via ``foreachBatch`` — see
-  :mod:`.operators.upsert` and :mod:`.streaming`.
+  :mod:`.streaming.upsert` and :mod:`.streaming`.
 - LLM-data-pipeline extension operators (dedup, MinHash LSH, SimHash,
   similarity search, text analysis, multimodal columns) designed for
   100 TB scale — see :mod:`.operators`.

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import os
 import re
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -133,7 +134,7 @@ def hard_negatives(
     Exact by construction here (the exactness baseline, like
     knn_bruteforce — same round(6)-before-rank + id tie-break
     discipline, so the oracle is exact); at scale the same label
-    predicate drops into :func:`knn_ivf` / :func:`knn_ivf_persisted`'s
+    predicate drops into :func:`knn_ivf` / :func:`knn_persisted`'s
     candidate stream unchanged — filtering candidates AFTER cell
     pruning, never widening the scan.
     """
@@ -553,9 +554,9 @@ def assign_cells(
     """THE nearest-cell assignment projection (argmin by squared L2,
     ties to the lower cell index): :func:`probe_cells` rank 0,
     renamed. Single implementation shared by :func:`ivf_assign` and
-    both index-append paths — inline copies of this idiom are how a
+    :func:`index_append` — inline copies of this idiom are how a
     persisted index's cell assignment silently desyncs from the
-    in-memory composition (r11 review)."""
+    in-memory composition."""
     return probe_cells(vecs, arr_col, cmat, [0]).withColumnRenamed(
         "cell_p0", "cell"
     )
@@ -758,13 +759,13 @@ def tune_index_n_probe(
     the recall curve derives from one truth pass + one routing pass
     (:func:`tune_n_probe` / the retention theorem), and the tuned
     depth is written to ``{path}/_tuning`` where
-    :func:`knn_ivf_persisted` (``n_probe=None``) defaults to it.
+    :func:`knn_persisted` (``n_probe=None``) defaults to it.
     Returns (tuned_n_probe, hits_at_tuned, n_truth)."""
-    centroids, _, _, _ = read_ivf_meta(spark, path)
+    _, codec = open_index(spark, path)
     p, hits, n_truth = tune_n_probe(
         corpus,
         queries,
-        centroids,
+        codec.centroids,
         k=k,
         target_recall=target_recall,
         id_col=id_col,
@@ -1118,29 +1119,42 @@ def knn_ivf_quantized(
         vec_col=vec_col,
         centroids=centroids,
     )
-    dq = lambda v: _dequantized(v, F.col("mn_arr"), F.col("mx_arr"))  # noqa: E731
     c = (
         ensure_min_partitions(assigned)
         .crossJoin(F.broadcast(ranges))
         .select(
             F.col(id_col).alias("neighbor_id"),
-            dq(F.col("arr")).alias("cv"),
+            _dequantized(F.col("arr"), F.col("mn_arr"), F.col("mx_arr")).alias(
+                "cv"
+            ),
             "cell",
         )
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qraw")
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    q = (
-        probe_cells(q, "qraw", cmat, range(n_probe))
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            "query_id",
-            dq(F.col("qraw")).alias("qv"),
-            F.explode(
-                F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-            ).alias("cell"),
-        )
+    return _int8_probe_and_score(
+        c, probe_cells(q, "qv", cmat, range(n_probe)), ranges, k, n_probe
+    )
+
+
+def _int8_probe_and_score(
+    c: DataFrame, probed: DataFrame, ranges: DataFrame, k: int, n_probe: int
+) -> DataFrame:
+    """THE int8 IVF search tail: each probed query (``query_id``, raw
+    ``qv``, ``cell_p*``) passes through the scalar codec, explodes to
+    its probed cells, joins the dequantized candidates (``neighbor_id``,
+    ``cv``, ``cell``) on cell, and ranks by round(cosine, 6) with the
+    neighbor-id tie-break. One implementation shared by the in-memory
+    composition (:func:`knn_ivf_quantized`) and the persisted index
+    (:func:`knn_persisted`) — the two MUST rank identically or the
+    persisted identity contracts break."""
+    q = probed.crossJoin(F.broadcast(ranges)).select(
+        "query_id",
+        _dequantized(F.col("qv"), F.col("mn_arr"), F.col("mx_arr")).alias("qv"),
+        F.explode(
+            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
+        ).alias("cell"),
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -1160,7 +1174,7 @@ def knn_ivf_quantized(
 
 
 def _dq_codes(codes: Column, mn_arr: Column, mx_arr: Column) -> Column:
-    """Dequantize STORED codes (what :func:`knn_ivf_persisted` reads
+    """Dequantize STORED codes (what :func:`knn_persisted` reads
     back from the index) — the read half of the canonical codec.
     Bit-identical to :func:`_dequantized` over the raw vector, because
     the stored code came from the same :func:`_quant_code`."""
@@ -1543,7 +1557,7 @@ def _pq_probe_and_score(
     cells, join candidates on cell, score from the tables, round-
     before-rank. One implementation shared by the in-memory
     composition (:func:`knn_ivf_pq`) and the persisted index
-    (:func:`knn_pq_persisted`) — the two paths MUST rank identically
+    (:func:`knn_persisted`) — the two paths MUST rank identically
     or the persisted contract's oracle reuse breaks."""
     m, _, _ = _pq_shape(codebooks)
     q = queries.select(
@@ -1721,734 +1735,6 @@ def _pq_residual_probe_and_score(
     )
 
 
-# --- manifest-pointer publish (object-store-safe index lifecycle) ---
-#
-# Every persisted index roots its live data under a GENERATION
-# directory named by a one-line pointer file ``{path}/_current``
-# (create-overwrite — a single atomic PUT on object stores, where
-# directory rename is a non-atomic copy). A generation is
-# SELF-CONTAINED: the cell-partitioned codes plus the 1-row meta at
-# ``{gen}/_meta`` (an underscore name Spark's file index ignores, so
-# scans of the generation never see it) — one pointer swap therefore
-# publishes codes AND artifacts atomically together, and a reader
-# that resolves the pointer once can never mix one generation's codes
-# with another's centroids/codebooks (r11 review). Writers build the
-# complete new generation ASIDE under a pid-unique name, repoint,
-# then delete the superseded one; readers resolve the pointer first.
-# Legacy indexes (no pointer; meta beside vectors at ``{path}/meta``)
-# resolve via fallbacks, so the seam is backward-compatible.
-CURRENT_POINTER = "_current"
-
-
-def vectors_dir(spark, path: str) -> str:
-    """The index's LIVE vectors directory, resolved via the manifest
-    pointer (``{path}/_current``); legacy layouts without one resolve
-    to ``{path}/vectors``. One bounded tiny-file read."""
-    name = fsio.read_text(f"{path}/{CURRENT_POINTER}", spark)
-    return f"{path}/{(name or 'vectors').strip()}"
-
-
-def _gen_and_meta(spark, path: str) -> tuple[str, str]:
-    """(live generation dir, its meta parquet path) from ONE pointer
-    read — callers that need meta and codes together resolve once, so
-    a concurrent repoint between the two reads cannot hand them mixed
-    generations. Self-contained generations carry ``{gen}/_meta``;
-    legacy layouts fall back to ``{path}/meta``."""
-    gen = vectors_dir(spark, path)
-    meta = f"{gen}/_meta"
-    if not fsio.exists(meta, spark):
-        meta = f"{path}/meta"
-    return gen, meta
-
-
-# THE generation-name grammar: ``vectors`` (legacy gen 0) or
-# ``vectors-g<N>[p<hex-token>]``. Lifecycle deleters (publish trim,
-# vacuum) match against this EXACTLY — a merely-'vectors'-prefixed
-# sibling (an operator's ``vectors_backup``, a pre-pointer
-# ``vectors.compact-<pid>`` orphan) is NOT a generation and must never
-# be swept (r11 advisory: such names used to parse as generation 0 and
-# were deleted once the live generation advanced).
-_GEN_NAME_RE = re.compile(r"vectors(?:-g\d+(?:p[0-9a-f]{1,32})?)?")
-
-
-def _gen_num(name: str) -> int:
-    """Generation number encoded in a vectors-directory name:
-    ``vectors`` -> 0, ``vectors-g<N>[p<token>]`` -> N. The ``p`` tail
-    is an opaque uniqueness token, ignored here."""
-    base, _, gen = name.rpartition("-g")
-    if base and gen:
-        head = gen.split("p", 1)[0]
-        if head.isdigit():
-            return int(head)
-    return 0
-
-
-def _trim_generations(
-    spark, path: str, live_name: str, keep: int
-) -> list[str]:
-    """Delete generation directories STRICTLY OLDER than ``live_name``,
-    RETAINING the ``keep`` newest of them — the reader-grace window.
-    Shared by the publishers (``grace_keep``) and :func:`index_vacuum`:
-    a reader that resolved the pointer just before a repoint is still
-    scanning the superseded generation, and on a real cluster that scan
-    outlives the publish — so the publisher keeps the last ``keep``
-    superseded generations and the vacuum (whose schedule the
-    deployment controls) is the deleter of record. Only names matching
-    the exact generation grammar are candidates; same-or-newer trees
-    survive unconditionally (they may be a concurrent maintainer's
-    staging — r11 review). The legacy root ``{path}/meta`` belongs to
-    the legacy ``vectors`` generation's read surface (pre-pointer
-    layouts keep meta BESIDE the codes, and ``_gen_and_meta`` resolves
-    it there), so it is deleted exactly when that tree is — a legacy
-    reader's grace window covers its meta too (r12 advisory). Returns
-    the deleted names."""
-    live_num = _gen_num(live_name)
-    older = sorted(
-        (
-            n
-            for n in fsio.list_names(path, spark)
-            if _GEN_NAME_RE.fullmatch(n)
-            and n != live_name
-            and _gen_num(n) < live_num
-        ),
-        key=lambda n: (_gen_num(n), n),
-        reverse=True,
-    )
-    removed = []
-    for name in older[max(keep, 0):]:
-        fsio.delete(f"{path}/{name}", spark=spark)
-        removed.append(name)
-    if "vectors" in removed and fsio.exists(f"{path}/meta", spark):
-        # the legacy generation is gone; its root meta goes with it
-        fsio.delete(f"{path}/meta", spark=spark)
-    return removed
-
-
-def _next_generation(current_name: str, unique: bool = False) -> str:
-    """``vectors`` -> ``vectors-g1`` -> ``vectors-g2`` -> ... The
-    generation counter lives in the directory NAME so a new publish
-    never collides with the live tree it replaces; ``unique=True``
-    appends a ``p<random-token>`` tail so two concurrent maintainers
-    can never stage into the SAME directory (the loser's finished
-    copy becomes an unreferenced orphan for the vacuum, not a
-    corrupted publish). The token is uuid-derived, NOT a pid —
-    containerized drivers routinely share low pids across hosts, so a
-    pid tail would collide on exactly the shared object-store indexes
-    this protocol targets (r11 review)."""
-    num = _gen_num(current_name)
-    stem = current_name if num == 0 else current_name.rpartition("-g")[0]
-    if unique:
-        import uuid
-
-        return f"{stem}-g{num + 1}p{uuid.uuid4().hex[:8]}"
-    return f"{stem}-g{num + 1}"
-
-
-def _publish_generation(
-    spark, path: str, codes_df, meta_df, grace_keep: int = 1
-) -> None:
-    """Build-aside publish shared by BOTH index writers: stage codes +
-    meta into the next uuid-unique generation, repoint, then TRIM
-    superseded generations down to the ``grace_keep`` newest. EVERY
-    build stages aside — including the very first (it lands in
-    ``vectors-g1p<token>``, never in ``vectors``): two concurrent
-    builds of a fresh or legacy index therefore stage into different
-    directories and the loser's copy is an orphan for the vacuum,
-    never a delete of the winner's live tree (r11 advisory — the old
-    fresh-build path reused the shared name ``vectors`` and cleared it
-    first). A legacy pre-pointer index is upgraded by its first
-    rebuild: its ``vectors`` tree becomes the superseded generation.
-
-    ``grace_keep`` is the reader-grace knob: a reader that resolved
-    the pointer just before the repoint is still scanning the old
-    generation, and on a real cluster that scan outlives this call —
-    so the newest ``grace_keep`` superseded generations survive the
-    publish and :func:`index_vacuum` (grace_keep=0 by default there)
-    is the deleter of record, on the deployment's own schedule.
-    ``grace_keep=0`` restores the immediate delete for single-process
-    callers that create throwaway indexes.
-
-    Root-artifact lifecycle (r12 advisory, both items): a legacy
-    ``{path}/meta`` is NOT deleted here — it is part of the legacy
-    generation's read surface (a reader that resolved ``_gen_and_meta``
-    just before the repoint reads it AFTER this call returns), so it
-    follows the ``vectors`` tree's own grace lifetime and
-    :func:`_trim_generations` deletes it together with that tree
-    (shadowing is impossible: ``_gen_and_meta`` prefers ``{gen}/_meta``,
-    which every pointer generation carries). The ``_tuning`` record is
-    deleted BEFORE the pointer swap: a rebuild fits NEW centroids, and
-    deleting after would leave a crash window in which the new pointer
-    pairs with a depth tuned for the old geometry (compaction keeps
-    the record — it preserves the fit)."""
-    cur = fsio.read_text(f"{path}/{CURRENT_POINTER}", spark)
-    cur = cur.strip() if cur else "vectors"
-    name = _next_generation(cur, unique=True)
-    target = f"{path}/{name}"
-    codes_df.write.mode("overwrite").partitionBy("ingest", "cell").parquet(
-        target
-    )
-    meta_df.coalesce(1).write.mode("overwrite").parquet(f"{target}/_meta")
-    if fsio.exists(f"{path}/{TUNING_FILE}", spark):
-        # BEFORE the repoint: no pointer state may pair the new
-        # centroids with a depth tuned for the old geometry. A crash
-        # right here costs only a re-tune (knn_ivf_persisted falls
-        # back to its explicit/default n_probe when no record exists).
-        fsio.delete(f"{path}/{TUNING_FILE}", spark=spark)
-    fsio.write_text(f"{path}/{CURRENT_POINTER}", name, spark)
-    _trim_generations(spark, path, name, keep=grace_keep)
-
-
-def _assert_batch_visible(spark, path: str, target: str) -> None:
-    """Post-write liveness re-check for the batch-append APIs: the
-    append resolved the live generation ONCE before writing, so a
-    compaction that repoints (and eventually vacuums) that generation
-    mid-append would otherwise silently strand the batch's rows in a
-    superseded tree (r11 advisory). Re-reading the pointer AFTER the
-    write surfaces the race instead of losing the batch.
-
-    Recovery is deliberately NOT automatic, because the race has two
-    distinct outcomes the caller must distinguish: (a) the compaction
-    read the old generation BEFORE this write — the batch is absent
-    from the new generation and a plain re-run of the append lands it
-    there correctly; (b) the compaction read AFTER this write — the
-    batch's rows were folded into the new generation's ``base``, and
-    a blind re-run would DUPLICATE them (the keyed ``ingest=``
-    overwrite cannot reclaim rows already folded out of the batch's
-    partition). Verify presence in the live generation before
-    retrying. Both outcomes mean a deployment violated compaction's
-    stated single-maintainer/quiescent-index contract — this guard is
-    defense-in-depth that turns that violation from silent data loss
-    or duplication into an explicit error."""
-    live = vectors_dir(spark, path)
-    if live != target:
-        raise RuntimeError(
-            f"append raced a compaction on {path}: batch written to "
-            f"{os.path.basename(target)} but the live generation is now "
-            f"{os.path.basename(live)}. If the compaction folded this "
-            "batch's rows (it read the tree after this write) they are "
-            "already in the new generation's base — verify presence "
-            "before re-running the append, or a retry will duplicate "
-            "them. Compaction requires a quiescent index; this error "
-            "means that contract was violated."
-        )
-
-
-def write_pq_index(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    grace_keep: int = 1,
-    residual: bool = False,
-) -> None:
-    """Persist the IVF-PQ index: the live vectors directory (published
-    via the ``_current`` manifest pointer) holds (id, pq_code) parquet
-    in the TWO-level ``ingest=/cell=`` layout of
-    :func:`write_ivf_index` — the base build lands in ``ingest=base``,
-    :func:`pq_index_append` gives each ingested batch its own
-    ``ingest=`` partition (idempotent replay), and a search filtering
-    on probed cells reads only those cells' files with each row m
-    small ints (the 32x payload story). The generation's ``_meta`` is
-    ONE row carrying centroids + codebooks + the codec flag (a
-    searcher's bounded 1-row read). Same build-once/search-many
-    economics as :func:`write_ivf_index`: the assignment scan and the
-    partitioned write are paid here, never per query; publish is the
-    build-aside pointer swap of :func:`_publish_generation`.
-
-    ``residual=True`` writes the faiss codec proper: codes are taken
-    over CELL RESIDUALS (:func:`pq_encode_residual`) and the flag is
-    stored in the meta, so search (:func:`knn_pq_persisted`), batch
-    append, and stream ingest all dispatch to the residual scoring /
-    encode automatically — the codec is an index property, never a
-    caller argument that could drift from what's on disk."""
-    assigned, _, cmat = ivf_assign(
-        corpus, centroids=centroids, id_col=id_col, vec_col=vec_col
-    )
-    if residual:
-        codes = pq_encode_residual(
-            assigned, cmat, codebooks, id_col=id_col
-        ).withColumn("ingest", F.lit("base"))
-    else:
-        codes = pq_encode(
-            assigned, codebooks, vec_col="arr", id_col=id_col,
-            keep_cols=("cell",),
-        ).withColumn("ingest", F.lit("base"))
-    meta = corpus.sparkSession.createDataFrame(
-        [(centroids, codebooks, residual)],
-        "centroids array<array<double>>, "
-        "codebooks array<array<array<double>>>, residual boolean",
-    )
-    _publish_generation(
-        corpus.sparkSession, path, codes, meta, grace_keep=grace_keep
-    )
-
-
-def read_pq_codec(spark, path: str, meta_path: str | None = None):
-    """(centroids, codebooks, residual) — the FULL codec spec from the
-    1-row meta: doubles round-trip parquet exactly, and ``residual``
-    says what the codes MEAN (raw vectors or cell residuals — see
-    :func:`residual_vec`). The flag travels inside the generation's
-    meta so a pointer swap can never pair one codec's codes with the
-    other's scoring, and every consumer (search, append, stream
-    ingest) dispatches on it — a reader can't silently ADC-score
-    residual codes against raw-vector tables. Indexes written before
-    the flag existed read as raw (``residual=False``)."""
-    if meta_path is None:
-        _, meta_path = _gen_and_meta(spark, path)
-    r = spark.read.parquet(meta_path).collect()[0]
-    cents = [[float(v) for v in c] for c in r["centroids"]]
-    books = [
-        [[float(v) for v in cw] for cw in book] for book in r["codebooks"]
-    ]
-    d = r.asDict()
-    return cents, books, bool(d.get("residual", False))
-
-
-def read_pq_meta(spark, path: str, meta_path: str | None = None):
-    """(centroids, codebooks) — the fit artifacts alone; see
-    :func:`read_pq_codec` for the codec-complete read."""
-    cents, books, _ = read_pq_codec(spark, path, meta_path=meta_path)
-    return cents, books
-
-
-def knn_pq_persisted(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list]:
-    """Search the persisted IVF-PQ index: meta read, per-query probe,
-    then a vectors scan FILTERED to the probed cells' union (partition
-    pruning — files outside those cells never enter the scan,
-    plan-asserted in tests) feeding the shared probe-and-score path —
-    the RAW or RESIDUAL one, dispatched on the codec flag the index's
-    own meta carries (:func:`read_pq_codec`; the caller never states
-    the codec, so it can't state it wrongly). Returns (results,
-    scanned cells). Generation and meta resolve from ONE pointer
-    read — a concurrent repoint cannot hand the search a mixed
-    codes/artifacts pair."""
-    gen, meta_path = _gen_and_meta(spark, path)
-    cents, books, residual = read_pq_codec(spark, path, meta_path=meta_path)
-    cmat = spark.createDataFrame([(cents,)], "cmat array<array<double>>")
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    probed = probe_cells(q, "qv", cmat, list(range(n_probe)))
-    cells = sorted(
-        {
-            r[f"cell_p{p}"]
-            for r in probed.collect()
-            for p in range(n_probe)
-        }
-    )
-    codes = (
-        spark.read.parquet(gen)
-        .filter(F.col("cell").isin([int(c) for c in cells]))
-        .select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
-    )
-    score = _pq_residual_probe_and_score if residual else _pq_probe_and_score
-    res = score(codes, queries, cmat, books, k, n_probe, id_col, vec_col)
-    return res, cells
-
-
-def knn_pq_persisted_rerank(
-    spark,
-    path: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int = 2,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, list]:
-    """The PRODUCTION IVF-PQ search shape over the persisted index:
-    ADC shortlist from the pruned cell scan (:func:`knn_pq_persisted`
-    at k=shortlist — codes only, the 32x-compressed payload), then an
-    exact re-rank of the shortlist against the raw vectors (the
-    corpus a deployment keeps in primary storage) to the final top-k.
-    Re-ranking is what restores the retention theorem for PQ (see
-    :func:`tune_n_probe`'s scope note): with a candidate-covering
-    shortlist the result EQUALS the full-precision IVF search over
-    the probed cells — the contract row holds this composition to
-    knn_ivf's value-exact oracle verbatim. Scale shape: the shortlist
-    is k' rows per query (never the cells' full contents in the
-    re-rank join), the raw-vector join touches only shortlist rows,
-    and the query side rides one broadcast. Returns (results,
-    scanned cells) like the ADC-only searcher.
-
-    CONTRACT: ``corpus`` must cover every vector id in the persisted
-    index — the index's appends included (the append APIs make a
-    stale corpus argument easy). The re-rank join is a LEFT join with
-    a raise_error guard on the vector side, so a shortlisted neighbor
-    the corpus cannot supply fails the query loudly instead of being
-    silently dropped from the final top-k (r12 advisory)."""
-    short, cells = knn_pq_persisted(
-        spark,
-        path,
-        queries,
-        k=shortlist,
-        n_probe=n_probe,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        as_double(F.col(vec_col)).alias("cv"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    # coverage guard (see CONTRACT above): a shortlist id the corpus
-    # cannot supply raises instead of silently shrinking the top-k
-    covered = F.when(
-        F.col("cv").isNull(),
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "knn_pq_persisted_rerank: shortlisted neighbor_id "
-                ),
-                F.col("neighbor_id").cast("string"),
-                F.lit(
-                    " is absent from the supplied corpus — the corpus "
-                    "must cover every vector in the persisted index "
-                    "(appended batches included)"
-                ),
-            )
-        ),
-    ).otherwise(F.col("cv"))
-    res = (
-        short.select("query_id", "neighbor_id")
-        .join(c, "neighbor_id", "left")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), covered), 6).alias("cos"),
-        )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
-    return res, cells
-
-
-def pq_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ingest_key: str | None = None,
-) -> None:
-    """PQ-index INGESTION without refit — :func:`ivf_index_append`'s
-    exact twin for the :func:`write_pq_index` layout: assign the
-    incoming batch to the index's EXISTING centroids, encode with its
-    EXISTING codebooks (both frozen fit-time artifacts; a refit is an
-    offline rebuild), and land the rows in their ``ingest=/cell=``
-    partitions. ``ingest_key=None`` appends into the shared
-    ``ingest=append`` partition (batch semantics); a streaming caller
-    passes a deterministic per-batch key and the write becomes a
-    dynamic-partition OVERWRITE of that batch's own partition —
-    idempotent under micro-batch replay, the exactly-once foreachBatch
-    sink pattern. Encodes with the index's OWN codec (raw or residual
-    — the meta flag, :func:`read_pq_codec`), so an appended batch can
-    never carry codes the index's searcher would mis-score. Scale
-    shape: one projection over the batch + a write touching only the
-    batch's own ingest partition."""
-    from ..session import scoped_conf
-
-    target, meta_path = _gen_and_meta(spark, path)
-    cents, books, residual = read_pq_codec(spark, path, meta_path=meta_path)
-    cmat = spark.createDataFrame([(cents,)], "cmat array<array<double>>")
-    vecs = new_vectors.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("arr")
-    )
-    assigned = assign_cells(vecs, cmat)
-    if residual:
-        coded = pq_encode_residual(assigned, cmat, books, id_col=id_col)
-    else:
-        coded = pq_encode(
-            assigned, books, vec_col="arr", id_col=id_col,
-            keep_cols=("cell",),
-        )
-    coded = coded.withColumn("ingest", F.lit(ingest_key or "append"))
-    if ingest_key is None:
-        coded.write.mode("append").partitionBy("ingest", "cell").parquet(
-            target
-        )
-    else:
-        with scoped_conf(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            coded.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("ingest", "cell").parquet(target)
-    _assert_batch_visible(spark, path, target)
-
-
-def _coded(assigned: DataFrame, ranges: DataFrame, id_col: str) -> DataFrame:
-    """THE write-side code projection — (id, smallint codes, cell) from
-    an assigned frame + broadcast codebook. Single implementation
-    shared by :func:`write_ivf_index` and :func:`ivf_index_append`: the
-    base build and every appended batch MUST encode identically or the
-    byte-identity contracts break only for appended corpora (the
-    two-site-drift failure mode the canonical-codec convention
-    exists to prevent)."""
-    return assigned.crossJoin(F.broadcast(ranges)).select(
-        F.col(id_col),
-        F.transform(
-            F.col("arr"),
-            lambda x, i: _quant_code(
-                x,
-                F.element_at(F.col("mn_arr"), i + 1),
-                F.element_at(F.col("mx_arr"), i + 1),
-            ).cast("smallint"),
-        ).alias("code"),
-        "cell",
-    )
-
-
-def write_ivf_index(
-    emb: DataFrame,
-    path: str,
-    n_cells: int = 8,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fit_sample_rows: int = 100_000,
-    centroids: list[list[float]] | None = None,
-    grace_keep: int = 1,
-) -> None:
-    """Persist the IVF-quantized index as a CELL-PARTITIONED layout —
-    the durable form of :func:`knn_ivf_quantized`'s in-memory build,
-    turning the "cell partitioning prunes the scan to n_probe cells'
-    files" claim into an on-disk fact:
-
-    - ``{path}/vectors``: (id, code smallint[]) parquet, PARTITIONED BY
-      cell — a search that filters on probed cells reads only those
-      cells' files (PartitionFilters; plan-asserted in
-      ``tests/test_ivf_persist.py``), and the int codes are the 4x
-      storage story.
-    - the generation's ``_meta``: ONE row — centroid matrix + scalar
-      codebook (mn/mx per dimension). Everything a searcher needs
-      besides the codes; reading it is a bounded 1-row collect, and it
-      ships INSIDE the generation so the pointer swap publishes codes
-      and artifacts together (:func:`_publish_generation`).
-
-    Build once, search many: at 100 TB the build is one assignment
-    scan + one partitioned write (the shuffle is paid here, not per
-    query), and reruns only ever touch ``n_probe`` partitions.
-
-    Layout is TWO-level: ``ingest=.../cell=...``. The base build lands
-    in ``ingest=base``; :func:`ivf_index_append` gives each batch its
-    own ``ingest`` partition, which is what makes a replayed streaming
-    batch idempotent (deterministic dynamic-partition overwrite — the
-    standard exactly-once foreachBatch sink pattern). Searches filter
-    on ``cell`` only, and partition pruning on the second level works
-    identically.
-    """
-    # lineage cut: ranges feeds BOTH the codes write and the meta
-    # write below — without it each write re-runs the full per-dim
-    # min/max corpus scan (the same hazard knn_quantized documents)
-    ranges = quantization_ranges(emb, vec_col).localCheckpoint(eager=True)
-    assigned, centroids, cmat = ivf_assign(
-        emb,
-        n_cells=n_cells,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-        fit_sample_rows=fit_sample_rows,
-        centroids=centroids,
-    )
-    codes = _coded(assigned, ranges, id_col).withColumn(
-        "ingest", F.lit("base")
-    )
-    meta = cmat.crossJoin(ranges).select(
-        F.col("cmat").alias("centroids"),
-        "mn_arr",
-        "mx_arr",
-        F.lit(len(centroids)).alias("n_cells"),
-    )
-    _publish_generation(
-        emb.sparkSession, path, codes, meta, grace_keep=grace_keep
-    )
-
-
-def read_ivf_meta(spark, path: str, meta_path: str | None = None):
-    """Load the index metadata: (centroids, cmat 1-row DF, ranges
-    1-row DF, n_cells). One bounded 1-row collect; ``meta_path`` lets
-    a caller that already resolved the generation pass its location."""
-    if meta_path is None:
-        _, meta_path = _gen_and_meta(spark, path)
-    row = spark.read.parquet(meta_path).collect()[0]
-    centroids = [list(map(float, c)) for c in row["centroids"]]
-    cmat = spark.createDataFrame(
-        [(centroids,)], "cmat array<array<double>>"
-    )
-    ranges = spark.createDataFrame(
-        [(list(row["mn_arr"]), list(row["mx_arr"]))],
-        "mn_arr array<double>, mx_arr array<double>",
-    )
-    return centroids, cmat, ranges, int(row["n_cells"])
-
-
-def ivf_index_append(
-    spark,
-    path: str,
-    new_vectors: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ingest_key: str | None = None,
-) -> None:
-    """Index INGESTION without refit: assign an incoming batch to the
-    index's EXISTING centroids, code it with the EXISTING codebook,
-    and land the rows in their cell partitions — how a production
-    IVF absorbs a streaming corpus (centroids/codebook are fit-time
-    artifacts; refits are an offline rebuild, not an ingest step).
-
-    ``ingest_key=None`` appends into the shared ``ingest=append``
-    partition (batch semantics). A streaming caller passes a
-    DETERMINISTIC per-batch key instead: the batch then lands in its
-    own ``ingest=<key>`` partition via dynamic-partition OVERWRITE, so
-    replaying the same batch (crash after commit, before the caller's
-    bookkeeping) REPLACES its own rows rather than duplicating them —
-    idempotent, the exactly-once foreachBatch sink pattern.
-
-    Out-of-range values (an incoming dim exceeding the fit corpus's
-    [mn, mx]) keep the unclamped affine code, so a reader dequantizes
-    them exactly like the in-memory composition does; a deployment
-    preferring saturation would clamp to [0, QUANT_LEVELS] here AND in
-    the search-side codec (the two must stay one expression).
-
-    Scale shape: one projection over the batch + a write that touches
-    only the batch's own ingest partition — existing partitions are
-    never rewritten.
-    """
-    from ..session import scoped_conf
-
-    target, meta_path = _gen_and_meta(spark, path)
-    _, cmat, ranges, _ = read_ivf_meta(spark, path, meta_path=meta_path)
-    vecs = new_vectors.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("arr")
-    )
-    coded = _coded(assign_cells(vecs, cmat), ranges, id_col).withColumn(
-        "ingest", F.lit(ingest_key or "append")
-    )
-    if ingest_key is None:
-        coded.write.mode("append").partitionBy("ingest", "cell").parquet(
-            target
-        )
-    else:
-        with scoped_conf(
-            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-        ):
-            # writer-level option too: it takes precedence over session
-            # conf and survives callers inside other scoped confs
-            coded.write.mode("overwrite").option(
-                "partitionOverwriteMode", "dynamic"
-            ).partitionBy("ingest", "cell").parquet(target)
-    _assert_batch_visible(spark, path, target)
-
-
-def knn_ivf_persisted(
-    spark,
-    path: str,
-    queries: DataFrame,
-    k: int = 5,
-    n_probe: int | None = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Search a :func:`write_ivf_index` layout with a PRUNED scan.
-
-    Flow: read the 1-row meta; probe each query's ``n_probe`` nearest
-    cells (full-precision query against the tiny centroid matrix);
-    collect the DISTINCT probed cells (bounded by n_cells — this is
-    the one driver-side step, and it is what turns the cell set into
-    scan-time literals); read ``vectors`` filtered to those cells —
-    partition pruning drops every other cell's files from the scan —
-    then dequantize codes and score exactly like
-    :func:`knn_ivf_quantized` (same codec, same round(6), same
-    tie-break), so results are identical to the in-memory composition
-    over the same fit.
-
-    ``n_probe=None`` defaults to the depth recorded by
-    :func:`tune_index_n_probe` (the recall-targeted ops knob, read
-    from the index's own ``_tuning`` record), falling back to 2 on a
-    never-tuned index.
-
-    Returns ``(result_df, scanned_cells)`` — callers assert
-    ``len(scanned_cells) < n_cells`` / plan PartitionFilters.
-    """
-    from ..session import ensure_min_partitions
-
-    if n_probe is None:
-        n_probe = index_tuned_n_probe(spark, path, k=k) or 2
-    gen, meta_path = _gen_and_meta(spark, path)
-    _, cmat, ranges, _ = read_ivf_meta(spark, path, meta_path=meta_path)
-    dq = lambda v: _dequantized(v, F.col("mn_arr"), F.col("mx_arr"))  # noqa: E731
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        as_double(F.col(vec_col)).alias("qraw"),
-    )
-    q = (
-        probe_cells(q, "qraw", cmat, range(n_probe))
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            "query_id",
-            dq(F.col("qraw")).alias("qv"),
-            F.explode(
-                F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-            ).alias("cell"),
-        )
-    )
-    scanned_cells = sorted(
-        int(r["cell"]) for r in q.select("cell").distinct().collect()
-    )
-    vecs = (
-        spark.read.parquet(gen)
-        .filter(F.col("cell").isin(scanned_cells))
-    )
-    c = (
-        ensure_min_partitions(vecs)
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _dq_codes(
-                F.col("code"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("cv"),
-            "cell",
-        )
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
-    result = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
-    return result, scanned_cells
-
-
 # Johnson-Lindenstrauss random-projection contract: project onto
 # JL_PLANES deterministic md5 hyperplanes (components uniform[-1,1],
 # variance 1/3 — hence the 3/p normalizer) and check that pairwise
@@ -2511,16 +1797,615 @@ def jl_projection_contract(
     )
 
 
-def _index_n_cells(spark, path: str, meta_path: str | None = None) -> int:
-    """The index's cell count from its 1-row meta — either layout:
-    the scalar-IVF meta carries ``n_cells`` explicitly, the PQ meta
-    implies it as the centroid count."""
-    if meta_path is None:
-        _, meta_path = _gen_and_meta(spark, path)
-    row = spark.read.parquet(meta_path).collect()[0]
-    if "n_cells" in row.__fields__:
-        return int(row["n_cells"])
-    return len(row["centroids"])
+# --- the persisted index store (manifest-pointer publish) ---------
+#
+# Every persisted index roots its live data under a GENERATION
+# directory named by a one-line pointer file ``{path}/_current``
+# (create-overwrite — a single atomic PUT on object stores, where
+# directory rename is a non-atomic copy). A generation is
+# SELF-CONTAINED: the cell-partitioned codes plus the 1-row meta at
+# ``{gen}/_meta`` (an underscore name Spark's file index ignores, so
+# scans of the generation never see it) — one pointer swap therefore
+# publishes codes AND codec atomically together, and a reader that
+# resolves the pointer once can never mix one generation's codes with
+# another's centroids/codebooks. Writers build the complete new
+# generation ASIDE under a uuid-unique name, repoint, then trim
+# superseded generations; readers resolve the pointer first. A
+# directory without a pointer is not an index.
+#
+# The store has ONE function per operation — build (the two
+# ``write_*_index`` entry points over one encode and one publish),
+# codec read (:func:`open_index`), append (:func:`index_append`),
+# pruned search (:func:`knn_persisted`), compaction and vacuum — each
+# dispatching on the codec the generation's meta records.
+CURRENT_POINTER = "_current"
+
+
+def vectors_dir(spark, path: str) -> str:
+    """The index's LIVE generation directory, resolved via the
+    manifest pointer (``{path}/_current``). One bounded tiny-file
+    read; a directory without a pointer is rejected, naming the
+    path."""
+    name = fsio.read_text(f"{path}/{CURRENT_POINTER}", spark)
+    if not name or not name.strip():
+        raise FileNotFoundError(
+            f"{path} is not a persisted index: it has no "
+            f"{CURRENT_POINTER} pointer"
+        )
+    return f"{path}/{name.strip()}"
+
+
+@dataclass(frozen=True)
+class IndexCodec:
+    """What a generation's codes MEAN — the coarse quantizer's
+    ``centroids`` plus exactly one payload codec, as the generation's
+    1-row ``_meta`` records it:
+
+    - int8 scalar: ``ranges`` = per-dimension (mn[], mx[]); codes are
+      ``code smallint[]``; meta columns ``mn_arr``/``mx_arr``/``n_cells``.
+    - PQ: ``codebooks`` (m x n_codewords x d_sub); codes are
+      ``pq_code int[]`` over the raw vector, or over its cell residual
+      (:func:`residual_vec`) when ``residual``; meta columns
+      ``codebooks``/``residual``.
+
+    The codec is an index property, never a caller argument: search,
+    append, stream ingest and compaction all read it from the live
+    generation, so an appended batch can never carry codes the
+    searcher would mis-score, and a pointer swap can never pair one
+    codec's codes with the other's scoring."""
+
+    centroids: list
+    ranges: tuple | None = None
+    codebooks: list | None = None
+    residual: bool = False
+
+    @property
+    def n_cells(self) -> int:
+        return len(self.centroids)
+
+    def cmat(self, spark) -> DataFrame:
+        return spark.createDataFrame(
+            [(self.centroids,)], "cmat array<array<double>>"
+        )
+
+    def ranges_frame(self, spark) -> DataFrame:
+        return spark.createDataFrame(
+            [self.ranges], "mn_arr array<double>, mx_arr array<double>"
+        )
+
+    def meta_frame(self, spark) -> DataFrame:
+        """The 1-row ``_meta`` in this codec's on-disk layout."""
+        if self.codebooks is None:
+            return spark.createDataFrame(
+                [(self.centroids, *self.ranges, self.n_cells)],
+                "centroids array<array<double>>, mn_arr array<double>, "
+                "mx_arr array<double>, n_cells int",
+            )
+        return spark.createDataFrame(
+            [(self.centroids, self.codebooks, self.residual)],
+            "centroids array<array<double>>, "
+            "codebooks array<array<array<double>>>, residual boolean",
+        )
+
+
+def open_index(spark, path: str) -> tuple[str, IndexCodec]:
+    """(live generation dir, its codec) from ONE pointer read — THE
+    codec read every store operation goes through. Resolving both
+    together means a concurrent repoint cannot hand a caller one
+    generation's codes with another's codec. The codec follows from
+    the columns the meta carries (``codebooks`` = PQ, else int8);
+    doubles round-trip parquet exactly."""
+    gen = vectors_dir(spark, path)
+    row = spark.read.parquet(f"{gen}/_meta").collect()[0]
+    cents = [[float(v) for v in c] for c in row["centroids"]]
+    if "codebooks" in row.__fields__:
+        books = [
+            [[float(v) for v in cw] for cw in book]
+            for book in row["codebooks"]
+        ]
+        return gen, IndexCodec(
+            cents, codebooks=books, residual=bool(row["residual"])
+        )
+    return gen, IndexCodec(
+        cents, ranges=(list(row["mn_arr"]), list(row["mx_arr"]))
+    )
+
+
+# THE generation-name grammar: ``vectors-g<N>[p<hex-token>]``.
+# Lifecycle deleters (publish trim, vacuum) match against this EXACTLY
+# — a merely-'vectors'-prefixed sibling (an operator's
+# ``vectors_backup``, a ``vectors.compact-<pid>`` orphan) is NOT a
+# generation and must never be swept.
+_GEN_NAME_RE = re.compile(r"vectors-g(\d+)(?:p[0-9a-f]{1,32})?")
+
+
+def _gen_num(name: str) -> int:
+    """Generation number encoded in a generation directory name
+    (``vectors-g<N>[p<token>]`` -> N; the ``p`` tail is an opaque
+    uniqueness token)."""
+    return int(_GEN_NAME_RE.fullmatch(name).group(1))
+
+
+def _trim_generations(
+    spark, path: str, live_name: str, keep: int
+) -> list[str]:
+    """Delete generation directories STRICTLY OLDER than ``live_name``,
+    RETAINING the ``keep`` newest of them — the reader-grace window.
+    Shared by the publishers (``grace_keep``) and :func:`index_vacuum`:
+    a reader that resolved the pointer just before a repoint is still
+    scanning the superseded generation, and on a real cluster that scan
+    outlives the publish — so the publisher keeps the last ``keep``
+    superseded generations and the vacuum (whose schedule the
+    deployment controls) is the deleter of record. Only names matching
+    the exact generation grammar are candidates; same-or-newer trees
+    survive unconditionally (they may be a concurrent maintainer's
+    staging). Returns the deleted names."""
+    live_num = _gen_num(live_name)
+    older = sorted(
+        (
+            n
+            for n in fsio.list_names(path, spark)
+            if _GEN_NAME_RE.fullmatch(n)
+            and n != live_name
+            and _gen_num(n) < live_num
+        ),
+        key=lambda n: (_gen_num(n), n),
+        reverse=True,
+    )
+    removed = []
+    for name in older[max(keep, 0):]:
+        fsio.delete(f"{path}/{name}", spark=spark)
+        removed.append(name)
+    return removed
+
+
+def _next_generation(current_name: str | None) -> str:
+    """The staging name one generation past ``current_name`` (None: a
+    fresh index -> generation 1). The counter lives in the directory
+    NAME so a new publish never collides with the live tree it
+    replaces, and the ``p<random-token>`` tail means two concurrent
+    maintainers can never stage into the SAME directory (the loser's
+    finished copy becomes an unreferenced orphan for the vacuum, not a
+    corrupted publish). The token is uuid-derived, NOT a pid —
+    containerized drivers routinely share low pids across hosts, so a
+    pid tail would collide on exactly the shared object-store indexes
+    this protocol targets."""
+    import uuid
+
+    num = _gen_num(current_name) if current_name else 0
+    return f"vectors-g{num + 1}p{uuid.uuid4().hex[:8]}"
+
+
+def _publish_generation(
+    spark, path: str, codes_df, meta_df, grace_keep: int = 1
+) -> None:
+    """Build-aside publish shared by BOTH index builders: stage codes +
+    meta into the next uuid-unique generation, repoint, then TRIM
+    superseded generations down to the ``grace_keep`` newest. EVERY
+    build stages aside — including the very first (it lands in
+    ``vectors-g1p<token>``): two concurrent builds of a fresh index
+    therefore stage into different directories and the loser's copy is
+    an orphan for the vacuum, never a delete of the winner's live
+    tree.
+
+    ``grace_keep`` is the reader-grace knob: a reader that resolved
+    the pointer just before the repoint is still scanning the old
+    generation, and on a real cluster that scan outlives this call —
+    so the newest ``grace_keep`` superseded generations survive the
+    publish and :func:`index_vacuum` (grace_keep=0 by default there)
+    is the deleter of record, on the deployment's own schedule.
+    ``grace_keep=0`` restores the immediate delete for single-process
+    callers that create throwaway indexes.
+
+    The ``_tuning`` record is deleted BEFORE the pointer swap: a
+    rebuild fits NEW centroids, and deleting after would leave a crash
+    window in which the new pointer pairs with a depth tuned for the
+    old geometry (compaction keeps the record — it preserves the
+    fit)."""
+    cur = fsio.read_text(f"{path}/{CURRENT_POINTER}", spark)
+    name = _next_generation(cur.strip() if cur else None)
+    target = f"{path}/{name}"
+    codes_df.write.mode("overwrite").partitionBy("ingest", "cell").parquet(
+        target
+    )
+    meta_df.coalesce(1).write.mode("overwrite").parquet(f"{target}/_meta")
+    if fsio.exists(f"{path}/{TUNING_FILE}", spark):
+        # BEFORE the repoint: no pointer state may pair the new
+        # centroids with a depth tuned for the old geometry. A crash
+        # right here costs only a re-tune (knn_persisted falls back to
+        # its explicit/default n_probe when no record exists).
+        fsio.delete(f"{path}/{TUNING_FILE}", spark=spark)
+    fsio.write_text(f"{path}/{CURRENT_POINTER}", name, spark)
+    _trim_generations(spark, path, name, keep=grace_keep)
+
+
+def _assert_batch_visible(spark, path: str, target: str) -> None:
+    """Post-write liveness re-check for the batch-append APIs: the
+    append resolved the live generation ONCE before writing, so a
+    compaction that repoints (and eventually vacuums) that generation
+    mid-append would otherwise silently strand the batch's rows in a
+    superseded tree (r11 advisory). Re-reading the pointer AFTER the
+    write surfaces the race instead of losing the batch.
+
+    Recovery is deliberately NOT automatic, because the race has two
+    distinct outcomes the caller must distinguish: (a) the compaction
+    read the old generation BEFORE this write — the batch is absent
+    from the new generation and a plain re-run of the append lands it
+    there correctly; (b) the compaction read AFTER this write — the
+    batch's rows were folded into the new generation's ``base``, and
+    a blind re-run would DUPLICATE them (the keyed ``ingest=``
+    overwrite cannot reclaim rows already folded out of the batch's
+    partition). Verify presence in the live generation before
+    retrying. Both outcomes mean a deployment violated compaction's
+    stated single-maintainer/quiescent-index contract — this guard is
+    defense-in-depth that turns that violation from silent data loss
+    or duplication into an explicit error."""
+    live = vectors_dir(spark, path)
+    if live != target:
+        raise RuntimeError(
+            f"append raced a compaction on {path}: batch written to "
+            f"{os.path.basename(target)} but the live generation is now "
+            f"{os.path.basename(live)}. If the compaction folded this "
+            "batch's rows (it read the tree after this write) they are "
+            "already in the new generation's base — verify presence "
+            "before re-running the append, or a retry will duplicate "
+            "them. Compaction requires a quiescent index; this error "
+            "means that contract was violated."
+        )
+
+
+def _encode(
+    assigned: DataFrame, codec: IndexCodec, cmat: DataFrame, id_col: str
+) -> DataFrame:
+    """THE write-side encode: (id, codes, cell) in the index's own
+    codec from a frame carrying ``arr`` and its ``cell`` (from
+    :func:`assign_cells` / :func:`ivf_assign`; ``cmat`` is the
+    matching centroid row). Single implementation shared by the base
+    build and every appended batch (:func:`index_append`): the two
+    MUST encode identically or the byte-identity contracts break only
+    for appended corpora (the two-site-drift failure mode the
+    canonical-codec convention exists to prevent)."""
+    if codec.codebooks is not None:
+        if codec.residual:
+            return pq_encode_residual(
+                assigned, cmat, codec.codebooks, id_col=id_col
+            )
+        return pq_encode(
+            assigned, codec.codebooks, vec_col="arr", id_col=id_col,
+            keep_cols=("cell",),
+        )
+    ranges = codec.ranges_frame(assigned.sparkSession)
+    return assigned.crossJoin(F.broadcast(ranges)).select(
+        F.col(id_col),
+        F.transform(
+            F.col("arr"),
+            lambda x, i: _quant_code(
+                x,
+                F.element_at(F.col("mn_arr"), i + 1),
+                F.element_at(F.col("mx_arr"), i + 1),
+            ).cast("smallint"),
+        ).alias("code"),
+        "cell",
+    )
+
+
+def _build_index(
+    assigned: DataFrame,
+    cmat: DataFrame,
+    path: str,
+    codec: IndexCodec,
+    id_col: str,
+    grace_keep: int,
+) -> None:
+    """Encode the assigned corpus into ``ingest=base`` and publish it
+    with the codec's meta — the one build path under both entry
+    points."""
+    spark = assigned.sparkSession
+    codes = _encode(assigned, codec, cmat, id_col).withColumn(
+        "ingest", F.lit("base")
+    )
+    _publish_generation(
+        spark, path, codes, codec.meta_frame(spark), grace_keep=grace_keep
+    )
+
+
+def write_ivf_index(
+    emb: DataFrame,
+    path: str,
+    n_cells: int = 8,
+    seed: int = 42,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    fit_sample_rows: int = 100_000,
+    centroids: list[list[float]] | None = None,
+    grace_keep: int = 1,
+) -> None:
+    """Persist the int8 IVF index — the durable form of
+    :func:`knn_ivf_quantized`'s in-memory build, turning the "cell
+    partitioning prunes the scan to n_probe cells' files" claim into
+    an on-disk fact. Fits its own centroids (unless ``centroids`` is
+    given) and the scalar codebook (per-dimension mn/mx) from ``emb``.
+
+    - the live generation: (id, code smallint[]) parquet in the
+      TWO-level ``ingest=/cell=`` layout — the base build lands in
+      ``ingest=base``, :func:`index_append` gives each batch its own
+      ``ingest`` partition (which is what makes a replayed streaming
+      batch idempotent), and a search filtering on probed cells reads
+      only those cells' files (PartitionFilters; plan-asserted in
+      ``tests/test_ivf_persist.py``); the int codes are the 4x storage
+      story.
+    - the generation's ``_meta``: ONE row — centroid matrix + scalar
+      codebook (:class:`IndexCodec`), a searcher's bounded 1-row read.
+
+    Build once, search many: at 100 TB the build is one assignment
+    scan + one partitioned write (the shuffle is paid here, not per
+    query), and reruns only ever touch ``n_probe`` partitions."""
+    r = quantization_ranges(emb, vec_col).first()
+    assigned, centroids, cmat = ivf_assign(
+        emb,
+        n_cells=n_cells,
+        seed=seed,
+        id_col=id_col,
+        vec_col=vec_col,
+        fit_sample_rows=fit_sample_rows,
+        centroids=centroids,
+    )
+    codec = IndexCodec(centroids, ranges=(list(r["mn_arr"]), list(r["mx_arr"])))
+    _build_index(assigned, cmat, path, codec, id_col, grace_keep)
+
+
+def write_pq_index(
+    corpus: DataFrame,
+    path: str,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    grace_keep: int = 1,
+    residual: bool = False,
+) -> None:
+    """Persist the IVF-PQ index from FITTED centroids and codebooks:
+    (id, pq_code) parquet in the same ``ingest=/cell=`` layout as
+    :func:`write_ivf_index` (each row m small ints — the 32x payload
+    story), with ONE meta row carrying centroids + codebooks + the
+    ``residual`` flag. ``residual=True`` writes the faiss codec
+    proper: codes over CELL RESIDUALS (:func:`pq_encode_residual`);
+    search, append and stream ingest read the flag from the meta."""
+    assigned, _, cmat = ivf_assign(
+        corpus, centroids=centroids, id_col=id_col, vec_col=vec_col
+    )
+    codec = IndexCodec(centroids, codebooks=codebooks, residual=residual)
+    _build_index(assigned, cmat, path, codec, id_col, grace_keep)
+
+
+def index_append(
+    spark,
+    path: str,
+    new_vectors: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    ingest_key: str | None = None,
+) -> None:
+    """Index INGESTION without refit: assign an incoming batch to the
+    index's EXISTING centroids, encode it with the index's OWN codec
+    (:func:`open_index` — int8 ranges or PQ codebooks, raw or
+    residual; all frozen fit-time artifacts, a refit is an offline
+    rebuild), and land the rows in their cell partitions — how a
+    production IVF absorbs a streaming corpus.
+
+    ``ingest_key=None`` appends into the shared ``ingest=append``
+    partition (batch semantics). A streaming caller passes a
+    DETERMINISTIC per-batch key instead: the batch then lands in its
+    own ``ingest=<key>`` partition via dynamic-partition OVERWRITE, so
+    replaying the same batch (crash after commit, before the caller's
+    bookkeeping) REPLACES its own rows rather than duplicating them —
+    idempotent, the exactly-once foreachBatch sink pattern.
+
+    int8 out-of-range values (an incoming dim exceeding the fit
+    corpus's [mn, mx]) keep the unclamped affine code, so a reader
+    dequantizes them exactly like the in-memory composition does; a
+    deployment preferring saturation would clamp to [0, QUANT_LEVELS]
+    here AND in the search-side codec (the two must stay one
+    expression).
+
+    Scale shape: one projection over the batch + a write that touches
+    only the batch's own ingest partition — existing partitions are
+    never rewritten."""
+    from ..session import scoped_conf
+
+    target, codec = open_index(spark, path)
+    cmat = codec.cmat(spark)
+    vecs = new_vectors.select(
+        F.col(id_col), as_double(F.col(vec_col)).alias("arr")
+    )
+    coded = _encode(assign_cells(vecs, cmat), codec, cmat, id_col).withColumn(
+        "ingest", F.lit(ingest_key or "append")
+    )
+    if ingest_key is None:
+        coded.write.mode("append").partitionBy("ingest", "cell").parquet(
+            target
+        )
+    else:
+        with scoped_conf(
+            spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+        ):
+            # writer-level option too: it takes precedence over session
+            # conf and survives callers inside other scoped confs
+            coded.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy("ingest", "cell").parquet(target)
+    _assert_batch_visible(spark, path, target)
+
+
+def knn_persisted(
+    spark,
+    path: str,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int | None = 2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, list[int]]:
+    """Search a persisted index with a PRUNED scan, in its own codec.
+
+    Flow: resolve the live generation and its codec (one pointer read,
+    one 1-row meta read — :func:`open_index`); probe each query's
+    ``n_probe`` nearest cells (full-precision query against the tiny
+    centroid matrix); collect the DISTINCT probed cells (bounded by
+    n_cells — the one driver-side step, and what turns the cell set
+    into scan-time literals); read the generation filtered to those
+    cells — partition pruning drops every other cell's files — then
+    score exactly like the in-memory composition of the same codec:
+
+    - int8: dequantized codes, round(cosine, 6) —
+      :func:`knn_ivf_quantized`'s tail; rows
+      ``(query_id, neighbor_id, cos, rn)``.
+    - PQ raw / residual: ADC from the query's (or the per-cell query
+      residual's) tables — :func:`knn_ivf_pq` /
+      :func:`knn_ivf_pq_residual`'s tail; rows
+      ``(query_id, neighbor_id, adc_dist, rn)``.
+
+    ``n_probe=None`` defaults to the depth recorded by
+    :func:`tune_index_n_probe` (the recall-targeted ops knob, read
+    from the index's own ``_tuning`` record), falling back to 2 on a
+    never-tuned index.
+
+    Returns ``(result_df, scanned_cells)`` — callers assert
+    ``len(scanned_cells) < n_cells`` / plan PartitionFilters."""
+    from ..session import ensure_min_partitions
+
+    if n_probe is None:
+        n_probe = index_tuned_n_probe(spark, path, k=k) or 2
+    gen, codec = open_index(spark, path)
+    cmat = codec.cmat(spark)
+    q = queries.select(
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    )
+    probed = probe_cells(q, "qv", cmat, range(n_probe))
+    cells = sorted(
+        int(r["cell"])
+        for r in probed.select(
+            F.explode(
+                F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
+            ).alias("cell")
+        )
+        .distinct()
+        .collect()
+    )
+    codes = (
+        spark.read.parquet(gen)
+        .filter(F.col("cell").isin(cells))
+        .withColumnRenamed(id_col, "neighbor_id")
+    )
+    if codec.codebooks is not None:
+        score = (
+            _pq_residual_probe_and_score
+            if codec.residual
+            else _pq_probe_and_score
+        )
+        res = score(
+            codes.select("neighbor_id", "cell", "pq_code"),
+            queries, cmat, codec.codebooks, k, n_probe, id_col, vec_col,
+        )
+        return res, cells
+    ranges = codec.ranges_frame(spark)
+    c = (
+        ensure_min_partitions(codes)
+        .crossJoin(F.broadcast(ranges))
+        .select(
+            "neighbor_id",
+            _dq_codes(
+                F.col("code"), F.col("mn_arr"), F.col("mx_arr")
+            ).alias("cv"),
+            "cell",
+        )
+    )
+    return _int8_probe_and_score(c, probed, ranges, k, n_probe), cells
+
+
+def knn_pq_persisted_rerank(
+    spark,
+    path: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    n_probe: int = 2,
+    shortlist: int = 50,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> tuple[DataFrame, list]:
+    """The PRODUCTION IVF-PQ search shape over the persisted index:
+    ADC shortlist from the pruned cell scan (:func:`knn_persisted`
+    at k=shortlist — codes only, the 32x-compressed payload), then an
+    exact re-rank of the shortlist against the raw vectors (the
+    corpus a deployment keeps in primary storage) to the final top-k.
+    Re-ranking is what restores the retention theorem for PQ (see
+    :func:`tune_n_probe`'s scope note): with a candidate-covering
+    shortlist the result EQUALS the full-precision IVF search over
+    the probed cells — the contract row holds this composition to
+    knn_ivf's value-exact oracle verbatim. Scale shape: the shortlist
+    is k' rows per query (never the cells' full contents in the
+    re-rank join), the raw-vector join touches only shortlist rows,
+    and the query side rides one broadcast. Returns (results,
+    scanned cells) like the ADC-only searcher.
+
+    CONTRACT: ``corpus`` must cover every vector id in the persisted
+    index — the index's appends included (the append APIs make a
+    stale corpus argument easy). The re-rank join is a LEFT join with
+    a raise_error guard on the vector side, so a shortlisted neighbor
+    the corpus cannot supply fails the query loudly instead of being
+    silently dropped from the final top-k."""
+    short, cells = knn_persisted(
+        spark,
+        path,
+        queries,
+        k=shortlist,
+        n_probe=n_probe,
+        id_col=id_col,
+        vec_col=vec_col,
+    )
+    c = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        as_double(F.col(vec_col)).alias("cv"),
+    )
+    q = queries.select(
+        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cos"), F.asc("neighbor_id")
+    )
+    # coverage guard (see CONTRACT above): a shortlist id the corpus
+    # cannot supply raises instead of silently shrinking the top-k
+    covered = F.when(
+        F.col("cv").isNull(),
+        F.raise_error(
+            F.concat(
+                F.lit(
+                    "knn_pq_persisted_rerank: shortlisted neighbor_id "
+                ),
+                F.col("neighbor_id").cast("string"),
+                F.lit(
+                    " is absent from the supplied corpus — the corpus "
+                    "must cover every vector in the persisted index "
+                    "(appended batches included)"
+                ),
+            )
+        ),
+    ).otherwise(F.col("cv"))
+    res = (
+        short.select("query_id", "neighbor_id")
+        .join(c, "neighbor_id", "left")
+        .join(F.broadcast(q), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(cosine(F.col("qv"), covered), 6).alias("cos"),
+        )
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id", "cos", "rn")
+    )
+    return res, cells
 
 
 def ivf_index_compact(
@@ -2532,12 +2417,10 @@ def ivf_index_compact(
     """Fold accumulated ``ingest=`` partitions back into the base cell
     layout — the maintenance pass a STREAMED index needs (every
     micro-batch lands its own ``ingest=<id>-b<n>`` partition via
-    :func:`ivf_index_append` / :func:`pq_index_append`, so at
-    production ingest rates the index re-grows the small-file problem
-    inside itself). Works unchanged on BOTH persisted layouts — the
-    scalar-IVF index and the PQ index share the ``ingest=/cell=``
-    scheme and differ only in payload columns, which are copied
-    generically.
+    :func:`index_append`, so at production ingest rates the index
+    re-grows the small-file problem inside itself). Works unchanged for
+    every codec — all share the ``ingest=/cell=`` scheme and differ
+    only in payload columns, which are copied generically.
 
     The rewrite preserves search results EXACTLY: rows are copied
     unmodified, only the ``ingest`` partition value collapses to
@@ -2550,7 +2433,7 @@ def ivf_index_compact(
     Publish protocol (manifest pointer — object-store safe): the
     consolidated layout — codes plus a copy of the 1-row meta at
     ``_meta``, a SELF-CONTAINED generation — is written COMPLETE to
-    the next pid-unique generation directory, then one
+    the next uuid-unique generation directory, then one
     create-overwrite of the ``_current`` pointer file — a single
     atomic PUT everywhere, including S3-style stores where directory
     rename is a non-atomic copy — repoints readers, and superseded
@@ -2562,7 +2445,7 @@ def ivf_index_compact(
     deployment's own schedule). A crash before the repoint leaves the
     old generation live and the new one an unreferenced orphan.
     Compaction remains a SINGLE-MAINTAINER operation like
-    ``maintenance.compact_parquet``; the pid-unique staging means a
+    ``maintenance.compact_parquet``; the uuid-unique staging means a
     violated assumption (two concurrent maintainers) costs an orphaned
     extra copy, never a corrupted publish — both stage into different
     directories and the last pointer PUT wins. Run it on a QUIESCENT
@@ -2576,7 +2459,7 @@ def ivf_index_compact(
     known to still be active). Returns a stats dict:
     ``{"ingests_folded", "files_before", "files_after", "rows"}``.
     """
-    vectors, meta_path = _gen_and_meta(spark, path)
+    vectors, codec = open_index(spark, path)
     ingests = sorted(
         name.split("=", 1)[1]
         for name in fsio.list_names(vectors, spark)
@@ -2591,28 +2474,25 @@ def ivf_index_compact(
             "files_after": files_before,
             "rows": None,
         }
-    n_cells = _index_n_cells(spark, path, meta_path=meta_path)
     df = spark.read.parquet(vectors)
     folded = df.filter(F.col("ingest").isin(foldable)).drop("ingest")
     kept = df.filter(~F.col("ingest").isin(foldable))
     data_cols = [c for c in folded.columns if c != "cell"]
     consolidated = (
-        folded.repartition(n_cells, "cell")
+        folded.repartition(codec.n_cells, "cell")
         .select(*data_cols, F.lit("base").alias("ingest"), "cell")
     )
     if keep_ingests:
         consolidated = consolidated.unionByName(
             kept.select(*data_cols, "ingest", "cell")
         )
-    next_name = _next_generation(os.path.basename(vectors), unique=True)
+    next_name = _next_generation(os.path.basename(vectors))
     target = f"{path}/{next_name}"
     fsio.delete(target, spark=spark)  # clear a crashed attempt's orphan
     consolidated.write.partitionBy("ingest", "cell").parquet(target)
-    # the generation is self-contained: carry the (unchanged) meta
+    # the generation is self-contained: carry the (unchanged) codec
     # along so the pointer swap publishes codes + artifacts together
-    spark.read.parquet(meta_path).coalesce(1).write.parquet(
-        f"{target}/_meta"
-    )
+    codec.meta_frame(spark).coalesce(1).write.parquet(f"{target}/_meta")
     # rows counted from the WRITTEN parquet, not from the logical
     # plan: consolidated.count() would re-execute the read+shuffle a
     # second time for the stat alone, doubling the maintenance window.
@@ -2623,10 +2503,6 @@ def ivf_index_compact(
     # (a reader that resolved the old pointer mid-scan still finishes);
     # index_vacuum ages them out on the deployment's schedule
     _trim_generations(spark, path, next_name, keep=grace_keep)
-    # a legacy root meta (pre-pointer layout) is NOT deleted here: it
-    # is the grace-window read surface of the superseded ``vectors``
-    # tree and _trim_generations sweeps both together (r12 advisory);
-    # it cannot shadow — _gen_and_meta prefers {gen}/_meta.
     return {
         "ingests_folded": len(foldable),
         "files_before": files_before,
@@ -2648,9 +2524,8 @@ def index_vacuum(spark, path: str, grace_keep: int = 0) -> dict:
     have drained (the scan-duration SLA is the schedule).
 
     Deletes only children matching the EXACT generation grammar
-    (``vectors`` / ``vectors-g<N>[p<hex>]`` — a merely-prefixed
-    sibling like ``vectors_backup`` is never a candidate, r11
-    advisory) whose generation number is STRICTLY OLDER than the live
+    (``vectors-g<N>[p<hex>]`` — a merely-prefixed sibling like
+    ``vectors_backup`` is never a candidate) whose generation number is STRICTLY OLDER than the live
     one, retaining the ``grace_keep`` newest of those (0 by default —
     the vacuum IS the grace deadline). Same-or-newer trees survive
     because they may be a concurrent maintainer's in-flight staging
@@ -2659,26 +2534,11 @@ def index_vacuum(spark, path: str, grace_keep: int = 0) -> dict:
     reference (r11 review). Such newer orphans become vacuumable on a
     later pass, once the live generation has advanced past them. The
     pointer is re-read immediately before the sweep to shrink the
-    stale-snapshot window. A legacy root ``meta`` is swept exactly
-    when the legacy ``vectors`` generation is (it is that
-    generation's read surface — see :func:`_trim_generations`; r12
-    advisory), including the pathological orphan case where the tree
-    is already gone but the meta lingers; everything else at the root
-    (``_current``, ``_ingest_commits``, caller directories) is
-    untouched.
+    stale-snapshot window. Everything else at the root (``_current``,
+    ``_ingest_commits``, caller directories) is untouched.
 
     Returns ``{"live": <name>, "removed": [names...]}``.
     """
     live = os.path.basename(vectors_dir(spark, path))
     removed = _trim_generations(spark, path, live, keep=grace_keep)
-    if (
-        live != "vectors"
-        and grace_keep == 0
-        and "vectors" not in fsio.list_names(path, spark)
-        and fsio.exists(f"{path}/meta", spark)
-    ):
-        # orphaned legacy meta (its tree already swept by an earlier
-        # pass or an older publisher): past the grace deadline, gone
-        fsio.delete(f"{path}/meta", spark=spark)
-        removed.append("meta")
     return {"live": live, "removed": sorted(removed)}

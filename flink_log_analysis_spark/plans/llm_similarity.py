@@ -314,20 +314,24 @@ def _embeddings_fingerprint(sf_dir: str) -> str:
         parts.append(f"{st.st_size}:{st.st_mtime_ns}")
     # layout version prefix: bumping it retires every pre-change /tmp
     # index through the stale-sibling pruning, exactly like a testdata
-    # regeneration would. L2 = ingest=/cell= two-level partitioning
-    # (round 9); L3 = manifest-pointer publish; L4 = self-contained
-    # generations (meta rides INSIDE the generation dir, round 11);
-    # L5 = uuid-unique first-build staging + reader-grace trim (r12) —
-    # older artifacts would exercise only the legacy fallbacks
-    return "L5" + hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
+    # regeneration would. L2 = ingest=/cell= two-level partitioning;
+    # L3 = manifest-pointer publish; L4 = self-contained generations
+    # (meta rides INSIDE the generation dir); L5 = uuid-unique
+    # first-build staging + reader-grace trim; L6 = the store reads
+    # only pointer-published generations (no pre-pointer fallbacks)
+    return "L6" + hashlib.md5("|".join(parts).encode()).hexdigest()[:10]
 
 
-def _ivf_index_path(sf_dir: str) -> str:
+def _ivf_index_path(sf_dir: str, stage: str = "index") -> str:
+    """/tmp cache root of one int8 index lifecycle stage over the
+    testdata embeddings (``index`` / ``append`` / ``stream`` /
+    ``compact``), keyed by the embeddings fingerprint."""
     import os as _os
 
     leaf = _os.path.basename(sf_dir.rstrip("/"))
     return (
-        f"/tmp/spark_graft_ivf_index/{leaf}-{_embeddings_fingerprint(sf_dir)}"
+        f"/tmp/spark_graft_ivf_{stage}/"
+        f"{leaf}-{_embeddings_fingerprint(sf_dir)}"
     )
 
 
@@ -402,24 +406,24 @@ def _build_index_once(path: str, marker_name: str, build_fn) -> str:
     return path
 
 
+def _ivf_base_build(emb: DataFrame, path: str) -> None:
+    """The int8 lifecycle rows' base build: a fitted 16-cell index."""
+    similarity.write_ivf_index(emb, path, n_cells=IVF_INDEX_CELLS, seed=42)
+
+
 def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
     """Build the persisted index once per corpus (atomic-rename +
     stale-fingerprint pruning via _build_index_once)."""
     return _build_index_once(
         _ivf_index_path(sf_dir),
         "_BUILT",
-        lambda tmp: similarity.write_ivf_index(
-            read_table(spark, sf_dir, "embeddings"),
-            tmp,
-            n_cells=IVF_INDEX_CELLS,
-            seed=42,
-        ),
+        lambda tmp: _ivf_base_build(read_table(spark, sf_dir, "embeddings"), tmp),
     )
 
 
 def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search over the PERSISTED cell-partitioned IVF index
-    (similarity.write_ivf_index / knn_ivf_persisted): one driver row
+    (similarity.write_ivf_index / knn_persisted): one row
     certifying that (a) the pruned-scan search returns exactly the
     in-memory composition's results over the same fit (codes on disk
     lose nothing) and (b) the scan touched a strict subset of cells —
@@ -428,17 +432,17 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
     path = _ensure_ivf_index(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-    res, cells = similarity.knn_ivf_persisted(
+    res, cells = similarity.knn_persisted(
         spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
     )
-    cents, _, _, n_cells = similarity.read_ivf_meta(spark, path)
+    _, codec = similarity.open_index(spark, path)
     mem = similarity.knn_ivf_quantized(
         emb,
         queries,
         k=K,
-        n_cells=n_cells,
+        n_cells=codec.n_cells,
         n_probe=IVF_INDEX_PROBE,
-        centroids=cents,
+        centroids=codec.centroids,
     )
     mism = res.exceptAll(mem).union(mem.exceptAll(res))
     return (
@@ -448,253 +452,125 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_results",
             F.lit(K).alias("k"),
             F.lit(IVF_INDEX_PROBE).alias("n_probe"),
-            F.lit(n_cells).alias("n_cells"),
+            F.lit(codec.n_cells).alias("n_cells"),
             (F.col("_mm") == 0).alias("matches_inmemory"),
-            F.lit(len(cells) < n_cells).alias("partition_pruned"),
+            F.lit(len(cells) < codec.n_cells).alias("partition_pruned"),
         )
     )
 
 
-# Ingest-without-refit demo: the corpus slice vec_id % 5 == 3 plays
-# the "arriving batch" appended into the already-built index.
+# --- index lifecycle stages (appended / streamed / compacted) -------
+#
+# One helper per stage, for every codec: each takes the corpus and the
+# codec's base-build function ``build_base(df, path)`` and publishes
+# the finished stage once per /tmp root (_build_index_once).
+#
+# Appended: the corpus slice vec_id % 5 == 3 plays the "arriving
+# batch" appended into the already-built index. Streamed: base from
+# vec_id % 5 in {0,1,2}; the remaining two residue classes arrive as
+# two parquet files consumed maxFilesPerTrigger=1 — two genuine
+# micro-batches through foreachBatch. Compacted: base from
+# vec_id % 5 in {0,1}; three residue classes arrive as three
+# micro-batches, then ivf_index_compact folds the accumulated ingest
+# partitions back into the base cell layout.
 IVF_APPEND_MOD = 5
 IVF_APPEND_REM = 3
-
-
-def _ensure_ivf_appended_index(spark: SparkSession, sf_dir: str) -> str:
-    """Base index from 4/5 of the corpus, then ivf_index_append of the
-    remaining 1/5 — built once per corpus (atomic-rename + pruning via
-    _build_index_once; an interrupted run can never publish a
-    half-appended index)."""
-    import os as _os
-
-    leaf = _os.path.basename(sf_dir.rstrip("/"))
-    path = (
-        f"/tmp/spark_graft_ivf_append/{leaf}-{_embeddings_fingerprint(sf_dir)}"
-    )
-
-    def _build(tmp: str) -> None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        similarity.write_ivf_index(
-            emb.filter(F.col("vec_id") % IVF_APPEND_MOD != IVF_APPEND_REM),
-            tmp,
-            n_cells=IVF_INDEX_CELLS,
-            seed=42,
-        )
-        similarity.ivf_index_append(
-            spark,
-            tmp,
-            emb.filter(F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM),
-        )
-
-    return _build_index_once(path, "_APPENDED", _build)
-
-
-def knn_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index INGESTION contract: append a corpus slice into the
-    persisted IVF index (existing centroids + codebook, no refit —
-    similarity.ivf_index_append), then certify that searching the
-    appended index returns exactly what the in-memory composition
-    computes over the FULL corpus under the same fit artifacts, and
-    that every corpus row is indexed. The ANN index absorbs a
-    streaming corpus without rebuild — partition-append only touches
-    the cells the batch lands in."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    path = _ensure_ivf_appended_index(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-    res, _cells = similarity.knn_ivf_persisted(
-        spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
-    )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        emb,
-        queries,
-        k=K,
-        n_cells=n_cells,
-        n_probe=IVF_INDEX_PROBE,
-        centroids=cents,
-        ranges=ranges,
-    )
-    mism = res.exceptAll(mem).union(mem.exceptAll(res))
-    indexed = spark.read.parquet(
-        similarity.vectors_dir(spark, path)
-    ).agg(
-        F.count(F.lit(1)).alias("_indexed")
-    )
-    total = emb.agg(F.count(F.lit(1)).alias("_total"))
-    return (
-        res.agg(F.count(F.lit(1)).alias("n_results"))
-        .crossJoin(mism.agg(F.count(F.lit(1)).alias("_mm")))
-        .crossJoin(indexed)
-        .crossJoin(total)
-        .select(
-            "n_results",
-            F.lit(K).alias("k"),
-            F.lit(IVF_INDEX_PROBE).alias("n_probe"),
-            (F.col("_mm") == 0).alias("matches_inmemory"),
-            (F.col("_indexed") == F.col("_total")).alias("index_complete"),
-        )
-    )
-
-
-# Streaming ingest demo: base index from vec_id % 5 in {0,1,2}; the
-# remaining two residue classes arrive as two parquet files consumed
-# maxFilesPerTrigger=1 — two genuine micro-batches through foreachBatch.
 IVF_STREAM_BASE_REMS = (0, 1, 2)
 IVF_STREAM_BATCH_REMS = (3, 4)
-
-
-def _ensure_ivf_streamed_index(spark: SparkSession, sf_dir: str) -> str:
-    """Persisted index built by the STREAMING ingest path: write the
-    base index, manufacture the arriving batches as parquet files, and
-    drain them through streaming.ann_ingest.ivf_ingest_stream
-    (foreachBatch -> ivf_index_append, availableNow, durable
-    replay-skip markers). Stream inputs + checkpoint live inside the
-    published index dir — the atomic-rename publish (_build_index_once)
-    covers the whole artifact."""
-    import os as _os
-
-    from ..streaming.ann_ingest import ivf_ingest_stream
-
-    leaf = _os.path.basename(sf_dir.rstrip("/"))
-    path = (
-        f"/tmp/spark_graft_ivf_stream/{leaf}-{_embeddings_fingerprint(sf_dir)}"
-    )
-
-    def _build(tmp: str) -> None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        base = emb.filter(
-            (F.col("vec_id") % IVF_APPEND_MOD).isin(*IVF_STREAM_BASE_REMS)
-        )
-        similarity.write_ivf_index(
-            base, tmp, n_cells=IVF_INDEX_CELLS, seed=42
-        )
-        for i, rem in enumerate(IVF_STREAM_BATCH_REMS):
-            emb.filter(F.col("vec_id") % IVF_APPEND_MOD == rem).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{tmp}/input/b{i}")
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{tmp}/input")
-        )
-        ivf_ingest_stream(spark, tmp, stream, f"{tmp}/ckpt")
-
-    return _build_index_once(path, "_STREAMED", _build)
-
-
-def knn_ivf_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-ingest contract (the knn_ivf_appended identity one
-    level up): after the stream drains, searching the stream-built
-    persisted index returns exactly what the in-memory composition
-    computes over the FULL corpus under the same fit artifacts, every
-    corpus row is indexed, and at least two genuine micro-batches
-    flowed through foreachBatch (n_ingest_batches)."""
-    from ..streaming.ann_ingest import committed_batches
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    path = _ensure_ivf_streamed_index(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-    res, cells = similarity.knn_ivf_persisted(
-        spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
-    )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        emb,
-        queries,
-        k=K,
-        n_cells=n_cells,
-        n_probe=IVF_INDEX_PROBE,
-        centroids=cents,
-        ranges=ranges,
-    )
-    mism = res.exceptAll(mem).union(mem.exceptAll(res))
-    indexed = spark.read.parquet(
-        similarity.vectors_dir(spark, path)
-    ).agg(
-        F.count(F.lit(1)).alias("_indexed")
-    )
-    total = emb.agg(F.count(F.lit(1)).alias("_total"))
-    return (
-        res.agg(F.count(F.lit(1)).alias("n_results"))
-        .crossJoin(mism.agg(F.count(F.lit(1)).alias("_mm")))
-        .crossJoin(indexed)
-        .crossJoin(total)
-        .select(
-            "n_results",
-            F.lit(K).alias("k"),
-            F.lit(IVF_INDEX_PROBE).alias("n_probe"),
-            F.lit(len(committed_batches(path))).alias("n_ingest_batches"),
-            (F.col("_mm") == 0).alias("matches_inmemory"),
-            (F.col("_indexed") == F.col("_total")).alias("index_complete"),
-            # pruning must hold on the stream-built ingest=/cell=
-            # layout too, not only on the manycell row (r9 advisory):
-            # a regression in the two-level layout's partition
-            # discovery would otherwise go unnoticed here
-            F.lit(len(cells) < n_cells).alias("partition_pruned"),
-        )
-    )
-
-
-# Compaction demo (round 10): base index from vec_id % 5 in {0,1};
-# three residue classes arrive as three micro-batches, then
-# ivf_index_compact folds the accumulated ingest partitions back into
-# the base cell layout. The contract pins the maintenance pass's whole
-# promise: search results BYTE-IDENTICAL before/after (and equal to
-# the in-memory composition), every row still indexed, the layout
-# collapsed to a single ingest, the file count strictly reduced, and
-# the commit markers (the post-compaction replay guard) intact.
 IVF_COMPACT_BASE_REMS = (0, 1)
 IVF_COMPACT_BATCH_REMS = (2, 3, 4)
 
 
-def _ensure_ivf_compacted_index(spark: SparkSession, sf_dir: str) -> str:
-    """Streamed index taken through its maintenance pass: build base,
-    drain three micro-batches (streaming.ann_ingest), snapshot the
-    pre-compaction search + file census inside the artifact, compact
-    (similarity.ivf_index_compact), and record the stats — all under
-    one atomic publish so the contract query reads a consistent
-    artifact."""
-    import os as _os
-
-    from ..sources import fsio
-    from ..streaming.ann_ingest import ivf_ingest_stream
-
-    leaf = _os.path.basename(sf_dir.rstrip("/"))
-    path = (
-        f"/tmp/spark_graft_ivf_compact/{leaf}-{_embeddings_fingerprint(sf_dir)}"
-    )
+def _ensure_appended(
+    spark: SparkSession, root: str, corpus: DataFrame, build_base
+) -> str:
+    """Base index from 4/5 of ``corpus``, then one
+    ``similarity.index_append`` of the remaining fifth (ingest_key=None
+    — the shared ``ingest=append`` partition, batch semantics). The
+    atomic-rename publish means an interrupted run can never publish a
+    half-appended index."""
+    rem = F.col("vec_id") % IVF_APPEND_MOD
 
     def _build(tmp: str) -> None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        base = emb.filter(
-            (F.col("vec_id") % IVF_APPEND_MOD).isin(*IVF_COMPACT_BASE_REMS)
+        build_base(corpus.filter(rem != IVF_APPEND_REM), tmp)
+        similarity.index_append(spark, tmp, corpus.filter(rem == IVF_APPEND_REM))
+
+    return _build_index_once(root, "_APPENDED", _build)
+
+
+def _stream_build(
+    spark: SparkSession,
+    tmp: str,
+    corpus: DataFrame,
+    build_base,
+    base_rems: tuple,
+    batch_rems: tuple,
+) -> None:
+    """Base-build from the ``base_rems`` residue classes, manufacture
+    one parquet file per ``batch_rems`` class, and drain them through
+    ``streaming.ann_ingest.ingest_stream`` (foreachBatch ->
+    index_append, availableNow, maxFilesPerTrigger=1, durable
+    replay-skip markers). Stream inputs + checkpoint live inside the
+    published index dir, so the atomic-rename publish covers the whole
+    artifact."""
+    from ..streaming.ann_ingest import ingest_stream
+
+    rem = F.col("vec_id") % IVF_APPEND_MOD
+    build_base(corpus.filter(rem.isin(*base_rems)), tmp)
+    for i, r in enumerate(batch_rems):
+        corpus.filter(rem == r).coalesce(1).write.mode("overwrite").parquet(
+            f"{tmp}/input/b{i}"
         )
-        similarity.write_ivf_index(
-            base, tmp, n_cells=IVF_INDEX_CELLS, seed=42
+    stream = (
+        spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(f"{tmp}/input")
+    )
+    ingest_stream(spark, tmp, stream, f"{tmp}/ckpt")
+
+
+def _ensure_streamed(
+    spark: SparkSession, root: str, corpus: DataFrame, build_base
+) -> str:
+    return _build_index_once(
+        root,
+        "_STREAMED",
+        lambda tmp: _stream_build(
+            spark, tmp, corpus, build_base,
+            IVF_STREAM_BASE_REMS, IVF_STREAM_BATCH_REMS,
+        ),
+    )
+
+
+def _ensure_compacted(
+    spark: SparkSession,
+    root: str,
+    corpus: DataFrame,
+    build_base,
+    queries: DataFrame | None = None,
+) -> str:
+    """Streamed index taken through its maintenance pass: base + three
+    micro-batches, compaction (``similarity.ivf_index_compact``), and
+    its stats recorded at ``{root}/compact_stats``. With ``queries``,
+    the pre-compaction search is snapshot at
+    ``{root}/precompact_search`` first. All under one atomic publish,
+    so a contract query reads a consistent artifact."""
+    from ..sources import fsio
+
+    def _build(tmp: str) -> None:
+        _stream_build(
+            spark, tmp, corpus, build_base,
+            IVF_COMPACT_BASE_REMS, IVF_COMPACT_BATCH_REMS,
         )
-        for i, rem in enumerate(IVF_COMPACT_BATCH_REMS):
-            emb.filter(F.col("vec_id") % IVF_APPEND_MOD == rem).coalesce(
-                1
-            ).write.mode("overwrite").parquet(f"{tmp}/input/b{i}")
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(f"{tmp}/input")
-        )
-        ivf_ingest_stream(spark, tmp, stream, f"{tmp}/ckpt")
-        queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-        pre, _ = similarity.knn_ivf_persisted(
-            spark, tmp, queries, k=K, n_probe=IVF_INDEX_PROBE
-        )
-        pre.coalesce(1).write.parquet(f"{tmp}/precompact_search")
+        if queries is not None:
+            pre, _ = similarity.knn_persisted(
+                spark, tmp, queries, k=K, n_probe=IVF_INDEX_PROBE
+            )
+            pre.coalesce(1).write.parquet(f"{tmp}/precompact_search")
         n_ingests = sum(
             1
-            for n in fsio.list_names(
-                similarity.vectors_dir(spark, tmp), spark
-            )
+            for n in fsio.list_names(similarity.vectors_dir(spark, tmp), spark)
             if n.startswith("ingest=")
         )
         stats = similarity.ivf_index_compact(spark, tmp)
@@ -711,47 +587,117 @@ def _ensure_ivf_compacted_index(spark: SparkSession, sf_dir: str) -> str:
             "files_before int, files_after int",
         ).coalesce(1).write.parquet(f"{tmp}/compact_stats")
 
-    return _build_index_once(path, "_COMPACTED", _build)
+    return _build_index_once(root, "_COMPACTED", _build)
 
 
-def knn_ivf_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streamed-index MAINTENANCE contract (VERDICT r9 item 3): after
-    three micro-batches accumulate their ingest partitions, compaction
-    folds them into the base cell layout. One row certifies: search
-    over the compacted index == the pre-compaction snapshot == the
-    in-memory composition over the full corpus; the corpus is fully
-    indexed; the ingest partitions collapsed to base only; the file
-    count strictly dropped; the replay-guard markers survived; and the
-    pruned scan still touches a strict subset of cells."""
-    from ..sources import fsio
-    from ..streaming.ann_ingest import committed_batches
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    path = _ensure_ivf_compacted_index(spark, sf_dir)
+def _ivf_lifecycle_facts(spark: SparkSession, emb: DataFrame, path: str):
+    """(search result, scanned cells, n_cells, 1-row facts) for the
+    int8 lifecycle rows: the pruned search over the stage's index, and
+    a row of ``n_results``, ``_mm`` (rows differing from the in-memory
+    composition over the FULL corpus under the index's own fit
+    artifacts), ``_indexed`` and ``_total``."""
     queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
-    res, cells = similarity.knn_ivf_persisted(
+    res, cells = similarity.knn_persisted(
         spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
     )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
+    gen, codec = similarity.open_index(spark, path)
     mem = similarity.knn_ivf_quantized(
         emb,
         queries,
         k=K,
-        n_cells=n_cells,
+        n_cells=codec.n_cells,
         n_probe=IVF_INDEX_PROBE,
-        centroids=cents,
-        ranges=ranges,
+        centroids=codec.centroids,
+        ranges=codec.ranges_frame(spark),
     )
+    mism = res.exceptAll(mem).union(mem.exceptAll(res))
+    facts = (
+        res.agg(F.count(F.lit(1)).alias("n_results"))
+        .crossJoin(mism.agg(F.count(F.lit(1)).alias("_mm")))
+        .crossJoin(
+            spark.read.parquet(gen).agg(F.count(F.lit(1)).alias("_indexed"))
+        )
+        .crossJoin(emb.agg(F.count(F.lit(1)).alias("_total")))
+    )
+    return res, cells, codec.n_cells, facts
+
+
+def knn_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Index INGESTION contract: append a corpus slice into the
+    persisted IVF index (existing centroids + codebook, no refit —
+    similarity.index_append), then certify that searching the
+    appended index returns exactly what the in-memory composition
+    computes over the FULL corpus under the same fit artifacts, and
+    that every corpus row is indexed. The ANN index absorbs a
+    streaming corpus without rebuild — partition-append only touches
+    the cells the batch lands in."""
+    emb = read_table(spark, sf_dir, "embeddings")
+    path = _ensure_appended(
+        spark, _ivf_index_path(sf_dir, "append"), emb, _ivf_base_build
+    )
+    _, _, _, facts = _ivf_lifecycle_facts(spark, emb, path)
+    return facts.select(
+        "n_results",
+        F.lit(K).alias("k"),
+        F.lit(IVF_INDEX_PROBE).alias("n_probe"),
+        (F.col("_mm") == 0).alias("matches_inmemory"),
+        (F.col("_indexed") == F.col("_total")).alias("index_complete"),
+    )
+
+
+def knn_ivf_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming-ingest contract (the knn_ivf_appended identity one
+    level up): after the stream drains, searching the stream-built
+    persisted index returns exactly what the in-memory composition
+    computes over the FULL corpus under the same fit artifacts, every
+    corpus row is indexed, and at least two genuine micro-batches
+    flowed through foreachBatch (n_ingest_batches)."""
+    from ..streaming.ann_ingest import committed_batches
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    path = _ensure_streamed(
+        spark, _ivf_index_path(sf_dir, "stream"), emb, _ivf_base_build
+    )
+    _, cells, n_cells, facts = _ivf_lifecycle_facts(spark, emb, path)
+    return facts.select(
+        "n_results",
+        F.lit(K).alias("k"),
+        F.lit(IVF_INDEX_PROBE).alias("n_probe"),
+        F.lit(len(committed_batches(path))).alias("n_ingest_batches"),
+        (F.col("_mm") == 0).alias("matches_inmemory"),
+        (F.col("_indexed") == F.col("_total")).alias("index_complete"),
+        # pruning must hold on the stream-built ingest=/cell= layout
+        # too, not only on the manycell row: a regression in the
+        # two-level layout's partition discovery would otherwise go
+        # unnoticed here
+        F.lit(len(cells) < n_cells).alias("partition_pruned"),
+    )
+
+
+def knn_ivf_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streamed-index MAINTENANCE contract: after three micro-batches
+    accumulate their ingest partitions, compaction folds them into the
+    base cell layout. One row certifies: search over the compacted
+    index == the pre-compaction snapshot == the in-memory composition
+    over the full corpus; the corpus is fully indexed; the ingest
+    partitions collapsed to base only; the file count strictly
+    dropped; the replay-guard markers survived; and the pruned scan
+    still touches a strict subset of cells."""
+    from ..sources import fsio
+    from ..streaming.ann_ingest import committed_batches
+
+    emb = read_table(spark, sf_dir, "embeddings")
+    path = _ensure_compacted(
+        spark,
+        _ivf_index_path(sf_dir, "compact"),
+        emb,
+        _ivf_base_build,
+        queries=emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES),
+    )
+    res, cells, n_cells, facts = _ivf_lifecycle_facts(spark, emb, path)
     pre = spark.read.parquet(f"{path}/precompact_search")
-    mism_mem = res.exceptAll(mem).union(mem.exceptAll(res))
     mism_pre = res.exceptAll(pre).union(pre.exceptAll(res))
     stats = spark.read.parquet(f"{path}/compact_stats")
-    indexed = spark.read.parquet(
-        similarity.vectors_dir(spark, path)
-    ).agg(
-        F.count(F.lit(1)).alias("_indexed")
-    )
-    total = emb.agg(F.count(F.lit(1)).alias("_total"))
     ingests_now = [
         n
         for n in fsio.list_names(similarity.vectors_dir(spark, path), spark)
@@ -759,11 +705,7 @@ def knn_ivf_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     markers = committed_batches(path)
     return (
-        res.agg(F.count(F.lit(1)).alias("n_results"))
-        .crossJoin(mism_pre.agg(F.count(F.lit(1)).alias("_mp")))
-        .crossJoin(mism_mem.agg(F.count(F.lit(1)).alias("_mm")))
-        .crossJoin(indexed)
-        .crossJoin(total)
+        facts.crossJoin(mism_pre.agg(F.count(F.lit(1)).alias("_mp")))
         .crossJoin(F.broadcast(stats))
         .select(
             "n_results",
@@ -837,7 +779,7 @@ def _ensure_manycell_index(spark: SparkSession) -> str:
     path = (
         "/tmp/spark_graft_ivf_manycell/"
         f"c{MANYCELL_CLUSTERS}x{MANYCELL_PER_CLUSTER}d{MANYCELL_DIM}"
-        f"s{int(MANYCELL_SPREAD * 100)}-cells{MANYCELL_CELLS}L5"
+        f"s{int(MANYCELL_SPREAD * 100)}-cells{MANYCELL_CELLS}L6"
     )
     return _build_index_once(
         path,
@@ -862,10 +804,11 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_manycell_index(spark)
     q_raw = raw.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
     q_nrm = nrm.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, cells = similarity.knn_ivf_persisted(
+    res, cells = similarity.knn_persisted(
         spark, path, q_nrm, k=K, n_probe=MANYCELL_PROBE
     )
-    cents, cmat, ranges, n_cells = similarity.read_ivf_meta(spark, path)
+    gen, codec = similarity.open_index(spark, path)
+    cents, n_cells = codec.centroids, codec.n_cells
     # Exact truth on the RAW corpus — the same vectors and cosine the
     # SQL replica states (cosine is scale-invariant, so raw truth ==
     # normalized truth; raw keeps the replica arithmetic minimal).
@@ -902,7 +845,7 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_cells=n_cells,
         n_probe=MANYCELL_PROBE,
         centroids=cents,
-        ranges=ranges,
+        ranges=codec.ranges_frame(spark),
     )
     mism = (
         res.exceptAll(mem)
@@ -912,7 +855,7 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scan cost from the index's OWN cell occupancies (the rows a
     # searcher actually reads), as a fraction of the brute-force cross.
     occ = (
-        spark.read.parquet(similarity.vectors_dir(spark, path))
+        spark.read.parquet(gen)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -921,7 +864,7 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.as_double(F.col("embedding")).alias("qv"),
     )
     probed = similarity.probe_cells(
-        qv, "qv", cmat, range(MANYCELL_PROBE)
+        qv, "qv", codec.cmat(spark), range(MANYCELL_PROBE)
     ).select(
         "query_id",
         F.explode(
@@ -998,7 +941,7 @@ def hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = raw.select("vec_id", lbl, "embedding")
     nrm = nrm.select("vec_id", lbl, "embedding")
     path = _ensure_manycell_index(spark)
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
+    _, codec = similarity.open_index(spark, path)
     a_raw = raw.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
     a_nrm = nrm.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
     exact = similarity.hard_negatives(raw, a_raw, k=K).select(
@@ -1008,10 +951,10 @@ def hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         nrm,
         a_nrm,
         k=K,
-        n_cells=n_cells,
+        n_cells=codec.n_cells,
         n_probe=MANYCELL_PROBE,
-        centroids=cents,
-        ranges=ranges,
+        centroids=codec.centroids,
+        ranges=codec.ranges_frame(spark),
     ).select("anchor_id", "negative_id", F.lit(1).alias("hit"))
     recall_row = exact.join(
         approx, ["anchor_id", "negative_id"], "left"
@@ -1589,57 +1532,59 @@ def knn_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ensure_pq_index(spark: SparkSession) -> str:
-    """Build the persisted IVF-PQ index over the formula corpus once
-    per container (the corpus, centers, and codebooks are all
-    formula-derived, so the path version string IS the fingerprint)."""
-    path = (
-        "/tmp/spark_graft_pq_manycell/"
+def _pq_root(stage: str, codec: str = "") -> str:
+    """/tmp cache root of one PQ index stage over the formula corpus
+    (corpus, centers and codebooks are all formula-derived, so the
+    version string IS the fingerprint — no testdata dependence). The
+    ``-res`` qualifier keeps the residual codec's root disjoint from
+    the raw one's (the stale-sibling pruner never removes a
+    dash-qualified sibling)."""
+    return (
+        f"/tmp/spark_graft_pq_{stage}/"
         f"c{MANYCELL_CLUSTERS}x{MANYCELL_PER_CLUSTER}d{MANYCELL_DIM}"
-        # v4: uuid-unique first-build staging + grace trim (r12)
-        f"s{int(MANYCELL_SPREAD * 100)}-m{PQ_EXACT_M}cw{PQ_EXACT_CW}-v4"
-    )
-    return _build_index_once(
-        path,
-        "_BUILT",
-        lambda tmp: similarity.write_pq_index(
-            _manycell_corpora(spark)[0],
-            tmp,
-            similarity.clustered_corpus_centers(
-                MANYCELL_CLUSTERS, MANYCELL_DIM
-            ),
-            similarity.constructed_pq_codebooks(
-                PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
-            ),
-        ),
+        f"s{int(MANYCELL_SPREAD * 100)}-m{PQ_EXACT_M}cw{PQ_EXACT_CW}"
+        f"{codec}-v5"
     )
 
 
-def _ensure_pq_residual_index(spark: SparkSession) -> str:
-    """The persisted RESIDUAL-codec IVF-PQ index over the formula
-    corpus, built once per container (formula corpus + constructed
-    centers/books, so the path version string is the fingerprint; the
-    ``-res`` leaf keeps it disjoint from the raw-codec cache)."""
-    path = (
-        "/tmp/spark_graft_pq_manycell/"
-        f"c{MANYCELL_CLUSTERS}x{MANYCELL_PER_CLUSTER}d{MANYCELL_DIM}"
-        f"s{int(MANYCELL_SPREAD * 100)}-m{PQ_EXACT_M}cw{PQ_EXACT_CW}-res-v4"
-    )
-    return _build_index_once(
-        path,
-        "_BUILT",
-        lambda tmp: similarity.write_pq_index(
-            _manycell_corpora(spark)[0],
-            tmp,
-            similarity.clustered_corpus_centers(
-                MANYCELL_CLUSTERS, MANYCELL_DIM
-            ),
+def _pq_base_build(residual: bool = False):
+    """``build_base(df, path)`` for the PQ stages: the constructed
+    centers and codebooks, raw or residual codec."""
+
+    def build(df: DataFrame, path: str) -> None:
+        similarity.write_pq_index(
+            df,
+            path,
+            similarity.clustered_corpus_centers(MANYCELL_CLUSTERS, MANYCELL_DIM),
             similarity.constructed_pq_codebooks(
                 PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
             ),
-            residual=True,
-        ),
+            residual=residual,
+        )
+
+    return build
+
+
+def _ensure_pq_index(spark: SparkSession, residual: bool = False) -> str:
+    """The persisted IVF-PQ index over the formula corpus, built once
+    per container."""
+    build = _pq_base_build(residual)
+    return _build_index_once(
+        _pq_root("manycell", "-res" if residual else ""),
+        "_BUILT",
+        lambda tmp: build(_manycell_corpora(spark)[0], tmp),
     )
+
+
+def _pq_search(spark: SparkSession, path: str) -> DataFrame:
+    """The PQ rows' pruned search over a persisted index: the formula
+    corpus's query set at IVFPQ_PROBE."""
+    corpus, _ = _manycell_corpora(spark)
+    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
+    res, _cells = similarity.knn_persisted(
+        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
+    )
+    return res
 
 
 def knn_pq_residual_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1647,18 +1592,12 @@ def knn_pq_residual_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     production artifact: residual codes in the cell-partitioned
     layout, the codec flag riding the generation's 1-row meta, and
     the search dispatching to residual scoring off that flag alone
-    (the caller never states the codec — knn_pq_persisted reads it).
+    (the caller never states the codec — knn_persisted reads it).
     Held to the in-memory residual composition's value-exact oracle
     VERBATIM: a lossy meta round-trip, a mis-dispatched scorer (raw
     ADC over residual codes), or a mis-pruned partition breaks the
     hash."""
-    path = _ensure_pq_residual_index(spark)
-    corpus, _ = _manycell_corpora(spark)
-    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, _cells = similarity.knn_pq_persisted(
-        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
-    )
-    return res
+    return _pq_search(spark, _ensure_pq_index(spark, residual=True))
 
 
 def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1672,13 +1611,7 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence introduced by the persist/read/prune cycle (a lossy
     meta round-trip, a mis-pruned partition, a code mismatch) breaks
     the hash."""
-    path = _ensure_pq_index(spark)
-    corpus, _ = _manycell_corpora(spark)
-    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, _cells = similarity.knn_pq_persisted(
-        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
-    )
-    return res
+    return _pq_search(spark, _ensure_pq_index(spark))
 
 
 # Candidate-covering shortlist for the rerank contract: nearest-center
@@ -1721,145 +1654,47 @@ def knn_pq_persisted_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res
 
 
-def _pq_lifecycle_root(stage: str) -> str:
-    """/tmp cache path for the streamed/compacted PQ lifecycle
-    artifacts — formula corpus + constructed artifacts, so the
-    version string IS the fingerprint (no testdata dependence)."""
-    return (
-        f"/tmp/spark_graft_pq_{stage}/"
-        f"c{MANYCELL_CLUSTERS}x{MANYCELL_PER_CLUSTER}d{MANYCELL_DIM}"
-        f"s{int(MANYCELL_SPREAD * 100)}-m{PQ_EXACT_M}cw{PQ_EXACT_CW}-v3"
-    )
-
-
-def _build_pq_streamed(spark: SparkSession, tmp: str) -> None:
-    """Base-build the PQ index from 2/5 of the formula corpus, then
-    drain the remaining 3/5 through three genuine micro-batches of
-    ``pq_ingest_stream`` (maxFilesPerTrigger=1) — the PQ twin of the
-    scalar-IVF streamed build."""
-    from ..streaming.ann_ingest import pq_ingest_stream
-
-    corpus, _ = _manycell_corpora(spark)
-    base = corpus.filter(
-        (F.col("vec_id") % IVF_APPEND_MOD).isin(*IVF_COMPACT_BASE_REMS)
-    )
-    similarity.write_pq_index(
-        base,
-        tmp,
-        similarity.clustered_corpus_centers(MANYCELL_CLUSTERS, MANYCELL_DIM),
-        similarity.constructed_pq_codebooks(
-            PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
-        ),
-    )
-    for i, rem in enumerate(IVF_COMPACT_BATCH_REMS):
-        corpus.filter(F.col("vec_id") % IVF_APPEND_MOD == rem).coalesce(
-            1
-        ).write.mode("overwrite").parquet(f"{tmp}/input/b{i}")
-    stream = (
-        spark.readStream.schema(corpus.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(f"{tmp}/input")
-    )
-    pq_ingest_stream(spark, tmp, stream, f"{tmp}/ckpt")
-
-
-def _ensure_pq_streamed_index(spark: SparkSession) -> str:
-    return _build_index_once(
-        _pq_lifecycle_root("streamed"),
-        "_STREAMED",
-        lambda tmp: _build_pq_streamed(spark, tmp),
-    )
-
-
-def _ensure_pq_appended_index(spark: SparkSession) -> str:
-    """Batch-append lifecycle stage: base-build from 4/5 of the
-    formula corpus, then one ``pq_index_append`` of the remaining
-    fifth (ingest_key=None — the shared ``ingest=append`` partition,
-    batch semantics)."""
-
-    def _build(tmp: str) -> None:
-        corpus, _ = _manycell_corpora(spark)
-        similarity.write_pq_index(
-            corpus.filter(F.col("vec_id") % IVF_APPEND_MOD != IVF_APPEND_REM),
-            tmp,
-            similarity.clustered_corpus_centers(
-                MANYCELL_CLUSTERS, MANYCELL_DIM
-            ),
-            similarity.constructed_pq_codebooks(
-                PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
-            ),
-        )
-        similarity.pq_index_append(
-            spark,
-            tmp,
-            corpus.filter(F.col("vec_id") % IVF_APPEND_MOD == IVF_APPEND_REM),
-        )
-
-    return _build_index_once(
-        _pq_lifecycle_root("appended"), "_APPENDED", _build
-    )
-
-
 def knn_pq_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch ingest-without-refit for the PQ index, VALUE-exact —
     completes the lifecycle matrix (persisted / appended / streamed /
-    compacted, all four now driver-contracted for BOTH index
-    layouts): 4/5 of the formula corpus is base-built, the last fifth
-    arrives as one ``pq_index_append`` batch (assigned with the
-    persisted centroids, encoded with the persisted codebooks), and
-    the pruned search over the result is held to the in-memory
-    composition's oracle string VERBATIM — an append-side assignment
-    or encode drift breaks 160 hashes."""
-    path = _ensure_pq_appended_index(spark)
+    compacted, all four oracle-contracted for both codec families):
+    4/5 of the formula corpus is base-built, the last fifth arrives as
+    one ``index_append`` batch (assigned with the persisted centroids,
+    encoded with the persisted codebooks), and the pruned search over
+    the result is held to the in-memory composition's oracle string
+    VERBATIM — an append-side assignment or encode drift breaks 160
+    hashes."""
     corpus, _ = _manycell_corpora(spark)
-    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, _cells = similarity.knn_pq_persisted(
-        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
-    )
-    return res
-
-
-def _ensure_pq_compacted_index(spark: SparkSession) -> str:
-    """The streamed PQ build taken through its maintenance pass:
-    base + 3 streamed ingest partitions folded back to one file per
-    cell and published via the ``_current`` manifest pointer."""
-
-    def _build(tmp: str) -> None:
-        _build_pq_streamed(spark, tmp)
-        similarity.ivf_index_compact(spark, tmp)
-
-    return _build_index_once(
-        _pq_lifecycle_root("compacted"), "_COMPACTED", _build
+    return _pq_search(
+        spark,
+        _ensure_appended(spark, _pq_root("appended"), corpus, _pq_base_build()),
     )
 
 
 def knn_pq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-ingest contract for the PQ index (VERDICT r10 item
-    3), and a VALUE-exact one: after 2/5 of the formula corpus is
-    base-built and the other 3/5 drains through three
-    ``pq_ingest_stream`` micro-batches (frozen centroids + codebooks,
-    marker/commit protocol, idempotent per-batch partitions), the
-    persisted pruned search must return EXACTLY what the in-memory
-    IVF-PQ composition computes over the FULL corpus — the oracle is
-    ``knn_ivf_pq_exact``'s string verbatim, so a lost row, a
-    double-applied replay, or an append-side encode drift breaks the
-    hash (stronger than the scalar index's boolean identity contract).
-    Batch mechanics (>= 3 genuine micro-batches, restart-replay,
-    marker skips) are pinned in tests/test_ivf_persist.py."""
-    path = _ensure_pq_streamed_index(spark)
+    """Streaming-ingest contract for the PQ index, and a VALUE-exact
+    one: after 3/5 of the formula corpus is base-built and the other
+    2/5 drains through two ``ingest_stream`` micro-batches (frozen
+    centroids + codebooks, marker/commit protocol, idempotent
+    per-batch partitions), the persisted pruned search must return
+    EXACTLY what the in-memory IVF-PQ composition computes over the
+    FULL corpus — the oracle is ``knn_ivf_pq_exact``'s string
+    verbatim, so a lost row, a double-applied replay, or an
+    append-side encode drift breaks the hash (stronger than the int8
+    index's boolean identity contract). Batch mechanics
+    (restart-replay, marker skips) are pinned in
+    tests/test_ivf_persist.py."""
     corpus, _ = _manycell_corpora(spark)
-    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, _cells = similarity.knn_pq_persisted(
-        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
+    return _pq_search(
+        spark,
+        _ensure_streamed(spark, _pq_root("streamed"), corpus, _pq_base_build()),
     )
-    return res
 
 
 def knn_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ-index MAINTENANCE contract: the streamed build's ingest
     partitions folded to one file per cell (``ivf_index_compact`` —
-    the same generic pass as the scalar index) and published via the
+    the same pass as the int8 index) and published via the
     object-store-safe ``_current`` manifest pointer, then searched
     through the repointed generation directory. Held to the SAME
     value-exact oracle string as the streamed and in-memory rows:
@@ -1867,13 +1702,13 @@ def knn_pq_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     Layout assertions (file-count reduction, pointer generation, old
     generation removed, markers retained) are pinned in
     tests/test_ivf_persist.py."""
-    path = _ensure_pq_compacted_index(spark)
     corpus, _ = _manycell_corpora(spark)
-    queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    res, _cells = similarity.knn_pq_persisted(
-        spark, path, queries, k=K, n_probe=IVFPQ_PROBE
+    return _pq_search(
+        spark,
+        _ensure_compacted(
+            spark, _pq_root("compacted"), corpus, _pq_base_build()
+        ),
     )
-    return res
 
 
 def knn_pq_fitted_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1942,7 +1777,7 @@ def _ensure_manycell_tuned_index(spark: SparkSession) -> str:
     path = (
         "/tmp/spark_graft_ivf_tuned/"
         f"c{MANYCELL_CLUSTERS}x{MANYCELL_PER_CLUSTER}d{MANYCELL_DIM}"
-        f"s{int(MANYCELL_SPREAD * 100)}-cells{MANYCELL_CELLS}L5"
+        f"s{int(MANYCELL_SPREAD * 100)}-cells{MANYCELL_CELLS}L6"
     )
     return _build_index_once(
         path,
@@ -1965,7 +1800,7 @@ def knn_ivf_persisted_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     doesn't hold — derives the recall curve (one truth pass + one
     routing pass, the retention theorem), and records the tuned depth
     at the index's ``_tuning`` file, where production searches read
-    it: ``knn_ivf_persisted(n_probe=None)`` then searches at that
+    it: ``knn_persisted(n_probe=None)`` then searches at that
     recorded default. The row pins (a) the tuned depth / hits / truth
     size — VALUE-exact, the oracle replays the whole derivation from
     the replicated corpus formula and closed-form centers
@@ -1981,16 +1816,16 @@ def knn_ivf_persisted_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     p, hits, n_truth = similarity.tune_index_n_probe(
         spark, path, raw, queries, k=K, target_recall=PROBE_TUNE_TARGET
     )
-    res_tuned, _cells = similarity.knn_ivf_persisted(
+    res_tuned, _cells = similarity.knn_persisted(
         spark, path, queries, k=K, n_probe=None
     )
-    res_explicit, _ = similarity.knn_ivf_persisted(
+    res_explicit, _ = similarity.knn_persisted(
         spark, path, queries, k=K, n_probe=p
     )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
+    _, codec = similarity.open_index(spark, path)
     mem = similarity.knn_ivf_quantized(
-        raw, queries, k=K, n_cells=n_cells, n_probe=p,
-        centroids=cents, ranges=ranges,
+        raw, queries, k=K, n_cells=codec.n_cells, n_probe=p,
+        centroids=codec.centroids, ranges=codec.ranges_frame(spark),
     )
     used_default = (
         res_tuned.exceptAll(res_explicit)

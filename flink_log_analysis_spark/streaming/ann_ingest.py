@@ -2,19 +2,18 @@
 
 Completes the persisted index lifecycle (``similarity.py``: build once
 -> append batches -> search many) with the STREAMING ingest path a
-production corpus actually has, for BOTH persisted layouts — the
-scalar-IVF index (``ivf_ingest_stream``) and the PQ index
-(``pq_ingest_stream``): embedding batches arrive on a stream, each
-micro-batch assigns to the index's frozen centroids, codes with its
-frozen codebook(s), and lands in its own ``ingest=<stream>-b<batch>``
-partition touching only the cells it contains — the index absorbs the
-stream without a rebuild. The marker/commit protocol is ONE shared
-implementation (``_append_batch`` / ``_ingest_stream``); the layouts
-differ only in the append projection.
+production corpus actually has, for every index codec (int8, PQ raw,
+PQ residual — the store reads it from the index): embedding batches
+arrive on a stream, each micro-batch assigns to the index's frozen
+centroids, encodes with its frozen codec, and lands in its own
+``ingest=<stream>-b<batch>`` partition touching only the cells it
+contains — the index absorbs the stream without a rebuild. One
+marker/commit protocol (:func:`append_batch` / :func:`ingest_stream`)
+over the one store append (``similarity.index_append``).
 
 Exactly-once at the sink comes from the WRITE, not from bookkeeping:
 each micro-batch's partition key is deterministic, and the append uses
-dynamic-partition OVERWRITE (``ivf_index_append(ingest_key=...)``), so
+dynamic-partition OVERWRITE (``index_append(ingest_key=...)``), so
 a batch replayed after a crash — whether the crash hit mid-write or
 after the write but before any marker — REPLACES its own partition
 instead of duplicating rows. The commit markers under
@@ -31,7 +30,7 @@ resumes from the checkpoint with replays overwriting idempotently.
 Marker IO goes through :mod:`..sources.fsio` (Hadoop FileSystem API),
 so an index rooted on any Hadoop-supported filesystem records and
 lists its commits the same way the vectors are written — the marker
-layer is not silently local-only (r9 advisory).
+layer is not silently local-only.
 """
 
 from __future__ import annotations
@@ -75,26 +74,25 @@ def committed_batches(
     return sorted(out)
 
 
-def _append_batch(
+def append_batch(
     spark: SparkSession,
     index_path: str,
     batch_df: DataFrame,
     batch_id: int,
     ingest_id: str,
-    append_fn,
-    id_col: str,
-    vec_col: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> bool:
-    """One ingest step — the marker protocol, shared by the scalar-IVF
-    and PQ ingest paths (``append_fn`` is the layout-specific append).
-    The marker skip is scoped to THIS ingest id (a different stream's
-    batch 0 is a different batch); a replay that races past a missing
-    marker is still safe because the write overwrites its own
-    deterministic partition. Returns whether a write ran."""
+    """One ingest step — the marker protocol around
+    ``similarity.index_append``. The marker skip is scoped to THIS
+    ingest id (a different stream's batch 0 is a different batch); a
+    replay that races past a missing marker is still safe because the
+    write overwrites its own deterministic partition. Returns whether
+    a write ran."""
     marker = f"{index_path}/{COMMITS_DIR}/{ingest_id}-batch-{batch_id}"
     if fsio.exists(marker, spark):
         return False
-    append_fn(
+    similarity.index_append(
         spark,
         index_path,
         batch_df,
@@ -106,45 +104,14 @@ def _append_batch(
     return True
 
 
-def ivf_append_batch(
-    spark: SparkSession,
-    index_path: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    ingest_id: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> bool:
-    return _append_batch(
-        spark, index_path, batch_df, batch_id, ingest_id,
-        similarity.ivf_index_append, id_col, vec_col,
-    )
-
-
-def pq_append_batch(
-    spark: SparkSession,
-    index_path: str,
-    batch_df: DataFrame,
-    batch_id: int,
-    ingest_id: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> bool:
-    return _append_batch(
-        spark, index_path, batch_df, batch_id, ingest_id,
-        similarity.pq_index_append, id_col, vec_col,
-    )
-
-
-def _ingest_stream(
+def ingest_stream(
     spark: SparkSession,
     index_path: str,
     stream_df: DataFrame,
     checkpoint_dir: str,
-    append_batch_fn,
-    id_col: str,
-    vec_col: str,
-    timeout_sec: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    timeout_sec: int = 600,
 ) -> list[int]:
     """Drain a stream of embedding rows into a persisted index with
     ``availableNow`` (process everything currently available, then
@@ -153,7 +120,7 @@ def _ingest_stream(
     ingest_id = stream_ingest_id(checkpoint_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        append_batch_fn(
+        append_batch(
             spark,
             index_path,
             batch_df,
@@ -176,36 +143,3 @@ def _ingest_stream(
             f"{timeout_sec}s"
         )
     return committed_batches(index_path, ingest_id)
-
-
-def ivf_ingest_stream(
-    spark: SparkSession,
-    index_path: str,
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    timeout_sec: int = 600,
-) -> list[int]:
-    return _ingest_stream(
-        spark, index_path, stream_df, checkpoint_dir,
-        ivf_append_batch, id_col, vec_col, timeout_sec,
-    )
-
-
-def pq_ingest_stream(
-    spark: SparkSession,
-    index_path: str,
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    timeout_sec: int = 600,
-) -> list[int]:
-    """The PQ index's streaming ingest — identical marker/commit
-    protocol, layout-specific append (assign with the persisted
-    centroids, encode with the persisted codebooks)."""
-    return _ingest_stream(
-        spark, index_path, stream_df, checkpoint_dir,
-        pq_append_batch, id_col, vec_col, timeout_sec,
-    )

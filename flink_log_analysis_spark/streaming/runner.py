@@ -124,6 +124,53 @@ def client_ip_access_agg(logs: DataFrame) -> DataFrame:
     )
 
 
+def _start_batch_stream(
+    agg_df: DataFrame,
+    prepare,
+    sink,
+    checkpoint_dir: str,
+    top_k: int | None,
+    order_by: list | None,
+    stat_time: str | None,
+    available_now: bool,
+    query_name: str | None,
+):
+    """The upsert-stream wiring shared by both starters: per
+    micro-batch, ``prepare(batch_df)`` (None: the batch as is), then
+    the optional ``ORDER BY ... LIMIT top_k``, the ``statistic_time``
+    stamp, and the sink; complete output mode under ``top_k``, update
+    mode otherwise."""
+    if top_k is not None and not order_by:
+        # Validate now: inside the foreachBatch closure this would only
+        # surface as an opaque mid-stream StreamingQueryException.
+        raise ValueError("top_k requires order_by (a total tie-break order)")
+
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        out = batch_df if prepare is None else prepare(batch_df)
+        if top_k is not None:
+            out = out.orderBy(*order_by).limit(top_k)
+        if stat_time is None:
+            out = out.withColumn(
+                "statistic_time",
+                F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
+            )
+        else:
+            out = out.withColumn("statistic_time", F.lit(stat_time))
+        sink(out, batch_id)
+
+    mode = "complete" if top_k is not None else "update"
+    writer = (
+        agg_df.writeStream.outputMode(mode)
+        .foreachBatch(apply)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if query_name:
+        writer = writer.queryName(query_name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def start_upsert_stream(
     agg_df: DataFrame,
     sink,
@@ -143,36 +190,10 @@ def start_upsert_stream(
     deterministic tests; None stamps real wall-clock per batch, which
     is the reference's ``FROM_UNIXTIME(UNIX_TIMESTAMP())``.
     """
-    if top_k is not None and not order_by:
-        # Validate now: inside the foreachBatch closure this would only
-        # surface as an opaque mid-stream StreamingQueryException.
-        raise ValueError("top_k requires order_by (a total tie-break order)")
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        out = batch_df
-        if top_k is not None:
-            out = out.orderBy(*order_by).limit(top_k)
-        ts = stat_time
-        if ts is None:
-            out = out.withColumn(
-                "statistic_time",
-                F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
-            )
-        else:
-            out = out.withColumn("statistic_time", F.lit(ts))
-        sink(out, batch_id)
-
-    mode = "complete" if top_k is not None else "update"
-    writer = (
-        agg_df.writeStream.outputMode(mode)
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_batch_stream(
+        agg_df, None, sink, checkpoint_dir, top_k, order_by, stat_time,
+        available_now, query_name,
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def start_lookup_upsert_stream(
@@ -204,40 +225,17 @@ def start_lookup_upsert_stream(
     callable ``(batch_df, dim_df) -> list[Column]`` projecting the
     sink schema.
     """
-    if top_k is not None and not order_by:
-        # Same construction-time guard as start_upsert_stream: inside
-        # foreachBatch, orderBy(*None) surfaces only as an opaque
-        # mid-stream StreamingQueryException at the first micro-batch.
-        raise ValueError("top_k requires order_by (a total tie-break order)")
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
+    def join_dim(batch_df: DataFrame) -> DataFrame:
         dim = dim_cache.get()
-        out = batch_df.join(
+        return batch_df.join(
             F.broadcast(dim), join_expr(batch_df, dim), "inner"
         ).select(*select_cols(batch_df, dim))
-        if top_k is not None:
-            out = out.orderBy(*order_by).limit(top_k)
-        ts = stat_time
-        if ts is None:
-            out = out.withColumn(
-                "statistic_time",
-                F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"),
-            )
-        else:
-            out = out.withColumn("statistic_time", F.lit(ts))
-        sink(out, batch_id)
 
-    mode = "complete" if top_k is not None else "update"
-    writer = (
-        agg_df.writeStream.outputMode(mode)
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir)
+    return _start_batch_stream(
+        agg_df, join_dim, sink, checkpoint_dir, top_k, order_by, stat_time,
+        available_now, query_name,
     )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_log_job(

@@ -1,6 +1,8 @@
-"""Persisted IVF index: layout, partition-pruned reads, and identity
-with the in-memory composition (operators/similarity.py
-write_ivf_index / knn_ivf_persisted).
+"""Persisted ANN index store: layout, partition-pruned reads, the
+lifecycle (append / stream ingest / compaction / vacuum), and identity
+with the in-memory compositions, for the int8 and PQ codecs
+(operators/similarity.py write_ivf_index / write_pq_index /
+knn_persisted / index_append, streaming/ann_ingest.py).
 
 The load-bearing assertion is the PLAN one: the search's vector scan
 must show a PartitionFilters entry on ``cell`` (files outside the
@@ -9,6 +11,8 @@ negative control — same pattern as tests/test_bucketing.py.
 """
 
 import os
+import re
+from typing import Callable, NamedTuple
 
 import pytest
 from pyspark.sql import functions as F
@@ -45,10 +49,70 @@ def index_path(spark, sf_dir, tmp_path_factory):
     return path
 
 
+class _Case(NamedTuple):
+    """One codec's lifecycle-test setup: the corpus, the query set,
+    the cell count, ``build(df, path)`` writing the base index, and
+    ``mem(path)`` — the in-memory composition over the FULL corpus
+    under the index's own fit artifacts."""
+
+    codec: str
+    corpus: object
+    queries: object
+    n_cells: int
+    build: Callable
+    mem: Callable
+
+
+def _case(spark, sf_dir, codec: str, n_cells: int = 4) -> _Case:
+    """int8: the testdata embeddings, a fitted ``n_cells``-cell index.
+    PQ: a small formula corpus (8 clusters x 16) with its closed-form
+    centers and constructed codebooks — both sides value-exact."""
+    if codec == "int8":
+        emb = read_table(spark, sf_dir, "embeddings")
+        queries = emb.filter(F.col("vec_id") < 4)
+
+        def mem(path):
+            _, c = similarity.open_index(spark, path)
+            return similarity.knn_ivf_quantized(
+                emb, queries, k=K, n_cells=c.n_cells, n_probe=2,
+                centroids=c.centroids, ranges=c.ranges_frame(spark),
+            )
+
+        return _Case(
+            codec, emb, queries, n_cells,
+            lambda df, path: similarity.write_ivf_index(
+                df, path, n_cells=n_cells, seed=42
+            ),
+            mem,
+        )
+    corpus, centers, books = _pq_artifacts(spark)
+    queries = corpus.filter("vec_id % 32 = 0")
+    return _Case(
+        codec, corpus, queries, 8,
+        lambda df, path: similarity.write_pq_index(df, path, centers, books),
+        lambda path: similarity.knn_ivf_pq(
+            corpus, queries, centers, books, k=K, n_probe=2
+        ),
+    )
+
+
+def _pq_artifacts(spark):
+    corpus = similarity.clustered_corpus(
+        spark, n_clusters=8, per_cluster=16, dim=8, spread=0.3
+    ).localCheckpoint()
+    centers = similarity.clustered_corpus_centers(n_clusters=8, dim=8)
+    books = similarity.constructed_pq_codebooks(4, 8, 2)
+    return corpus, centers, books
+
+
+def _assert_same(res, mem) -> None:
+    assert res.exceptAll(mem).count() == 0
+    assert mem.exceptAll(res).count() == 0
+
+
 def test_layout_cell_partitioned(spark, index_path):
     # two-level layout: base build under ingest=base, cells below it;
-    # the fresh build staged into a uuid-unique generation (never the
-    # shared name 'vectors' — two concurrent builds can't collide) and
+    # the fresh build staged into a uuid-unique generation and
     # published it via the pointer
     live = _live(spark, index_path)
     assert os.path.basename(live).startswith("vectors-g1p")
@@ -61,28 +125,29 @@ def test_layout_cell_partitioned(spark, index_path):
 
 
 def test_meta_roundtrip(spark, index_path):
-    centroids, _, ranges, n_cells = similarity.read_ivf_meta(
-        spark, index_path
-    )
-    assert n_cells == N_CELLS
-    assert len(centroids) == N_CELLS
-    r = ranges.collect()[0]
-    assert len(r["mn_arr"]) == len(centroids[0])
+    _, codec = similarity.open_index(spark, index_path)
+    assert codec.codebooks is None and not codec.residual
+    assert codec.n_cells == N_CELLS
+    assert len(codec.centroids) == N_CELLS
+    r = codec.ranges_frame(spark).collect()[0]
+    assert len(r["mn_arr"]) == len(codec.centroids[0])
 
 
 def test_search_scan_is_partition_pruned(spark, sf_dir, index_path):
     emb = read_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 4)
-    res, cells = similarity.knn_ivf_persisted(
+    res, cells = similarity.knn_persisted(
         spark, index_path, queries, k=K, n_probe=2
     )
     # a 4-query x 2-probe batch cannot cover all 16 cells
     assert 0 < len(cells) < N_CELLS
+    _assert_plan_pruned(spark, index_path, cells)
+
+
+def _assert_plan_pruned(spark, path, cells) -> None:
     # the pruned scan is visible in the plan: the parquet scan node
     # carries a PartitionFilters entry over the cell column...
-    filtered = _vecs(spark, index_path).filter(
-        F.col("cell").isin(cells)
-    )
+    filtered = _vecs(spark, path).filter(F.col("cell").isin(cells))
     plan = _plan(filtered)
     assert "PartitionFilters" in plan, plan
     pf_line = next(
@@ -92,7 +157,7 @@ def test_search_scan_is_partition_pruned(spark, sf_dir, index_path):
     # ...and the negative control (no cell predicate) shows an EMPTY
     # PartitionFilters — the pruning comes from the predicate, not
     # from the layout alone.
-    unfiltered_plan = _plan(_vecs(spark, index_path))
+    unfiltered_plan = _plan(_vecs(spark, path))
     neg = next(
         (ln for ln in unfiltered_plan.splitlines()
          if "PartitionFilters" in ln),
@@ -101,37 +166,51 @@ def test_search_scan_is_partition_pruned(spark, sf_dir, index_path):
     assert "[]" in neg, neg
 
 
-def test_persisted_matches_inmemory(spark, sf_dir, index_path):
-    """Codes on disk lose nothing: the pruned-scan search returns
-    byte-identical rows to knn_ivf_quantized over the same fit."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 4)
-    res, _ = similarity.knn_ivf_persisted(
-        spark, index_path, queries, k=K, n_probe=2
+def _check_persisted_matches_inmemory(spark, case: _Case, path: str) -> None:
+    """Codes on disk lose nothing: the meta round-trips the codec, the
+    search scan is partition-pruned, and the pruned-scan search returns
+    byte-identical rows to the in-memory composition over the same
+    fit."""
+    _, codec = similarity.open_index(spark, path)
+    assert codec.n_cells == case.n_cells
+    if case.codec == "pq":
+        _, centers, books = _pq_artifacts(spark)
+        assert codec.centroids == centers and codec.codebooks == books
+    res, cells = similarity.knn_persisted(
+        spark, path, case.queries, k=K, n_probe=2
     )
-    centroids, _, _, n_cells = similarity.read_ivf_meta(spark, index_path)
-    mem = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_cells=n_cells, n_probe=2, centroids=centroids
-    )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
+    assert 0 < len(cells) < case.n_cells
+    _assert_plan_pruned(spark, path, cells)
+    _assert_same(res, case.mem(path))
     assert res.count() == 4 * K
 
 
-def test_append_ingests_without_refit(spark, sf_dir, tmp_path):
-    """ivf_index_append: base index from part of the corpus, append
-    the rest — every row indexed, appended rows land in existing cell
-    partitions, and the pruned search over the appended index matches
-    the in-memory composition under the SAME fit artifacts."""
-    emb = read_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "appendix")
-    base = emb.filter(F.col("vec_id") % 5 != 3)
-    incoming = emb.filter(F.col("vec_id") % 5 == 3)
-    similarity.write_ivf_index(base, path, n_cells=N_CELLS, seed=42)
-    similarity.ivf_index_append(spark, path, incoming)
+def test_persisted_matches_inmemory(spark, sf_dir, index_path):
+    case = _case(spark, sf_dir, "int8", n_cells=N_CELLS)
+    _check_persisted_matches_inmemory(spark, case, index_path)
+
+
+def test_pq_persisted_pruned_and_matches_inmemory(spark, sf_dir, tmp_path):
+    case = _case(spark, sf_dir, "pq")
+    idx = str(tmp_path / "pqidx")
+    case.build(case.corpus, idx)
+    _check_persisted_matches_inmemory(spark, case, idx)
+
+
+def _check_append(spark, case: _Case, path: str) -> None:
+    """index_append: base index from 4/5 of the corpus, append the
+    rest — every row indexed, appended rows land in existing cell
+    partitions (assigned with the persisted centroids, encoded with
+    the persisted codec), and the pruned search over the appended
+    index matches the in-memory composition under the SAME fit
+    artifacts."""
+    corpus = case.corpus
+    incoming = corpus.filter(F.col("vec_id") % 5 == 3)
+    case.build(corpus.filter(F.col("vec_id") % 5 != 3), path)
+    similarity.index_append(spark, path, incoming)
 
     vecs = _vecs(spark, path)
-    assert vecs.count() == emb.count()
+    assert vecs.count() == corpus.count()
     # no new cell directories appeared: append assigns to EXISTING
     # cells (checked across every ingest= partition of the live gen)
     live = _live(spark, path)
@@ -142,24 +221,25 @@ def test_append_ingests_without_refit(spark, sf_dir, tmp_path):
         for d in os.listdir(f"{live}/{ing}")
         if d.startswith("cell=")
     }
-    assert cells <= set(range(N_CELLS))
+    assert cells <= set(range(case.n_cells))
     # appended ids are present and searchable
-    n_inc = incoming.count()
     assert vecs.join(
         incoming.select("vec_id"), "vec_id"
-    ).count() == n_inc
+    ).count() == incoming.count()
+    res, probed = similarity.knn_persisted(
+        spark, path, case.queries, k=K, n_probe=2
+    )
+    assert 0 < len(probed) < case.n_cells
+    _assert_same(res, case.mem(path))
 
-    queries = emb.filter(F.col("vec_id") < 4)
-    res, _ = similarity.knn_ivf_persisted(
-        spark, path, queries, k=K, n_probe=2
-    )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_cells=n_cells, n_probe=2,
-        centroids=cents, ranges=ranges,
-    )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
+
+def test_append_ingests_without_refit(spark, sf_dir, tmp_path):
+    case = _case(spark, sf_dir, "int8", n_cells=N_CELLS)
+    _check_append(spark, case, str(tmp_path / "appendix"))
+
+
+def test_pq_append_ingests_without_refit(spark, sf_dir, tmp_path):
+    _check_append(spark, _case(spark, sf_dir, "pq"), str(tmp_path / "pqidx"))
 
 
 def test_ensure_index_recovers_from_torn_build(spark, monkeypatch, tmp_path):
@@ -175,8 +255,8 @@ def test_ensure_index_recovers_from_torn_build(spark, monkeypatch, tmp_path):
     assert path == fake
     assert os.path.exists(f"{fake}/_BUILT")
     # the rebuilt meta is readable — the wedge the guard prevents
-    _, _, _, n_cells = similarity.read_ivf_meta(spark, fake)
-    assert n_cells == plan.IVF_INDEX_CELLS
+    _, codec = similarity.open_index(spark, fake)
+    assert codec.n_cells == plan.IVF_INDEX_CELLS
 
 
 def test_ensure_index_prunes_stale_fingerprints(spark, monkeypatch, tmp_path):
@@ -205,58 +285,60 @@ def test_ensure_index_prunes_stale_fingerprints(spark, monkeypatch, tmp_path):
     assert plan._ensure_ivf_index(spark, "/root/testdata/sf0.001") == fresh
 
 
-def test_stream_ingest_with_checkpoint_restart(spark, sf_dir, tmp_path):
+def _drain(spark, case: _Case, idx: str, inputs: str, ckpt: str) -> list[int]:
+    from flink_log_analysis_spark.streaming.ann_ingest import ingest_stream
+
+    stream = (
+        spark.readStream.schema(case.corpus.schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(inputs)
+    )
+    return ingest_stream(spark, idx, stream, ckpt)
+
+
+def _arrive(case: _Case, inputs: str, rem: int, name: str) -> None:
+    case.corpus.filter(F.col("vec_id") % 5 == rem).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{inputs}/{name}")
+
+
+def _check_stream_restart(spark, case: _Case, tmp_path) -> None:
     """Streaming ANN ingest (streaming/ann_ingest.py): batches drain
     through foreachBatch into the persisted index; a RESTART on the
     same checkpoint processes only new files; a replayed batch_id is
-    skipped (durable markers); and the stream-final index search
-    equals the in-memory composition over the full corpus under the
-    same fit artifacts."""
+    skipped (durable markers) and a marker-less replay overwrites its
+    own partition; the stream-final index search equals the in-memory
+    composition over the full corpus under the same fit artifacts;
+    and a second stream's batch 0 is a different batch."""
     from flink_log_analysis_spark.streaming.ann_ingest import (
+        append_batch,
         committed_batches,
-        ivf_append_batch,
-        ivf_ingest_stream,
         stream_ingest_id,
     )
 
-    emb = read_table(spark, sf_dir, "embeddings")
+    corpus = case.corpus
     idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(
-        emb.filter(F.col("vec_id") % 5 < 3), idx, n_cells=4, seed=42
-    )
+    case.build(corpus.filter(F.col("vec_id") % 5 < 3), idx)
     base_count = _vecs(spark, idx).count()
     inputs, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
 
-    def arrive(rem: int, name: str) -> None:
-        emb.filter(F.col("vec_id") % 5 == rem).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{inputs}/{name}")
-
-    def drain() -> list[int]:
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(inputs)
-        )
-        return ivf_ingest_stream(spark, idx, stream, ckpt)
-
-    arrive(3, "b0")
-    assert drain() == [0]
+    _arrive(case, inputs, 3, "b0")
+    assert _drain(spark, case, idx, inputs, ckpt) == [0]
     count_after_b0 = _vecs(spark, idx).count()
     assert count_after_b0 > base_count
     # restart on the same checkpoint: only the NEW file is processed
-    arrive(4, "b1")
-    assert drain() == [0, 1]
+    _arrive(case, inputs, 4, "b1")
+    assert _drain(spark, case, idx, inputs, ckpt) == [0, 1]
     total = _vecs(spark, idx).count()
-    assert total == emb.count()
+    assert total == corpus.count() > count_after_b0
     # idle restart: nothing new, nothing re-appended
-    assert drain() == [0, 1]
+    assert _drain(spark, case, idx, inputs, ckpt) == [0, 1]
     assert _vecs(spark, idx).count() == total
     ingest = stream_ingest_id(ckpt)
     # forced replay of a committed batch id: marker-skipped, unchanged
-    replayed = ivf_append_batch(
-        spark, idx, emb.filter(F.col("vec_id") % 5 == 3),
+    replayed = append_batch(
+        spark, idx, corpus.filter(F.col("vec_id") % 5 == 3),
         batch_id=0, ingest_id=ingest,
     )
     assert replayed is False
@@ -265,73 +347,64 @@ def test_stream_ingest_with_checkpoint_restart(spark, sf_dir, tmp_path):
     # deterministic partition overwrite replaces the batch's own rows
     # — no duplicates, same total
     os.remove(f"{idx}/_ingest_commits/{ingest}-batch-0")
-    assert ivf_append_batch(
-        spark, idx, emb.filter(F.col("vec_id") % 5 == 3),
+    assert append_batch(
+        spark, idx, corpus.filter(F.col("vec_id") % 5 == 3),
         batch_id=0, ingest_id=ingest,
     ) is True
     assert _vecs(spark, idx).count() == total
     assert committed_batches(idx, ingest) == [0, 1]
     # stream-final identity with the in-memory composition
-    queries = emb.filter(F.col("vec_id") < 3)
-    res, _ = similarity.knn_ivf_persisted(
-        spark, idx, queries, k=K, n_probe=2
+    res, _ = similarity.knn_persisted(
+        spark, idx, case.queries, k=K, n_probe=2
     )
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, idx)
-    mem = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_cells=n_cells, n_probe=2,
-        centroids=cents, ranges=ranges,
-    )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
+    _assert_same(res, case.mem(idx))
     # a SECOND stream into the same index restarts batch ids at 0:
     # its batch 0 is a DIFFERENT batch (different ingest id), so it
     # must neither be skipped by the first stream's marker nor
-    # overwrite the first stream's partition (r9 review finding)
+    # overwrite the first stream's partition
     other = stream_ingest_id(str(tmp_path / "ck2"))
-    batch2 = emb.filter(F.col("vec_id") % 5 == 2)
-    assert ivf_append_batch(
+    batch2 = corpus.filter(F.col("vec_id") % 5 == 2)
+    assert append_batch(
         spark, idx, batch2, batch_id=0, ingest_id=other
     ) is True
-    assert (
-        _vecs(spark, idx).count()
-        == total + batch2.count()
-    )
+    assert _vecs(spark, idx).count() == total + batch2.count()
     assert committed_batches(idx, other) == [0]
     assert committed_batches(idx) == [0, 0, 1]
 
 
-def test_compact_folds_ingests_preserving_search(spark, sf_dir, tmp_path):
-    """ivf_index_compact: after >=3 streamed micro-batches the index
+def test_stream_ingest_with_checkpoint_restart(spark, sf_dir, tmp_path):
+    _check_stream_restart(spark, _case(spark, sf_dir, "int8"), tmp_path)
+
+
+def test_pq_stream_ingest_restart_and_replay(spark, sf_dir, tmp_path):
+    _check_stream_restart(spark, _case(spark, sf_dir, "pq"), tmp_path)
+
+
+def _check_compaction(spark, case: _Case, tmp_path) -> None:
+    """ivf_index_compact: after 3 streamed micro-batches the index
     holds base + 3 ingest partitions; compaction folds them into the
-    base cell layout with byte-identical search results, a reduced
-    file count, and the commit markers (the post-compaction replay
-    guard) intact."""
+    base cell layout in the next generation (manifest-pointer
+    repoint, reader grace keeps the old one) with byte-identical
+    search results, a reduced file count, and the commit markers (the
+    post-compaction replay guard) intact. A re-run has nothing to
+    fold; a post-compaction append lands in the LIVE generation, and a
+    second compaction advances it again, trimming the oldest."""
     from flink_log_analysis_spark.streaming.ann_ingest import (
+        append_batch,
         committed_batches,
-        ivf_ingest_stream,
+        stream_ingest_id,
     )
 
-    emb = read_table(spark, sf_dir, "embeddings")
+    corpus = case.corpus
     idx = str(tmp_path / "idx")
-    similarity.write_ivf_index(
-        emb.filter(F.col("vec_id") % 5 < 2), idx, n_cells=4, seed=42
-    )
+    case.build(corpus.filter(F.col("vec_id") % 5 < 2), idx)
     inputs, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
     for i, rem in enumerate((2, 3, 4)):
-        emb.filter(F.col("vec_id") % 5 == rem).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{inputs}/b{i}")
-    stream = (
-        spark.readStream.schema(emb.schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .parquet(inputs)
-    )
-    assert ivf_ingest_stream(spark, idx, stream, ckpt) == [0, 1, 2]
+        _arrive(case, inputs, rem, f"b{i}")
+    assert _drain(spark, case, idx, inputs, ckpt) == [0, 1, 2]
     total = _vecs(spark, idx).count()
-    queries = emb.filter(F.col("vec_id") < 4)
-    pre, pre_cells = similarity.knn_ivf_persisted(
-        spark, idx, queries, k=K, n_probe=2
+    pre, pre_cells = similarity.knn_persisted(
+        spark, idx, case.queries, k=K, n_probe=2
     )
     pre_rows = sorted(map(tuple, pre.collect()))
     pre_gen = _live(spark, idx)
@@ -346,9 +419,9 @@ def test_compact_folds_ingests_preserving_search(spark, sf_dir, tmp_path):
     assert stats["rows"] == total
     # manifest-pointer publish: the consolidated layout lives in the
     # next GENERATION directory and _current repoints readers (no
-    # directory rename anywhere)
+    # directory rename anywhere); uuid-unique staging, one generation
+    # past the base build's g1
     live = similarity.vectors_dir(spark, idx)
-    # uuid-unique staging, one generation past the base build's g1
     assert live.startswith(f"{idx}/vectors-g2p")
     # reader grace: the superseded generation SURVIVES the repoint (a
     # reader that resolved the old pointer mid-scan still completes —
@@ -359,23 +432,44 @@ def test_compact_folds_ingests_preserving_search(spark, sf_dir, tmp_path):
     assert os.path.isdir(f"{live}/_meta")
     # layout folded to the base ingest only; cells unchanged
     assert {
-        d
-        for d in os.listdir(live)
-        if d.startswith("ingest=")
+        d for d in os.listdir(live) if d.startswith("ingest=")
     } == {"ingest=base"}
     assert spark.read.parquet(live).count() == total
     # search identity + unchanged pruning
-    post, post_cells = similarity.knn_ivf_persisted(
-        spark, idx, queries, k=K, n_probe=2
+    post, post_cells = similarity.knn_persisted(
+        spark, idx, case.queries, k=K, n_probe=2
     )
     assert sorted(map(tuple, post.collect())) == pre_rows
     assert post_cells == pre_cells
     # markers survive: a restarted stream still skips committed batches
+    ingest = stream_ingest_id(ckpt)
     assert committed_batches(idx) == [0, 1, 2]
+    assert committed_batches(idx, ingest) == [0, 1, 2]
     # idempotent re-run: nothing left to fold
     again = similarity.ivf_index_compact(spark, idx)
     assert again["ingests_folded"] == 0
     assert again["files_after"] == stats["files_after"]
+    # post-compaction ingest lands in the live generation...
+    assert append_batch(
+        spark, idx, corpus.filter(F.col("vec_id") % 5 == 0),
+        batch_id=3, ingest_id=ingest,
+    ) is True
+    assert spark.read.parquet(live).count() > total
+    # ...and the next compaction advances the generation once more;
+    # the grace window (newest 1 superseded) keeps g2 and trims g1
+    stats2 = similarity.ivf_index_compact(spark, idx)
+    assert stats2["ingests_folded"] == 2
+    live2 = similarity.vectors_dir(spark, idx)
+    assert live2.startswith(f"{idx}/vectors-g3p")
+    assert os.path.isdir(live) and not os.path.exists(pre_gen)
+
+
+def test_compact_folds_ingests_preserving_search(spark, sf_dir, tmp_path):
+    _check_compaction(spark, _case(spark, sf_dir, "int8"), tmp_path)
+
+
+def test_pq_compact_folds_and_repoints(spark, sf_dir, tmp_path):
+    _check_compaction(spark, _case(spark, sf_dir, "pq"), tmp_path)
 
 
 def test_compact_keep_ingests_exempts_active_stream(spark, sf_dir, tmp_path):
@@ -386,11 +480,11 @@ def test_compact_keep_ingests_exempts_active_stream(spark, sf_dir, tmp_path):
     similarity.write_ivf_index(
         emb.filter(F.col("vec_id") % 5 < 3), idx, n_cells=4, seed=42
     )
-    similarity.ivf_index_append(
+    similarity.index_append(
         spark, idx, emb.filter(F.col("vec_id") % 5 == 3),
         ingest_key="s1-b0",
     )
-    similarity.ivf_index_append(
+    similarity.index_append(
         spark, idx, emb.filter(F.col("vec_id") % 5 == 4),
         ingest_key="live-b0",
     )
@@ -471,7 +565,7 @@ def test_two_streams_interleaved_ingest_one_index(spark, sf_dir, tmp_path):
     composition over the full corpus (VERDICT r9 optional-depth)."""
     from flink_log_analysis_spark.streaming.ann_ingest import (
         committed_batches,
-        ivf_ingest_stream,
+        ingest_stream,
         stream_ingest_id,
     )
 
@@ -493,7 +587,7 @@ def test_two_streams_interleaved_ingest_one_index(spark, sf_dir, tmp_path):
             .option("recursiveFileLookup", "true")
             .parquet(inputs)
         )
-        return ivf_ingest_stream(spark, idx, stream, ckpt)
+        return ingest_stream(spark, idx, stream, ckpt)
 
     in_a, ck_a = str(tmp_path / "in_a"), str(tmp_path / "ck_a")
     in_b, ck_b = str(tmp_path / "in_b"), str(tmp_path / "ck_b")
@@ -527,55 +621,12 @@ def test_two_streams_interleaved_ingest_one_index(spark, sf_dir, tmp_path):
     # both streams' rows are searchable: persisted == in-memory over
     # the FULL corpus under the same fit artifacts
     queries = emb.filter(F.col("vec_id") < 3)
-    res, _ = similarity.knn_ivf_persisted(spark, idx, queries, k=K, n_probe=2)
-    cents, _, ranges, n_cells = similarity.read_ivf_meta(spark, idx)
+    res, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
+    _, codec = similarity.open_index(spark, idx)
     mem = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_cells=n_cells, n_probe=2,
-        centroids=cents, ranges=ranges,
+        emb, queries, k=K, n_cells=codec.n_cells, n_probe=2,
+        centroids=codec.centroids, ranges=codec.ranges_frame(spark),
     )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
-
-
-def test_pq_persisted_pruned_and_matches_inmemory(spark, tmp_path):
-    """The persisted IVF-PQ index: (a) meta round-trips centroids and
-    codebooks exactly, (b) the search scan carries a PartitionFilters
-    entry on cell (negative control: the unfiltered read shows an
-    empty one), and (c) persisted results are byte-identical to the
-    in-memory knn_ivf_pq composition over the same formula artifacts."""
-    corpus = similarity.clustered_corpus(
-        spark, n_clusters=8, per_cluster=16, dim=8, spread=0.3
-    ).localCheckpoint()
-    centers = similarity.clustered_corpus_centers(n_clusters=8, dim=8)
-    books = similarity.constructed_pq_codebooks(4, 8, 2)
-    idx = str(tmp_path / "pqidx")
-    similarity.write_pq_index(corpus, idx, centers, books)
-    got_cents, got_books = similarity.read_pq_meta(spark, idx)
-    assert got_cents == centers and got_books == books
-
-    queries = corpus.filter("vec_id % 32 = 0")
-    res, cells = similarity.knn_pq_persisted(
-        spark, idx, queries, k=K, n_probe=2
-    )
-    assert 0 < len(cells) < 8
-    filtered = _vecs(spark, idx).filter(
-        F.col("cell").isin(cells)
-    )
-    pf = next(
-        ln for ln in _plan(filtered).splitlines()
-        if "PartitionFilters" in ln
-    )
-    assert "cell" in pf and "[]" not in pf, pf
-    neg = next(
-        (ln for ln in _plan(
-            _vecs(spark, idx)).splitlines()
-         if "PartitionFilters" in ln),
-        "PartitionFilters: []",
-    )
-    assert "[]" in neg, neg
-
-    mem = similarity.knn_ivf_pq(corpus, queries, centers, books,
-                                k=K, n_probe=2)
     assert res.exceptAll(mem).count() == 0
     assert mem.exceptAll(res).count() == 0
 
@@ -584,11 +635,7 @@ def _small_pq_fixture(spark, tmp_path):
     """(corpus, centers, books, idx) — a small formula corpus with a
     PQ index base-built from 2/5 of it (the lifecycle tests' shared
     starting point)."""
-    corpus = similarity.clustered_corpus(
-        spark, n_clusters=8, per_cluster=16, dim=8, spread=0.3
-    ).localCheckpoint()
-    centers = similarity.clustered_corpus_centers(n_clusters=8, dim=8)
-    books = similarity.constructed_pq_codebooks(4, 8, 2)
+    corpus, centers, books = _pq_artifacts(spark)
     idx = str(tmp_path / "pqidx")
     similarity.write_pq_index(
         corpus.filter(F.col("vec_id") % 5 < 2), idx, centers, books
@@ -596,174 +643,40 @@ def _small_pq_fixture(spark, tmp_path):
     return corpus, centers, books, idx
 
 
-def test_pq_append_ingests_without_refit(spark, tmp_path):
-    """pq_index_append: an incoming batch assigns to the persisted
-    centroids and encodes with the persisted codebooks; after the
-    remaining corpus is appended, the persisted search is
-    byte-identical to the in-memory composition over the FULL corpus."""
-    corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    similarity.pq_index_append(
-        spark, idx, corpus.filter(F.col("vec_id") % 5 >= 2)
-    )
-    live = similarity.vectors_dir(spark, idx)
-    assert spark.read.parquet(live).count() == corpus.count()
-    queries = corpus.filter("vec_id % 32 = 0")
-    res, cells = similarity.knn_pq_persisted(
-        spark, idx, queries, k=K, n_probe=2
-    )
-    assert 0 < len(cells) < 8
-    mem = similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=K, n_probe=2
-    )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
-
-
-def test_pq_stream_ingest_restart_and_replay(spark, tmp_path):
-    """pq_ingest_stream: the PQ index absorbs a checkpointed stream
-    with the same exactly-once mechanics as the scalar index — a
-    restart processes only new files, a marker-present replay is
-    skipped, a marker-less replay overwrites its own partition."""
-    from flink_log_analysis_spark.streaming.ann_ingest import (
-        committed_batches,
-        pq_append_batch,
-        pq_ingest_stream,
-        stream_ingest_id,
-    )
+def test_unpublished_dir_rejected_and_generation_names(spark, tmp_path):
+    """A directory without a ``_current`` pointer is not an index —
+    not even a pre-pointer layout (codes at ``{path}/vectors``, meta at
+    ``{path}/meta``): search, append and compaction reject it with an
+    error naming the path instead of reading it. Generation names are
+    ``vectors-g<N>p<uuid-token>`` (NOT a pid — containers share low
+    pids across hosts) and parse back to their number regardless of
+    the token."""
+    import shutil
 
     corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    inputs, ckpt = str(tmp_path / "in"), str(tmp_path / "ck")
+    old = str(tmp_path / "old_layout")
+    os.makedirs(old)
+    shutil.copytree(_live(spark, idx), f"{old}/vectors")
+    shutil.move(f"{old}/vectors/_meta", f"{old}/meta")
+    named = pytest.raises(FileNotFoundError, match=re.escape(old))
+    with named:
+        similarity.knn_persisted(spark, old, corpus.limit(1), k=K)
+    with named:
+        similarity.index_append(spark, old, corpus.limit(1))
+    with named:
+        similarity.ivf_index_compact(spark, old)
+    assert sorted(os.listdir(old)) == ["meta", "vectors"]
 
-    def arrive(rem: int, name: str) -> None:
-        corpus.filter(F.col("vec_id") % 5 == rem).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{inputs}/{name}")
-
-    def drain() -> list[int]:
-        stream = (
-            spark.readStream.schema(corpus.schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("recursiveFileLookup", "true")
-            .parquet(inputs)
-        )
-        return pq_ingest_stream(spark, idx, stream, ckpt)
-
-    arrive(2, "b0")
-    arrive(3, "b1")
-    assert drain() == [0, 1]
-    live = similarity.vectors_dir(spark, idx)
-    after_two = spark.read.parquet(live).count()
-    # restart on the same checkpoint: only the NEW file is processed
-    arrive(4, "b2")
-    assert drain() == [0, 1, 2]
-    total = spark.read.parquet(live).count()
-    assert total == corpus.count() > after_two
-    ingest = stream_ingest_id(ckpt)
-    # marker-present replay: skipped, unchanged
-    assert pq_append_batch(
-        spark, idx, corpus.filter(F.col("vec_id") % 5 == 2),
-        batch_id=0, ingest_id=ingest,
-    ) is False
-    # marker-less replay (crash-after-commit window): deterministic
-    # partition overwrite — no duplicates
-    os.remove(f"{idx}/_ingest_commits/{ingest}-batch-0")
-    assert pq_append_batch(
-        spark, idx, corpus.filter(F.col("vec_id") % 5 == 2),
-        batch_id=0, ingest_id=ingest,
-    ) is True
-    assert spark.read.parquet(live).count() == total
-    assert committed_batches(idx, ingest) == [0, 1, 2]
-    # stream-final identity with the in-memory full-corpus composition
-    queries = corpus.filter("vec_id % 32 = 0")
-    res, _ = similarity.knn_pq_persisted(
-        spark, idx, queries, k=K, n_probe=2
+    first = similarity._next_generation(None)
+    assert first.startswith("vectors-g1p") and len(first) > len("vectors-g1p")
+    assert first != similarity._next_generation(None)
+    assert similarity._next_generation(first).startswith("vectors-g2p")
+    assert similarity._next_generation("vectors-g9").startswith("vectors-g10p")
+    assert similarity._next_generation("vectors-g3pabcdef12").startswith(
+        "vectors-g4p"
     )
-    mem = similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=K, n_probe=2
-    )
-    assert res.exceptAll(mem).count() == 0
-    assert mem.exceptAll(res).count() == 0
-
-
-def test_pq_compact_folds_and_repoints(spark, tmp_path):
-    """Compaction on the PQ layout: ingest partitions fold to one
-    file per cell, the manifest pointer repoints to the next
-    generation, the old generation is gone, markers survive, and the
-    search is byte-identical. A post-compaction append lands in the
-    LIVE generation and a second compaction advances it again."""
-    from flink_log_analysis_spark.streaming.ann_ingest import (
-        committed_batches,
-        pq_append_batch,
-        stream_ingest_id,
-    )
-
-    corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    ingest = stream_ingest_id(str(tmp_path / "ck"))
-    for b, rem in enumerate((2, 3, 4)):
-        assert pq_append_batch(
-            spark, idx, corpus.filter(F.col("vec_id") % 5 == rem),
-            batch_id=b, ingest_id=ingest,
-        ) is True
-    total = _vecs(spark, idx).count()
-    queries = corpus.filter("vec_id % 32 = 0")
-    pre, pre_cells = similarity.knn_pq_persisted(
-        spark, idx, queries, k=K, n_probe=2
-    )
-    pre_rows = sorted(map(tuple, pre.collect()))
-
-    base_gen = _live(spark, idx)
-    stats = similarity.ivf_index_compact(spark, idx)
-    assert stats["ingests_folded"] == 4
-    assert stats["files_after"] < stats["files_before"]
-    assert stats["rows"] == total
-    live = similarity.vectors_dir(spark, idx)
-    assert live.startswith(f"{idx}/vectors-g2p")
-    assert os.path.isdir(base_gen)  # reader grace keeps g1
-    assert os.path.isdir(f"{live}/_meta")
-    assert {
-        d for d in os.listdir(live) if d.startswith("ingest=")
-    } == {"ingest=base"}
-    post, post_cells = similarity.knn_pq_persisted(
-        spark, idx, queries, k=K, n_probe=2
-    )
-    assert sorted(map(tuple, post.collect())) == pre_rows
-    assert post_cells == pre_cells
-    assert committed_batches(idx, ingest) == [0, 1, 2]
-    # post-compaction ingest lands in the live generation...
-    assert pq_append_batch(
-        spark, idx, corpus.filter(F.col("vec_id") % 5 == 0),
-        batch_id=3, ingest_id=ingest,
-    ) is True
-    assert spark.read.parquet(live).count() > total
-    # ...and the next compaction advances the generation once more;
-    # the grace window (newest 1 superseded) keeps g2 and trims g1
-    stats2 = similarity.ivf_index_compact(spark, idx)
-    assert stats2["ingests_folded"] == 2
-    live2 = similarity.vectors_dir(spark, idx)
-    assert live2.startswith(f"{idx}/vectors-g3p")
-    assert os.path.isdir(live) and not os.path.exists(base_gen)
-
-
-def test_vectors_dir_legacy_fallback_and_generations(spark, tmp_path):
-    """A legacy index without a _current pointer resolves to its
-    original vectors directory; the generation sequence is
-    vectors -> vectors-g1 -> vectors-g2."""
-    legacy = str(tmp_path / "legacy")
-    os.makedirs(f"{legacy}/vectors")
-    assert similarity.vectors_dir(spark, legacy) == f"{legacy}/vectors"
-    assert similarity._next_generation("vectors") == "vectors-g1"
-    assert similarity._next_generation("vectors-g1") == "vectors-g2"
-    assert similarity._next_generation("vectors-g9") == "vectors-g10"
-    # unique staging names carry a uuid token (NOT a pid — containers
-    # share low pids across hosts) and parse back to their generation
-    # number regardless of the token
-    uniq = similarity._next_generation("vectors", unique=True)
-    assert uniq.startswith("vectors-g1p") and len(uniq) > len("vectors-g1p")
-    assert uniq != similarity._next_generation("vectors", unique=True)
-    assert similarity._next_generation(uniq) == "vectors-g2"
-    assert similarity._next_generation("vectors-g3pabcdef12") == "vectors-g4"
-    assert similarity._gen_num("vectors") == 0
     assert similarity._gen_num("vectors-g7p00ff00ff") == 7
+    assert similarity._GEN_NAME_RE.fullmatch("vectors") is None
 
 
 def test_index_vacuum_removes_only_older_generations(spark, tmp_path):
@@ -776,16 +689,17 @@ def test_index_vacuum_removes_only_older_generations(spark, tmp_path):
     grace_keep retains the newest N older generations. Markers and
     the live tree always survive; search is unchanged."""
     corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 >= 2)
     )
     queries = corpus.filter("vec_id % 32 = 0")
-    pre, _ = similarity.knn_pq_persisted(spark, idx, queries, k=K, n_probe=2)
+    pre, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
     pre_rows = sorted(map(tuple, pre.collect()))
     g1 = _live(spark, idx)  # the base build's generation (g1p<token>)
-    # manufacture: a stale legacy shell (gen 0), NEWER orphans (g2 —
+    # manufacture: a stale older generation (g0), NEWER orphans (g2 —
     # a crashed staging attempt + a concurrent maintainer's copy), and
     # non-generation siblings that merely share the name prefix
+    os.makedirs(f"{idx}/vectors-g0p0000aaaa")
     os.makedirs(f"{idx}/vectors")
     os.makedirs(f"{idx}/vectors-g2paaaaaaaa/ingest=zzz")
     os.makedirs(f"{idx}/vectors-g2pbbbbbbbb")
@@ -797,28 +711,31 @@ def test_index_vacuum_removes_only_older_generations(spark, tmp_path):
     stats = similarity.index_vacuum(spark, idx)
     assert stats["live"] == os.path.basename(g1)
     # only the strictly-older EXACT-grammar tree goes
-    assert stats["removed"] == ["vectors"]
+    assert stats["removed"] == ["vectors-g0p0000aaaa"]
     assert os.path.exists(f"{idx}/vectors-g2paaaaaaaa")  # newer: kept
-    assert os.path.exists(f"{idx}/vectors_backup")       # not a generation
+    assert os.path.exists(f"{idx}/vectors")              # not a generation
+    assert os.path.exists(f"{idx}/vectors_backup")
     assert os.path.exists(f"{idx}/vectors.compact-1234")
     # grace_keep at vacuum time retains the newest older generation
-    os.makedirs(f"{idx}/vectors")  # the legacy shell reappears
+    os.makedirs(f"{idx}/vectors-g0p0000aaaa")  # the stale tree reappears
     assert similarity.index_vacuum(spark, idx, grace_keep=1)[
         "removed"
     ] == []
-    assert os.path.exists(f"{idx}/vectors")
-    assert similarity.index_vacuum(spark, idx)["removed"] == ["vectors"]
-    post, _ = similarity.knn_pq_persisted(spark, idx, queries, k=K, n_probe=2)
+    assert os.path.exists(f"{idx}/vectors-g0p0000aaaa")
+    assert similarity.index_vacuum(spark, idx)["removed"] == [
+        "vectors-g0p0000aaaa"
+    ]
+    post, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
     assert sorted(map(tuple, post.collect())) == pre_rows
     # two compactions advance live to g3: the g2 orphans become
     # strictly older and age out (the publish's own grace trim only
     # ever keeps the newest one)
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 == 0),
         ingest_key="late-b0",
     )
     similarity.ivf_index_compact(spark, idx)   # live -> g2p<token>
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 == 1),
         ingest_key="late2-b0",
     )
@@ -858,12 +775,13 @@ def test_compaction_reader_grace_and_vacuum(spark, tmp_path):
     deployment's schedule. grace_keep=0 restores the immediate
     delete for throwaway single-process indexes."""
     corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 >= 2)
     )
     # a reader resolves the live generation... (the one pointer read
     # every search does)
-    resolved_gen, resolved_meta = similarity._gen_and_meta(spark, idx)
+    resolved_gen, _ = similarity.open_index(spark, idx)
+    resolved_meta = f"{resolved_gen}/_meta"
     rows_at_resolve = spark.read.parquet(resolved_gen).count()
     # ...then a compaction repoints mid-scan
     stats = similarity.ivf_index_compact(spark, idx)
@@ -895,31 +813,31 @@ def test_append_raises_when_compaction_repoints_midflight(
     pointer re-check must raise instead, and the normal retry path
     (re-running the append) lands the batch in the NEW generation."""
     corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 == 2)
     )
-    stale = similarity._gen_and_meta(spark, idx)
+    stale = similarity.open_index(spark, idx)
     similarity.ivf_index_compact(spark, idx)  # repoints; grace keeps old
     # simulate the race: the append resolved the OLD generation
     monkeypatch.setattr(
-        similarity, "_gen_and_meta", lambda s, p: stale
+        similarity, "open_index", lambda s, p: stale
     )
     batch = corpus.filter(F.col("vec_id") % 5 == 3)
     with pytest.raises(RuntimeError, match="raced a compaction"):
-        similarity.pq_index_append(spark, idx, batch, ingest_key="s-b0")
+        similarity.index_append(spark, idx, batch, ingest_key="s-b0")
     monkeypatch.undo()
     # here the compaction ran BEFORE the racing write (it never saw
     # the batch — recovery case (a) in _assert_batch_visible), so a
     # re-run is the correct recovery and must not duplicate rows
     live = _live(spark, idx)
     before = spark.read.parquet(live).count()
-    similarity.pq_index_append(spark, idx, batch, ingest_key="s-b0")
+    similarity.index_append(spark, idx, batch, ingest_key="s-b0")
     assert spark.read.parquet(live).count() == before + batch.count()
 
 
 def test_index_tuning_record_roundtrip_and_default(spark, sf_dir, tmp_path):
     """tune_index_n_probe records the tuned depth at {path}/_tuning;
-    knn_ivf_persisted(n_probe=None) searches at that default and a
+    knn_persisted(n_probe=None) searches at that default and a
     never-tuned index falls back to 2. The tuner resolves centroids
     from the index's own meta, so its answer equals the in-memory
     tuner given the same constants."""
@@ -929,10 +847,10 @@ def test_index_tuning_record_roundtrip_and_default(spark, sf_dir, tmp_path):
     queries = emb.filter(F.col("vec_id") < 4)
     # untuned: None falls back to n_probe=2
     assert similarity.index_tuned_n_probe(spark, idx) is None
-    r_none, _ = similarity.knn_ivf_persisted(
+    r_none, _ = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=None
     )
-    r_two, _ = similarity.knn_ivf_persisted(
+    r_two, _ = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=2
     )
     assert sorted(map(tuple, r_none.collect())) == sorted(
@@ -942,24 +860,24 @@ def test_index_tuning_record_roundtrip_and_default(spark, sf_dir, tmp_path):
     p, hits, n_truth = similarity.tune_index_n_probe(
         spark, idx, emb, queries, k=K, target_recall=0.9
     )
-    cents, _, _, _ = similarity.read_ivf_meta(spark, idx)
+    _, codec = similarity.open_index(spark, idx)
     assert (p, hits, n_truth) == similarity.tune_n_probe(
-        emb, queries, cents, k=K, target_recall=0.9
+        emb, queries, codec.centroids, k=K, target_recall=0.9
     )
     assert similarity.index_tuned_n_probe(spark, idx) == p
     assert 1 <= p <= 4 and hits <= n_truth == len(queries.collect()) * K
     # the default-depth search now probes at the tuned depth
-    r_tuned, _ = similarity.knn_ivf_persisted(
+    r_tuned, _ = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=None
     )
-    r_explicit, _ = similarity.knn_ivf_persisted(
+    r_explicit, _ = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=p
     )
     assert sorted(map(tuple, r_tuned.collect())) == sorted(
         map(tuple, r_explicit.collect())
     )
     # the record survives compaction (index-level, not generational)
-    similarity.ivf_index_append(
+    similarity.index_append(
         spark, idx, emb.limit(0), ingest_key="noop-b0"
     )
     assert similarity.index_tuned_n_probe(spark, idx) == p
@@ -1044,66 +962,6 @@ def test_rerank_raises_on_noncovering_corpus(spark, tmp_path):
     assert ok.count() > 0
 
 
-def test_legacy_meta_survives_upgrade_grace(spark, tmp_path):
-    """Upgrading a legacy (pre-pointer) index keeps its root meta for
-    the reader-grace window (r12 advisory): a legacy reader that
-    resolved _gen_and_meta just before the repoint reads BOTH its
-    codes tree and {path}/meta after the publish returns; the vacuum
-    sweeps the pair together."""
-    corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    import shutil
-
-    legacy = str(tmp_path / "legacy_idx")
-    os.makedirs(legacy)
-    live = _live(spark, idx)
-    shutil.copytree(live, f"{legacy}/vectors")
-    shutil.move(f"{legacy}/vectors/_meta", f"{legacy}/meta")
-    # a legacy reader resolves the fallback pair
-    gen, meta = similarity._gen_and_meta(spark, legacy)
-    assert gen == f"{legacy}/vectors" and meta == f"{legacy}/meta"
-    queries = corpus.filter("vec_id % 32 = 0")
-    pre, _ = similarity.knn_pq_persisted(spark, legacy, queries, k=K)
-    pre_n = pre.count()  # materialize NOW — the legacy files go away
-    assert pre_n > 0
-    # the upgrade rebuild (default grace_keep=1) supersedes the
-    # legacy generation but keeps tree AND root meta for grace
-    similarity.write_pq_index(corpus, legacy, centers, books)
-    assert os.path.basename(_live(spark, legacy)).startswith("vectors-g1p")
-    assert os.path.exists(f"{legacy}/vectors")
-    assert os.path.exists(f"{legacy}/meta")
-    # the grace reader's pair still reads end-to-end
-    c2, b2 = similarity.read_pq_meta(spark, legacy, meta_path=meta)
-    assert c2 == centers and b2 == books
-    assert spark.read.parquet(gen).count() > 0
-    # the vacuum is the deleter of record for BOTH
-    stats = similarity.index_vacuum(spark, legacy)
-    assert "vectors" in stats["removed"]
-    assert not os.path.exists(f"{legacy}/vectors")
-    assert not os.path.exists(f"{legacy}/meta")
-    # new readers are unaffected throughout
-    post, _ = similarity.knn_pq_persisted(spark, legacy, queries, k=K)
-    assert post.count() == pre_n
-
-
-def test_vacuum_sweeps_orphaned_legacy_meta(spark, tmp_path):
-    """A root meta whose legacy tree is already gone (an older
-    publisher's half-upgrade) is swept by the vacuum once past the
-    grace deadline — and only then (grace_keep>0 leaves it)."""
-    corpus, centers, books, idx = _small_pq_fixture(spark, tmp_path)
-    from flink_log_analysis_spark.sources import fsio
-
-    fsio.write_text(f"{idx}/meta_probe", "x", spark)  # sibling control
-    with open(f"{idx}/meta", "w") as fh:
-        fh.write("orphan")
-    kept = similarity.index_vacuum(spark, idx, grace_keep=1)
-    assert os.path.exists(f"{idx}/meta")
-    assert "meta" not in kept["removed"]
-    swept = similarity.index_vacuum(spark, idx, grace_keep=0)
-    assert "meta" in swept["removed"]
-    assert not os.path.exists(f"{idx}/meta")
-    assert os.path.exists(f"{idx}/meta_probe")
-
-
 def test_tuning_deleted_before_repoint(spark, tmp_path, monkeypatch):
     """The _tuning record is deleted BEFORE the pointer swap (r12
     advisory): a publish that crashes at the repoint leaves NO state
@@ -1156,7 +1014,7 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
     search byte-identical to the in-memory composition at the end."""
     from flink_log_analysis_spark.streaming.ann_ingest import (
         committed_batches,
-        pq_ingest_stream,
+        ingest_stream,
         stream_ingest_id,
     )
 
@@ -1175,14 +1033,14 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
             .option("recursiveFileLookup", "true")
             .parquet(inputs)
         )
-        return pq_ingest_stream(spark, idx, stream, ckpt)
+        return ingest_stream(spark, idx, stream, ckpt)
 
     # stream delivers its first micro-batch, then pauses (checkpoint)
     arrive(2, "b0")
     assert drain() == [0]
     # a reader and a doomed append both resolve the pre-compaction pair
-    grace_gen, grace_meta = similarity._gen_and_meta(spark, idx)
-    stale = (grace_gen, grace_meta)
+    stale = similarity.open_index(spark, idx)
+    grace_gen = stale[0]
     # maintainer 1: compaction folds base + stream batch, repoints
     stats = similarity.ivf_index_compact(spark, idx)  # grace_keep=1
     assert stats["ingests_folded"] == 2
@@ -1190,19 +1048,19 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
     assert live != grace_gen
     # the grace reader completes AFTER the publish: codes AND meta
     assert spark.read.parquet(grace_gen).count() > 0
-    c_g, b_g = similarity.read_pq_meta(spark, idx, meta_path=grace_meta)
-    assert c_g == centers and b_g == books
+    meta = spark.read.parquet(f"{grace_gen}/_meta").collect()[0]
+    assert meta["centroids"] == centers and meta["codebooks"] == books
     # maintainer 2: an append that resolved the OLD generation races
     # the compaction — the post-write liveness guard must raise
-    monkeypatch.setattr(similarity, "_gen_and_meta", lambda s, p: stale)
+    monkeypatch.setattr(similarity, "open_index", lambda s, p: stale)
     batch3 = corpus.filter(F.col("vec_id") % 5 == 3)
     with pytest.raises(RuntimeError, match="raced a compaction"):
-        similarity.pq_index_append(spark, idx, batch3, ingest_key="r-b0")
+        similarity.index_append(spark, idx, batch3, ingest_key="r-b0")
     monkeypatch.undo()
     # recovery case (a): the compaction never saw the raced batch, so
     # a plain re-run lands it in the LIVE generation, no duplicates
     before = spark.read.parquet(live).count()
-    similarity.pq_index_append(spark, idx, batch3, ingest_key="r-b0")
+    similarity.index_append(spark, idx, batch3, ingest_key="r-b0")
     assert spark.read.parquet(live).count() == before + batch3.count()
     # a concurrent maintainer's NEWER staging must survive every sweep
     os.makedirs(f"{idx}/vectors-g9pdeadbeef")
@@ -1223,7 +1081,7 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
     # end-state identity: the persisted search over the tortured index
     # equals the in-memory composition over the full corpus, bit-equal
     queries = corpus.filter("vec_id % 32 = 0")
-    res, _ = similarity.knn_pq_persisted(spark, idx, queries, k=K, n_probe=2)
+    res, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
     mem = similarity.knn_ivf_pq(
         corpus, queries, centers, books, k=K, n_probe=2
     )
@@ -1233,8 +1091,7 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
 
 def test_residual_pq_index_full_lifecycle(spark, tmp_path):
     """The residual codec as a PERSISTED index property: the flag
-    rides the generation meta (read_pq_codec; pre-flag indexes read as
-    raw), search dispatches to residual scoring off it, appends encode
+    rides the generation meta (open_index), search dispatches to residual scoring off it, appends encode
     with the index's own codec, compaction carries the flag forward,
     and the rerank composition recovers the full-precision IVF answer
     over a residual index — at every stage byte-identical to the
@@ -1249,17 +1106,18 @@ def test_residual_pq_index_full_lifecycle(spark, tmp_path):
         corpus.filter(F.col("vec_id") % 5 < 2), idx, centers, books,
         residual=True,
     )
-    c_r, b_r, flag = similarity.read_pq_codec(spark, idx)
-    assert flag is True and c_r == centers and b_r == books
+    _, codec = similarity.open_index(spark, idx)
+    assert codec.residual is True
+    assert codec.centroids == centers and codec.codebooks == books
     # append encodes with the index's codec (no caller argument)
-    similarity.pq_index_append(
+    similarity.index_append(
         spark, idx, corpus.filter(F.col("vec_id") % 5 >= 2)
     )
     queries = corpus.filter("vec_id % 32 = 0")
     mem = similarity.knn_ivf_pq_residual(
         corpus, queries, centers, books, k=K, n_probe=2
     )
-    res, cells = similarity.knn_pq_persisted(
+    res, cells = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=2
     )
     assert 0 < len(cells) < 8
@@ -1269,7 +1127,7 @@ def test_residual_pq_index_full_lifecycle(spark, tmp_path):
     # fit artifacts — the dispatch is load-bearing, not cosmetic
     raw_idx = str(tmp_path / "rawpq")
     similarity.write_pq_index(corpus, raw_idx, centers, books)
-    assert similarity.read_pq_codec(spark, raw_idx)[2] is False
+    assert similarity.open_index(spark, raw_idx)[1].residual is False
     raw_codes = spark.read.parquet(_live(spark, raw_idx)).select(
         "vec_id", "pq_code"
     )
@@ -1280,8 +1138,8 @@ def test_residual_pq_index_full_lifecycle(spark, tmp_path):
     # compaction folds ingests and carries the codec flag forward
     stats = similarity.ivf_index_compact(spark, idx)
     assert stats["ingests_folded"] == 2
-    assert similarity.read_pq_codec(spark, idx)[2] is True
-    res2, _ = similarity.knn_pq_persisted(spark, idx, queries, k=K,
+    assert similarity.open_index(spark, idx)[1].residual is True
+    res2, _ = similarity.knn_persisted(spark, idx, queries, k=K,
                                           n_probe=2)
     assert res2.exceptAll(mem).count() == 0
     assert mem.exceptAll(res2).count() == 0
