@@ -90,23 +90,6 @@ def _grams_from_tokens(w: Column, n: int) -> Column:
     return F.array_distinct(F.when(F.size(w) >= n, grams).otherwise(fallback))
 
 
-def shingle_set(col: Column) -> Column:
-    """Distinct word-bigram shingles (fallback: unigrams for 1-token
-    docs). Shingling is what makes MinHash discriminative — unigram
-    sets over a small vocabulary collapse to near-identical sets and
-    the LSH candidate count explodes quadratically.
-
-    Prefer :func:`distinct_token_sets`, which projects the token
-    array before shingling (see :func:`_grams_from_tokens`).
-
-    DuckDB twin:
-      CASE WHEN len(w) >= 2 THEN list_distinct(list_transform(
-               generate_series(1, len(w)-1), i -> w[i] || ' ' || w[i+1]))
-           ELSE list_distinct(w) END
-    """
-    return _grams_from_tokens(tokens(col), 2)
-
-
 def distinct_token_sets(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

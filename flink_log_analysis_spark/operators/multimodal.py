@@ -552,12 +552,6 @@ PNG_BASE_H = 4
 PNG_H_MOD = 4
 
 
-def png_filter_type(doc_id: int, r: int) -> int:
-    """Filter type for scanline r of doc_id's synthetic PNG: cycles
-    0-4 so the corpus certifies None/Sub/Up/Average/Paeth equally."""
-    return (doc_id + r) % 5
-
-
 def png_roundtrip_stats(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """REAL-codec certification for the PNG path: closed-form pixel
     grid (the bmp_pixel formula) -> real stdlib PNG encode with the

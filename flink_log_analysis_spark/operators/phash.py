@@ -73,14 +73,6 @@ PH_MAX_DIST = 3   # near-dup Hamming bound (banding: MAX_DIST+1 chunks)
 PH_GROUP_SIZE = 4
 
 
-def _gray(doc_id: int, r: int, c: int) -> int:
-    group, v = doc_id // PH_GROUP_SIZE, doc_id % PH_GROUP_SIZE
-    g = (group * 37 + r * (3 + group % 5) + c * (5 + group % 7)) % 256
-    if r // (PH_H // PH_GRID) == 1 and c // (PH_W // PH_GRID) == 2:
-        g = (g + v * 64) % 256
-    return g
-
-
 def synth_images(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, img): the closed-form family encoded through the REAL
     stdlib BMP codec (gray v as the (v, v, v) pixel), so the dedup

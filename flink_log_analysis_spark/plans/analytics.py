@@ -54,10 +54,6 @@ def _dec(col) -> Column:
     return c.cast(DEC)
 
 
-def _avg4(sum_col: Column, cnt_col: Column) -> Column:
-    return F.round(sum_col.cast("double") / cnt_col, 4)
-
-
 def _money(col: Column, scale: int | None = None) -> Column:
     """Pin an exact-decimal aggregate to the engine-neutral DOUBLE.
 

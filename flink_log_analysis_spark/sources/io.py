@@ -11,9 +11,10 @@ the rate source for load tests.
 Scale notes: all file readers go through Spark's datasource v2 —
 splittable scans, column pruning, predicate pushdown into parquet
 footers; `maxPartitionBytes` controls split sizing at 100 TB. The dim
-reader deliberately materializes + broadcasts: the reference's dims
-are point-lookup tables (≤ thousands of rows), so shipping a hash map
-to every executor beats shuffling the fact side, at any fact scale.
+reader deliberately materializes on the driver and broadcasts: the
+reference's dims are point-lookup tables (≤ thousands of rows), so
+shipping a hash map to every executor beats shuffling the fact side,
+at any fact scale.
 """
 
 from __future__ import annotations
@@ -68,29 +69,40 @@ def read_dbapi_dim(
     ``streaming.upsert.jdbc_upsert_writer``'s ``connection_factory``
     seam (B1, ``LogAnalysis.java:138-152, 199-215``).
 
-    The SELECT executes on the DRIVER: a dim is by contract a small
-    point-lookup table (the reference's forum/section MySQL tables),
-    so this is the same single-connection point query Flink's lookup
-    source issues — the snapshot then parallelizes/broadcasts like any
-    dim DataFrame. ``schema`` is an explicit DDL string (DB-API
-    drivers don't expose reliable column types, and the repo's rule is
-    no inference passes anyway). NOT for fact tables: anything that
-    doesn't comfortably fit on the driver belongs to the partitioned
-    JDBC scan path below.
+    The SELECT executes once, on the DRIVER: a dim is by contract a
+    small point-lookup table (the reference's forum/section MySQL
+    tables), so this is the same single-connection point query Flink's
+    lookup source issues. The rows go through Arrow into a
+    ``LocalRelation``: the snapshot lives in the JVM, so every query
+    that broadcasts it (each micro-batch of a stream-static join) reads
+    those local rows instead of re-running a Python job. ``schema`` is
+    an explicit DDL string (DB-API drivers don't expose reliable column
+    types, and the repo's rule is no inference passes anyway); a value
+    the DDL type cannot hold raises here, at read time. NOT for fact
+    tables: anything that doesn't comfortably fit on the driver belongs
+    to the partitioned JDBC scan path below.
 
     ``connection_factory`` is any zero-arg callable returning a DB-API
     connection — stdlib ``sqlite3.connect`` in tests, a mysql
     connector partial in a jar-less deployment.
     """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
     conn = connection_factory()
     try:
         cur = conn.cursor()
         cur.execute(query or f"SELECT * FROM {table}")  # noqa: S608 — dim
         # table names are deployment config, not user input
-        rows = [tuple(r) for r in cur.fetchall()]
+        rows = cur.fetchall()
     finally:
         conn.close()
-    return spark.createDataFrame(rows, schema=schema)
+    records = [dict(zip(struct.names, r, strict=True)) for r in rows]
+    return spark.createDataFrame(
+        pa.Table.from_pylist(records, schema=to_arrow_schema(struct))
+    )
 
 
 def read_jdbc_dim(

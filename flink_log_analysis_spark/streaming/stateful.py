@@ -35,26 +35,6 @@ from pyspark.sql.types import (
 )
 
 
-def hourly_counts(
-    logs: DataFrame,
-    ts_col: str = "accessTs",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Watermarked tumbling-window hit counts (streaming or batch).
-
-    The watermark bounds aggregation state: windows older than
-    max(event time) - watermark close, emit, and evict.
-    """
-    df = logs
-    if df.isStreaming:
-        df = df.withWatermark(ts_col, watermark)
-    return (
-        df.groupBy(F.window(F.col(ts_col), "1 hour").alias("w"))
-        .agg(F.count(F.lit(1)).alias("hits"))
-        .select(F.col("w.start").alias("window_start"), "hits")
-    )
-
-
 def session_counts(
     logs: DataFrame,
     key_col: str = "clientIP",

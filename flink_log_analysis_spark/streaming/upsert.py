@@ -9,7 +9,8 @@ keyed MERGE:
 
 - :func:`jdbc_upsert_statement` — the production SQL (MySQL
   ``ON DUPLICATE KEY UPDATE`` / ANSI-ish ``ON CONFLICT``), executed
-  per partition through any DB-API/JDBC connection factory;
+  by :func:`jdbc_upsert_writer` from the driver, one transaction per
+  micro-batch, through any DB-API connection factory;
 - :class:`ParquetUpsertSink` — keyed overwrite on files (anti-join old
   state against the new batch, union, rewrite) — the Delta-``MERGE``
   shape without requiring Delta in this container;
@@ -87,36 +88,35 @@ def jdbc_upsert_statement(
 
 def jdbc_upsert_writer(connection_factory, table: str, key_columns: list[str],
                        dialect: str = "mysql", batch_size: int = 500):
-    """foreachBatch function running the upsert per partition.
+    """foreachBatch function upserting each micro-batch in ONE
+    transaction, from the driver.
 
-    ``connection_factory`` is any zero-arg callable returning a DB-API
-    connection (executed on executors — keep it pickleable). Partition
-    fan-out means N concurrent writers, the same shape as Flink's
-    per-subtask JDBC sinks. No database ships in this container, so
-    this function is exercised in tests through a fake DB-API factory.
+    The batches reaching a sink are post-aggregation keyed rows (≤ 10
+    for a top-10 toplist, one per updated key otherwise), so the batch
+    comes to the driver through Arrow and is written over a single
+    ``connection_factory()`` connection: ``executemany`` in chunks of
+    ``batch_size`` rows, then one commit. A batch lands all-or-nothing —
+    on any error the connection closes without committing and the
+    table keeps its prior state, which checkpoint replay of the batch
+    then completes (the upsert is idempotent). ``connection_factory``
+    is any zero-arg callable returning a DB-API connection; the tests
+    drive it against stdlib sqlite3, which speaks the ``postgres``
+    dialect.
     """
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        cols = batch_df.columns
-        sql = jdbc_upsert_statement(table, cols, key_columns, dialect)
-
-        def write_partition(rows):
-            conn = connection_factory()
-            try:
-                cur = conn.cursor()
-                buf = []
-                for row in rows:
-                    buf.append(tuple(row[c] for c in cols))
-                    if len(buf) >= batch_size:
-                        cur.executemany(sql, buf)
-                        buf.clear()
-                if buf:
-                    cur.executemany(sql, buf)
-                conn.commit()
-            finally:
-                conn.close()
-
-        batch_df.foreachPartition(write_partition)
+        batch = batch_df.toArrow()
+        sql = jdbc_upsert_statement(table, batch.column_names, key_columns,
+                                    dialect)
+        rows = list(zip(*(c.to_pylist() for c in batch.columns)))
+        conn = connection_factory()
+        try:
+            cur = conn.cursor()
+            for i in range(0, len(rows), batch_size):
+                cur.executemany(sql, rows[i:i + batch_size])
+            conn.commit()
+        finally:
+            conn.close()
 
     return apply
 

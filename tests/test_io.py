@@ -1,5 +1,6 @@
 """IO layer: file readers/writers, TTL dim cache, rate source."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_log_analysis_spark.sources import io
@@ -231,3 +232,39 @@ def test_dim_cache_over_sqlite_ttl(spark, tmp_path):
     cache.ttl = 0.0
     assert cache.get().first().v == "b"  # expiry reloads from the DB
     assert len(hits) == 2
+
+
+def test_dbapi_dim_snapshot_is_local_relation_with_ddl_schema(spark, tmp_path):
+    """The dim snapshot is a LocalRelation in the JVM (a broadcast of it
+    re-runs no Python job), typed exactly by the DDL — names, types and
+    nullability — also when the table is empty; a value the DDL type
+    cannot hold raises at read time."""
+    import sqlite3
+
+    from pyspark.sql.types import StructType
+
+    db = str(tmp_path / "dim.sqlite")
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE d (k INTEGER, v TEXT)")
+        conn.execute("CREATE TABLE empty (k INTEGER, v TEXT)")
+        conn.execute("CREATE TABLE bad (k TEXT, v TEXT)")
+        conn.executemany("INSERT INTO d VALUES (?, ?)", [(1, "a"), (2, None)])
+        conn.execute("INSERT INTO bad VALUES ('not-a-number', 'x')")
+        conn.commit()
+    ddl = "k int, v string"
+
+    def read(table):
+        return io.read_dbapi_dim(spark, lambda: sqlite3.connect(db), table, ddl)
+
+    dim = read("d")
+    plan = dim._jdf.queryExecution().optimizedPlan()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    assert dim.schema == StructType.fromDDL(ddl)
+    assert sorted(map(tuple, dim.collect())) == [(1, "a"), (2, None)]
+
+    empty = read("empty")
+    assert empty.schema == StructType.fromDDL(ddl)
+    assert empty.count() == 0
+
+    with pytest.raises((TypeError, ValueError)):
+        read("bad")

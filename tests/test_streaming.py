@@ -199,6 +199,41 @@ def test_jdbc_upsert_writer_against_sqlite(spark, tmp_path):
     assert got == {"a": 1, "b": 20, "c": 3}
 
 
+def test_jdbc_upsert_writer_batch_is_atomic(spark, tmp_path):
+    """A micro-batch lands all-or-nothing: when the database rejects one
+    row of a multi-partition batch, no row of the batch is left in the
+    table — also not the rows of the partitions before it."""
+    import sqlite3
+
+    from flink_log_analysis_spark.streaming.upsert import jdbc_upsert_writer
+
+    db = str(tmp_path / "sink.db")
+    with sqlite3.connect(db) as conn:
+        conn.execute("CREATE TABLE t (k TEXT PRIMARY KEY, v INTEGER CHECK (v >= 0))")
+        conn.executemany("INSERT INTO t VALUES (?, ?)", [("a", 1), ("b", 2)])
+        conn.commit()
+
+    def table_state():
+        with sqlite3.connect(db) as conn:
+            return sorted(conn.execute("SELECT k, v FROM t").fetchall())
+
+    before = table_state()
+    batch = spark.createDataFrame(
+        [("a", 10), ("c", 3), ("d", 4), ("bad", -1)], "k string, v int"
+    )
+    part = dict(
+        batch.select("k", F.spark_partition_id().alias("p")).collect()
+    )
+    assert part["bad"] > min(part.values())  # rejected row in a later partition
+
+    write = jdbc_upsert_writer(
+        lambda: sqlite3.connect(db, timeout=30), "t", ["k"], dialect="postgres"
+    )
+    with pytest.raises(Exception):
+        write(batch, 0)
+    assert table_state() == before
+
+
 def test_stream_upsert_into_sqlite_matches_memory_sink(spark, tmp_path):
     """B1/B2 executable evidence against a real SQL engine: a
     multi-batch stream upserts into stdlib sqlite3 through the
@@ -435,6 +470,86 @@ def test_checkpoint_recovery_no_double_count(spark, tmp_path):
     logs = _batch_logs(spark, str(land))
     exp = client_ip_access_agg(logs).withColumn("statistic_time", F.lit(STAT_TIME))
     assert _rows(sink.to_df(spark), "client_ip") == _rows(exp, "client_ip")
+
+
+def test_log_job_state_partitions_fresh_and_restarted(spark, log_dir, dims, tmp_path):
+    """run_log_job gives each of its three queries a third of the cores
+    as state partitions; a hot_section checkpoint made with 4 state
+    partitions, fed more files and restarted through run_log_job, keeps
+    its 4 and its sink equals the batch oracle over all files."""
+    import shutil
+
+    from flink_log_analysis_spark.session import scoped_conf
+    from flink_log_analysis_spark.streaming.runner import (
+        parsed_log_stream,
+        read_log_file_stream,
+        start_upsert_stream,
+    )
+
+    section_dim, article_dim = dims
+    expected = max(1, spark.sparkContext.defaultParallelism // 3)
+
+    def job_sinks():
+        return {
+            "hot_section": MemoryUpsertSink(["section_id"], complete=True),
+            "hot_article": MemoryUpsertSink(["article_id"], complete=True),
+            "client_ip_access": MemoryUpsertSink(["client_ip"]),
+        }
+
+    def run_job(root, sinks):
+        queries = run_log_job(
+            spark, str(land), section_dim, article_dim, sinks,
+            checkpoint_root=root, available_now=True, stat_time=STAT_TIME,
+        )
+        for q in queries:
+            q.awaitTermination(timeout=120)
+        return {
+            q.name: q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+            for q in queries
+        }
+
+    land = tmp_path / "land"
+    land.mkdir()
+    names = sorted(os.listdir(log_dir))
+    shutil.copy(os.path.join(log_dir, names[0]), land / names[0])
+
+    fresh = run_job(str(tmp_path / "fresh"), job_sinks())
+    assert fresh == dict.fromkeys(
+        ("hot_section", "hot_article", "client_ip_access"), expected
+    )
+
+    root = str(tmp_path / "old")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": 4}):
+        old = start_upsert_stream(
+            hot_section_agg(
+                parsed_log_stream(read_log_file_stream(spark, str(land))),
+                section_dim,
+            ),
+            MemoryUpsertSink(["section_id"], complete=True),
+            f"{root}/hot_section",
+            top_k=10,
+            order_by=[F.desc("section_pv"), F.asc("section_id")],
+            stat_time=STAT_TIME,
+            available_now=True,
+        )
+    old.awaitTermination(timeout=120)
+    assert old.lastProgress["stateOperators"][0]["numShufflePartitions"] == 4
+
+    for name in names[1:]:
+        shutil.copy(os.path.join(log_dir, name), land / name)
+    sinks = job_sinks()
+    restarted = run_job(root, sinks)
+    assert restarted["hot_section"] == 4
+    assert restarted["client_ip_access"] == expected
+
+    exp_section = (
+        hot_section_agg(_batch_logs(spark, str(land)), section_dim)
+        .orderBy(F.desc("section_pv"), F.asc("section_id"))
+        .limit(10)
+        .withColumn("statistic_time", F.lit(STAT_TIME))
+    )
+    got_section = sinks["hot_section"].to_df(spark)
+    assert _rows(got_section, "section_id") == _rows(exp_section, "section_id")
 
 
 def test_upsert_statement_key_only_table():
