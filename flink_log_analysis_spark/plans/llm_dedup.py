@@ -320,11 +320,17 @@ def _sig_cte(
     doc_id + text — lets composition queries run the identical LSH
     pipeline on a filtered corpus). CTE names are parameterizable so
     two-relation queries (incremental dedup: batch vs corpus) can
-    instantiate the chain twice in one statement."""
+    instantiate the chain twice in one statement.
+
+    Both CTEs are MATERIALIZED: DuckDB inlines a plain CTE at every
+    read, and these are read many times over (the signatures once per
+    band, the bands twice by the candidate self-join, the shingles
+    again by the Jaccard verify), each read redoing the md5 and
+    shingling work."""
     mh = ",\n               ".join(_mh_expr(i) for i in range(dedup.N_HASHES))
     return f"""
-        {toks} AS (SELECT doc_id, {_TOKS} AS toks FROM {src}),
-        {sig} AS (SELECT doc_id, {mh} FROM {toks})
+        {toks} AS MATERIALIZED (SELECT doc_id, {_TOKS} AS toks FROM {src}),
+        {sig} AS MATERIALIZED (SELECT doc_id, {mh} FROM {toks})
     """
 
 
@@ -505,7 +511,8 @@ ORACLE = {
     # sz - ceil(t*sz) + 1 tokens, candidates share a prefix token and
     # pass the (lossless) length filter t*|a| <= |b| both ways.
     "ngram_jaccard_pairs": f"""
-        WITH toks AS (SELECT doc_id, {_TOKS4} AS toks FROM documents),
+        WITH toks AS MATERIALIZED (
+            SELECT doc_id, {_TOKS4} AS toks FROM documents),
         ex AS (
             SELECT doc_id, len(toks) AS sz, unnest(toks) AS tok FROM toks
         ),
@@ -586,8 +593,11 @@ ORACLE = {
     # Components via transitive closure: WITH RECURSIVE reach = all
     # vertices reachable from u; component = min reachable id. Agrees
     # exactly with Spark's hash-min label propagation at fixpoint.
+    # MATERIALIZED: DuckDB inlines a plain CTE, so every recursion
+    # step would re-run the whole pair pipeline behind `edges`; the
+    # result is the same either way.
     "near_dup_clusters": f"""
-        WITH RECURSIVE pairs AS ({_PAIRS_SQL}),
+        WITH RECURSIVE pairs AS MATERIALIZED ({_PAIRS_SQL}),
         edges AS (
             SELECT doc_a AS u, doc_b AS v FROM pairs
             UNION
