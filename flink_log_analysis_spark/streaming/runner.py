@@ -24,7 +24,16 @@ Structured Streaming:
   expressible inside a streaming plan (B7) -> applied per batch in
   ``foreachBatch`` under complete output mode, then upserted by key;
 - checkpointing: ``checkpointLocation`` (WAL + state snapshots) ==
-  the reference's 5s FsStateBackend checkpoints (A9 env config).
+  the reference's 5s FsStateBackend checkpoints (A9 env config). In a
+  :func:`..session.get_spark` session the offsets/commits WAL, the
+  file-source log and the state deltas are written by Spark's
+  ``FileSystemBasedCheckpointFileManager`` (temp file, then rename),
+  because the FileContext default forks a process per file on a JVM
+  without libhadoop. A batch file that already exists is never
+  overwritten, so the exactly-once guard is unchanged. On a replay of
+  an uncommitted batch, its existing state delta is kept instead of
+  replaced; the replay recomputes that version from the same offsets
+  and prior state, so the kept file holds the same updates.
 
 Scale notes: state size for the aggs is O(distinct keys), not O(rows
 seen); the dims stay broadcast so the fact stream never shuffles for

@@ -108,3 +108,46 @@ def test_manufactured_input_keys_keep_paths_apart(monkeypatch, tmp_path):
     # a fresh process cache still reuses the run-scoped dir
     assert manufactured_input({}, "/a/b_c", "logs_", "lines", build) == a
     assert len(built) == 2
+
+
+def _slow_counting_build(path):
+    """A run-cache build that takes long enough for a second process to
+    arrive while it runs, and records each call in a counter file."""
+    import time
+
+    time.sleep(1.0)
+    with open(os.path.join(os.path.dirname(path), "builds.txt"), "a") as f:
+        f.write(f"{os.getpid()}\n")
+    os.makedirs(os.path.join(path, "lines"), exist_ok=True)
+    open(os.path.join(path, "lines", "_SUCCESS"), "w").close()
+
+
+def _resolve_in_child(root, start, out):
+    from flink_log_analysis_spark.session import manufactured_input
+
+    os.environ["SPARK_GRAFT_INPUT_CACHE"] = root
+    start.wait(timeout=60)
+    path = manufactured_input({}, "/a/b", "logs_", "lines", _slow_counting_build)
+    out.put(path)
+
+
+def test_manufactured_input_concurrent_processes_build_once(tmp_path):
+    """Two processes resolving the same run-cache key at once build the
+    input once and both get the same path."""
+    import multiprocessing
+
+    ctx = multiprocessing.get_context("spawn")
+    start, out = ctx.Barrier(2), ctx.Queue()
+    procs = [
+        ctx.Process(target=_resolve_in_child, args=(str(tmp_path), start, out))
+        for _ in range(2)
+    ]
+    for p in procs:
+        p.start()
+    paths = [out.get(timeout=60) for _ in procs]
+    for p in procs:
+        p.join(timeout=60)
+        assert p.exitcode == 0
+    assert paths[0] == paths[1]
+    with open(tmp_path / "builds.txt") as f:
+        assert len(f.read().split()) == 1

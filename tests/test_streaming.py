@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from flink_log_analysis_spark import logparse
+from flink_log_analysis_spark.session import scoped_conf
 from flink_log_analysis_spark.sources.synthetic import write_log_file
 from flink_log_analysis_spark.streaming import (
     MemoryUpsertSink,
@@ -479,7 +480,6 @@ def test_log_job_state_partitions_fresh_and_restarted(spark, log_dir, dims, tmp_
     its 4 and its sink equals the batch oracle over all files."""
     import shutil
 
-    from flink_log_analysis_spark.session import scoped_conf
     from flink_log_analysis_spark.streaming.runner import (
         parsed_log_stream,
         read_log_file_stream,
@@ -1032,6 +1032,165 @@ def test_checkpoint_recovery_sqlite_sink_no_double_count(spark, tmp_path):
     )
     sink(replay, batch_id=999)
     assert table_state() == exp
+
+
+CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+FILE_CONTEXT_MANAGER = f"{CHECKPOINTING}.FileContextBasedCheckpointFileManager"
+
+
+def _checkpoint_manager(spark, path):
+    """The checkpoint file manager a stream started now would write
+    ``path`` through (Spark resolves it from the session's conf)."""
+    jvm = spark._jvm
+    return getattr(jvm, CHECKPOINTING).CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(path)),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+
+
+def _file_context_checkpoints(spark):
+    return scoped_conf(
+        spark, {"spark.sql.streaming.checkpointFileManagerClass": FILE_CONTEXT_MANAGER}
+    )
+
+
+def test_session_writes_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """Engine sessions write stream checkpoints with FileSystem create +
+    rename, not Spark's FileContext default (which forks a process per
+    checkpoint file on hosts without libhadoop)."""
+    name = _checkpoint_manager(spark, tmp_path).getClass().getName()
+    assert name == f"{CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+    with _file_context_checkpoints(spark):
+        assert _checkpoint_manager(spark, tmp_path).getClass().getName() == (
+            FILE_CONTEXT_MANAGER
+        )
+
+
+def test_checkpoint_manager_refuses_to_overwrite_batch_file(spark, tmp_path):
+    """The metadata logs' exactly-once guard: an atomic create without
+    overwrite onto an existing file fails on close and keeps the old
+    bytes."""
+    from py4j.protocol import Py4JJavaError
+
+    manager = _checkpoint_manager(spark, tmp_path)
+    target = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path / "0"))
+    out = manager.createAtomic(target, False)
+    out.write(bytearray(b"first"))
+    out.close()
+    out = manager.createAtomic(target, False)
+    out.write(bytearray(b"second"))
+    with pytest.raises(Py4JJavaError, match="already exists"):
+        out.close()
+    assert (tmp_path / "0").read_bytes() == b"first"
+
+
+@pytest.mark.parametrize("first", ["session_default", "file_context"])
+def test_checkpoint_restart_across_managers(spark, tmp_path, first):
+    """A checkpoint written under one file manager restarts under the
+    other: the batch ids continue, nothing is counted twice, and the
+    sink equals the batch oracle over all input."""
+    from contextlib import nullcontext
+
+    from flink_log_analysis_spark.streaming.runner import (
+        parsed_log_stream,
+        read_log_file_stream,
+        start_upsert_stream,
+    )
+
+    land = tmp_path / "land"
+    land.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    sink = MemoryUpsertSink(["client_ip"])
+
+    def run(managers):
+        with managers:
+            lines = read_log_file_stream(spark, str(land), max_files_per_trigger=1)
+            agg = client_ip_access_agg(parsed_log_stream(lines))
+            q = start_upsert_stream(agg, sink, ckpt, stat_time=STAT_TIME)
+        q.processAllAvailable()
+        q.stop()
+
+    file_context_first = first == "file_context"
+    write_log_file(str(land / "a.log"), 200, seed=40)
+    write_log_file(str(land / "b.log"), 200, seed=41)
+    run(_file_context_checkpoints(spark) if file_context_first else nullcontext())
+    batches_before = set(sink.applied_batches)
+
+    write_log_file(str(land / "c.log"), 200, seed=42)
+    run(nullcontext() if file_context_first else _file_context_checkpoints(spark))
+
+    new_batches = set(sink.applied_batches) - batches_before
+    assert new_batches and min(new_batches) > max(batches_before)
+    logs = _batch_logs(spark, str(land))
+    exp = client_ip_access_agg(logs).withColumn("statistic_time", F.lit(STAT_TIME))
+    assert _rows(sink.to_df(spark), "client_ip") == _rows(exp, "client_ip")
+
+
+def test_uncommitted_batch_replays_over_existing_state_file(spark, tmp_path):
+    """Death between the WAL and the commit: with the last ``commits/N``
+    gone, a restart re-runs batch N, whose state delta is already on
+    disk, and the sqlite sink still equals the batch oracle."""
+    import glob
+    import sqlite3
+
+    from flink_log_analysis_spark.streaming.runner import (
+        parsed_log_stream,
+        read_log_file_stream,
+        start_upsert_stream,
+    )
+    from flink_log_analysis_spark.streaming.upsert import jdbc_upsert_writer
+
+    land = tmp_path / "land"
+    land.mkdir()
+    ckpt = tmp_path / "ckpt"
+    db = str(tmp_path / "sink.db")
+    with sqlite3.connect(db) as conn:
+        conn.execute(
+            "CREATE TABLE client_ip_access (client_ip TEXT PRIMARY KEY, "
+            "client_access_cnt INTEGER, statistic_time TEXT)"
+        )
+    write = jdbc_upsert_writer(
+        lambda: sqlite3.connect(db, timeout=30),
+        "client_ip_access", ["client_ip"], dialect="postgres",
+    )
+    batch_ids = []
+
+    def sink(df, batch_id):
+        batch_ids.append(batch_id)
+        write(df, batch_id)
+
+    def run():
+        lines = read_log_file_stream(spark, str(land), max_files_per_trigger=1)
+        agg = client_ip_access_agg(parsed_log_stream(lines))
+        q = start_upsert_stream(agg, sink, str(ckpt), stat_time=STAT_TIME)
+        q.processAllAvailable()
+        q.stop()
+
+    write_log_file(str(land / "a.log"), 200, seed=50)
+    write_log_file(str(land / "b.log"), 200, seed=51)
+    run()
+    last = max(batch_ids)
+    # Batch N commits state version N + 1.
+    assert glob.glob(str(ckpt / "state" / "0" / "*" / f"{last + 1}.delta"))
+    (ckpt / "commits" / str(last)).unlink()
+    (ckpt / "commits" / f".{last}.crc").unlink()
+
+    write_log_file(str(land / "c.log"), 200, seed=52)
+    del batch_ids[:]
+    run()
+    assert batch_ids[0] == last and max(batch_ids) > last
+
+    exp = {
+        r.client_ip: r.client_access_cnt
+        for r in client_ip_access_agg(_batch_logs(spark, str(land))).collect()
+    }
+    with sqlite3.connect(db) as conn:
+        got = dict(
+            conn.execute(
+                "SELECT client_ip, client_access_cnt FROM client_ip_access"
+            ).fetchall()
+        )
+    assert got == exp and len(got) > 0
 
 
 def test_bucketed_parquet_upsert_sink_rewrites_only_affected_buckets(

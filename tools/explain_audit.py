@@ -39,6 +39,7 @@ CROSS_JOIN_OK = {
     "sketch_accuracy",     # 1-row exact/sketch scalar attaches
     "lang_mixture_resample",  # 1-row weight-sum + T scalar attaches
     "knn_ivf",             # 1-row centroid-matrix broadcast attach
+    "knn_ivf_lloyd",       # same similarity.knn_ivf operator and attach
     "token_budget_select",  # 1-row corpus token-budget scalar attach
     "knn_quantized",       # exactness demo of the quantized read path
     "knn_ivf_quantized_recall_p6",  # brute ground truth + 1-row cost attaches
