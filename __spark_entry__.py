@@ -95,12 +95,15 @@ def _plan_modules():
 #     lineitem_orc_roundtrip — r17 manufactured_input reuse path;
 #   - windowed_event_counts_stream — r17 events-stream schema cache
 #     (also an r13-stale head).
-# Then the full 22-row r12-stale cohort named by the r16 rotation as
-# this round's stale heads (lineitem_global_stats .. train_split_
-# assign — includes lm_perplexity_filter and
-# lm_perplexity_filter_stream, r17-touched), and the 2 remaining
-# slots go to the alphabetically-first r13-stale heads (binary_meta,
-# bpe_large_vocab). 12 + 14 + 22 + 2 = 50 exactly.
+# Then the 19 rows whose ANN search moved when the in-memory IVF
+# searches were folded into similarity.knn_ivf's one search (knn_ivf_
+# lloyd, already above, is the 20th). They replace 19 rows of the
+# 22-row r12-stale cohort: those rows' code has not moved since, and
+# each is hash-green in CORRECTNESS_r17, so a fresh
+# row there adds nothing. The cohort's three lm_perplexity_filter
+# rows stay (r17-touched scorer split). The 2 remaining slots go to
+# the alphabetically-first r13-stale heads (binary_meta,
+# bpe_large_vocab). 12 + 14 + 19 + 3 + 2 = 50 exactly.
 _DRIVER_WINDOW: list[str] = [
     # reference-parity core (keep a fresh row every round)
     "hot_section",
@@ -130,31 +133,30 @@ _DRIVER_WINDOW: list[str] = [
     "events_csv_roundtrip",
     "lineitem_orc_roundtrip",
     "windowed_event_counts_stream",
-    # the 22-row r12-stale cohort (named as r17 heads by the r16
-    # rotation comment; lm_perplexity_filter + _stream also carry the
-    # r17 scorer split)
-    "lineitem_global_stats",
+    # ANN rows moved onto the one IVF search (see above)
+    "knn_ivf",
+    "knn_ivf_recall",
+    "knn_ivf_quantized_recall",
+    "knn_ivf_quantized_recall_p6",
+    "knn_ivf_persisted",
+    "knn_ivf_appended",
+    "knn_ivf_streamed",
+    "knn_ivf_compacted",
+    "knn_ivf_manycell_recall",
+    "hard_negative_mining_ivf",
+    "knn_ivf_persisted_tuned",
+    "knn_ivf_pq_exact",
+    "knn_ivf_pq_residual",
+    "knn_pq_residual_persisted",
+    "knn_ivf_pq_persisted",
+    "knn_pq_persisted_rerank",
+    "knn_pq_streamed",
+    "knn_pq_appended",
+    "knn_pq_compacted",
+    # the three r12-stale cohort rows kept (r17 scorer split)
     "lm_perplexity_filter",
     "lm_perplexity_filter_3gram",
     "lm_perplexity_filter_stream",
-    "nation_market_share",
-    "nation_trade_flows",
-    "order_priority_check",
-    "order_scalar_features",
-    "orders_cube",
-    "orders_rollup",
-    "orders_snapshot_diff",
-    "parts_never_ordered",
-    "pricing_summary",
-    "regional_revenue",
-    "salted_brand_revenue",
-    "small_quantity_revenue",
-    "span_dedup",
-    "text_stats",
-    "tfidf_top_terms",
-    "top_customers_revenue",
-    "top_orders_per_customer",
-    "train_split_assign",
     # r13-stale heads (alphabetical)
     "binary_meta",
     "bpe_large_vocab",

@@ -463,8 +463,8 @@ def centroids_to_floats(
     """The fitted matrix back in coordinate space (cval / 10^scale —
     exact BIGINT->double then one division, the same IEEE result both
     engines produce) — the dispatch seam into the existing IVF
-    machinery (``ivf_assign``/``knn_ivf`` accept it via
-    ``centroids=``)."""
+    machinery (``ivf_assign`` accepts it via ``centroids=``,
+    ``knn_ivf`` via ``IndexCodec(centroids)``)."""
     div = float(10**scale)
     return [[v / div for v in c] for c in cents]
 

@@ -82,6 +82,26 @@ def cosine_safe(a: Column, b: Column) -> Column:
     )
 
 
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    score: str,
+    ascending: bool = False,
+    part: str = "query_id",
+    tie: str = "neighbor_id",
+) -> DataFrame:
+    """THE per-query top-k: ``rn`` = row_number over ``part`` ordered
+    by the (already rounded) ``score`` — descending for a similarity,
+    ascending for a distance — with the ``tie`` id ascending as the
+    total tie-break, kept while ``rn <= k``. Output: ``scored``'s
+    columns, then ``rn``."""
+    order = F.asc(score) if ascending else F.desc(score)
+    w = Window.partitionBy(part).orderBy(order, F.asc(tie))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(
+        F.col("rn") <= k
+    )
+
+
 def knn_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -109,12 +129,7 @@ def knn_bruteforce(
         "neighbor_id",
         F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    return _top_k(scored, k, "cos")
 
 
 def hard_negatives(
@@ -166,124 +181,59 @@ def hard_negatives(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos"), F.asc("negative_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            "cos",
-            "rn",
-        )
-    )
+    return _top_k(scored, k, "cos", part="anchor_id", tie="negative_id")
 
 
 def hard_negatives_ivf(
     corpus: DataFrame,
     anchors: DataFrame,
+    codec: IndexCodec,
     k: int = 5,
-    n_cells: int = 8,
     n_probe: int = 2,
-    seed: int = 42,
     label_col: str = "label",
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    ranges: DataFrame | None = None,
 ) -> DataFrame:
     """The SCALE path for negative mining: :func:`hard_negatives`'
-    different-label predicate dropped into :func:`knn_ivf_quantized`'s
-    candidate stream — the composition the exactness baseline's
-    docstring promises, implemented. Candidates come only from each
-    anchor's ``n_probe`` probed cells (scored over the same dequantized
-    codec the stored index reads), and the label filter runs AFTER
-    cell pruning — it narrows the candidate stream, never widens the
-    scan. Labels ride the assignment projection, so no extra join
-    reunites them with the vectors. Output schema matches
-    :func:`hard_negatives`, so recall contracts join on
+    different-label predicate dropped into the IVF search
+    (:func:`_search`) over ``codec`` — the composition the exactness
+    baseline's docstring promises, implemented. Candidates are the
+    corpus coded like any in-memory index (:func:`assign_cells` +
+    :func:`_encode`), only each anchor's ``n_probe`` probed cells are
+    scored, and the label filter runs AFTER cell pruning — it narrows
+    the candidate stream, never widens the scan. Labels ride the
+    encode projection, so no extra join reunites them with the
+    vectors. Output schema matches :func:`hard_negatives` (the score
+    column is the codec's), so recall contracts join on
     ``(anchor_id, negative_id)``."""
     from ..session import ensure_min_partitions
 
-    if centroids is None:
-        centroids = ivf_fit(
-            corpus, n_cells=n_cells, seed=seed, vec_col=vec_col
-        )
-    cmat = corpus.sparkSession.createDataFrame(
-        [(centroids,)], "cmat array<array<double>>"
+    cmat = codec.cmat(corpus.sparkSession)
+    vecs = ensure_min_partitions(corpus).select(
+        F.col(id_col),
+        F.col(label_col).alias("negative_label"),
+        as_double(F.col(vec_col)).alias("arr"),
     )
-    if ranges is None:
-        ranges = quantization_ranges(corpus, vec_col).localCheckpoint(
-            eager=True
-        )
-    dq = lambda v: _dequantized(v, F.col("mn_arr"), F.col("mx_arr"))  # noqa: E731
-    c = (
-        probe_cells(
-            ensure_min_partitions(corpus).select(
-                F.col(id_col).alias("negative_id"),
-                F.col(label_col).alias("negative_label"),
-                as_double(F.col(vec_col)).alias("arr"),
-            ),
-            "arr",
-            cmat,
-            [0],
-        )
-        .withColumnRenamed("cell_p0", "cell")
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            "negative_id",
-            "negative_label",
-            dq(F.col("arr")).alias("cv"),
-            "cell",
-        )
-    )
-    q = probe_cells(
-        anchors.select(
-            F.col(id_col).alias("anchor_id"),
-            F.col(label_col).alias("anchor_label"),
-            as_double(F.col(vec_col)).alias("qraw"),
-        ),
-        "qraw",
-        cmat,
-        range(n_probe),
-    ).crossJoin(F.broadcast(ranges)).select(
-        "anchor_id",
-        "anchor_label",
-        dq(F.col("qraw")).alias("qv"),
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        # same NULL-label-safe predicate as the exactness baseline
-        .filter(F.col("negative_label") != F.col("anchor_label"))
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("anchor_id").orderBy(
-        F.desc("cos"), F.asc("negative_id")
+    codes = _encode(
+        assign_cells(vecs, cmat), codec, cmat, id_col, keep=("negative_label",)
     )
     return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(
-            "anchor_id",
-            "anchor_label",
-            "negative_id",
-            "negative_label",
-            "cos",
-            "rn",
+        _search(
+            codes,
+            codec,
+            anchors.withColumnRenamed(label_col, "anchor_label"),
+            cmat,
+            k,
+            n_probe,
+            id_col,
+            vec_col,
+            q_keep=("anchor_label",),
+            c_keep=("negative_label",),
+            # same NULL-label-safe predicate as the exactness baseline
+            where=F.col("negative_label") != F.col("anchor_label"),
         )
+        .withColumnRenamed("query_id", "anchor_id")
+        .withColumnRenamed("neighbor_id", "negative_id")
     )
 
 
@@ -465,9 +415,9 @@ def ivf_fit(
 
     The returned centroids are plain Python floats, so callers can
     fit ONCE per corpus and reuse across every query that probes the
-    same index (``ivf_assign``/``knn_ivf`` accept them via
-    ``centroids=``) — exactly how a production IVF index works: build
-    once, search many.
+    same index (``ivf_assign`` accepts them via ``centroids=``,
+    ``knn_ivf`` via ``IndexCodec(centroids)``) — exactly how a
+    production IVF index works: build once, search many.
 
     **Fit-path dispatch** (two arms, pick by regime): this function
     is the bounded-sample arm — collect <= ``fit_sample_rows``
@@ -480,7 +430,7 @@ def ivf_fit(
     auditable/value-reproducible, when cell structure is too fine
     for a 100k sample, or when no bounded collect is acceptable.
     Its ``centroids_to_floats`` output plugs into the same
-    ``centroids=`` seam (see ``knn_ivf_lloyd``). This numpy fit
+    seam (see ``knn_ivf_lloyd``). This numpy fit
     CANNOT be the cross-engine contract target: kmeans++ draws from
     a numpy Generator and averages floats in partition order,
     neither replayable in SQL.
@@ -600,6 +550,20 @@ def probe_cells(
             F.element_at(order, p + 1).getField("cell").alias(f"cell_p{p}")
             for p in probes
         ],
+    )
+
+
+def explode_probes(
+    df: DataFrame, arr_col: str, cmat: DataFrame, n_probe: int
+) -> DataFrame:
+    """``df`` exploded to one row per (input row, probed cell): its
+    columns plus ``cell``, each of the row's ``n_probe`` nearest cells
+    by :func:`probe_cells`' comparator."""
+    return probe_cells(df, arr_col, cmat, range(n_probe)).select(
+        *df.columns,
+        F.explode(
+            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
+        ).alias("cell"),
     )
 
 
@@ -803,56 +767,42 @@ def index_tuned_n_probe(spark, path: str, k: int | None = None) -> int | None:
 def knn_ivf(
     corpus: DataFrame,
     queries: DataFrame,
+    codec: IndexCodec | None = None,
     k: int = 5,
-    n_cells: int = 8,
     n_probe: int = 2,
+    n_cells: int = 8,
     seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """IVF ANN: exact search restricted to each query's n_probe nearest
-    cells. Complements LSH: cells adapt to the data distribution, so
-    recall at equal candidate budget is typically higher on clustered
-    corpora (the centroid fit is the price — pay it once by passing a
-    shared :func:`ivf_fit` result via ``centroids=``).
-    """
+    """IVF ANN over an IN-MEMORY index: exact search (in the codec's
+    own scoring) restricted to each query's ``n_probe`` nearest cells.
+    The index is a generation that was never published — ``codec``
+    plus the frame :func:`_encode` returns over
+    :func:`ivf_assign`'s assignment — searched by the same
+    :func:`_search` that :func:`knn_persisted` runs over a pruned
+    parquet read:
+
+    - ``IndexCodec(centroids)`` (float): cosine over the raw vectors;
+      ``codec=None`` fits those centroids here (``n_cells``, ``seed``
+      — pay the fit once by passing a shared :func:`ivf_fit` result);
+    - int8 (:func:`fit_int8_codec`, or a persisted index's
+      :func:`open_index` codec): cosine over dequantized codes;
+    - PQ raw / residual: ADC.
+
+    Cells adapt to the data distribution, so recall at equal candidate
+    budget is typically higher than LSH on clustered corpora."""
     assigned, centroids, cmat = ivf_assign(
         corpus,
         n_cells=n_cells,
         seed=seed,
         id_col=id_col,
         vec_col=vec_col,
-        centroids=centroids,
+        centroids=codec and codec.centroids,
     )
-    c = assigned.select(
-        F.col(id_col).alias("neighbor_id"), F.col("arr").alias("cv"), "cell"
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    q = probe_cells(q, "qv", cmat, range(n_probe)).select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    codec = codec or IndexCodec(centroids)
+    codes = _encode(assigned, codec, cmat, id_col)
+    return _search(codes, codec, queries, cmat, k, n_probe, id_col, vec_col)
 
 
 def knn_lsh(
@@ -909,12 +859,7 @@ def knn_lsh(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    return _top_k(scored, k, "cos")
 
 
 # Scalar (per-dimension min/max) int8-style quantization — the storage
@@ -1005,6 +950,18 @@ def quantization_ranges(
     )
 
 
+def fit_int8_codec(
+    corpus: DataFrame, centroids: list[list[float]], vec_col: str = "embedding"
+) -> IndexCodec:
+    """THE int8 codec fit: ``centroids`` plus ``corpus``'s
+    per-dimension (mn[], mx[]) (:func:`quantization_ranges`, one
+    aggregate collected to the driver). :func:`write_ivf_index` builds
+    its index with it; an in-memory :func:`knn_ivf` over it is the
+    index that build would publish."""
+    r = quantization_ranges(corpus, vec_col).first()
+    return IndexCodec(centroids, ranges=(list(r["mn_arr"]), list(r["mx_arr"])))
+
+
 def _dequantized(vec: Column, mn_arr: Column, mx_arr: Column) -> Column:
     """Element-wise quantize -> dequantize round-trip through the
     scalar codec: the value a reader of the int8 codes would see."""
@@ -1068,116 +1025,15 @@ def knn_quantized(
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
-
-
-def knn_ivf_quantized(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    ranges: DataFrame | None = None,
-) -> DataFrame:
-    """The production ANN composition: IVF coarse pruning + search over
-    stored scalar-int8 codes — :func:`knn_ivf`'s candidate pruning with
-    :func:`knn_quantized`'s compressed read path (the IVF-PQ index
-    shape, with the bit-reproducible scalar codec standing in for PQ).
-
-    Cells are probed with the FULL-precision query (the coarse
-    quantizer is tiny; keeping it exact costs nothing), scoring is
-    symmetric over dequantized vectors — exactly what a reader of the
-    stored codes computes — and candidates are bounded by ``n_probe``
-    cells, never the corpus cross. At 100 TB: codes shrink the corpus
-    4x on disk, cell partitioning prunes the scan to n_probe cells'
-    files, and the codebook + centroid matrix ride one broadcast row
-    each.
-    """
-    from ..session import ensure_min_partitions
-
-    if ranges is None:
-        # fit-time codebook from this corpus; callers searching against
-        # a PERSISTED index pass its meta ranges instead, so the twin
-        # reads the exact codebook the stored codes were written with
-        ranges = quantization_ranges(corpus, vec_col).localCheckpoint(
-            eager=True
-        )
-    assigned, centroids, cmat = ivf_assign(
-        corpus,
-        n_cells=n_cells,
-        seed=seed,
-        id_col=id_col,
-        vec_col=vec_col,
-        centroids=centroids,
-    )
-    c = (
-        ensure_min_partitions(assigned)
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            _dequantized(F.col("arr"), F.col("mn_arr"), F.col("mx_arr")).alias(
-                "cv"
-            ),
-            "cell",
-        )
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    return _int8_probe_and_score(
-        c, probe_cells(q, "qv", cmat, range(n_probe)), ranges, k, n_probe
-    )
-
-
-def _int8_probe_and_score(
-    c: DataFrame, probed: DataFrame, ranges: DataFrame, k: int, n_probe: int
-) -> DataFrame:
-    """THE int8 IVF search tail: each probed query (``query_id``, raw
-    ``qv``, ``cell_p*``) passes through the scalar codec, explodes to
-    its probed cells, joins the dequantized candidates (``neighbor_id``,
-    ``cv``, ``cell``) on cell, and ranks by round(cosine, 6) with the
-    neighbor-id tie-break. One implementation shared by the in-memory
-    composition (:func:`knn_ivf_quantized`) and the persisted index
-    (:func:`knn_persisted`) — the two MUST rank identically or the
-    persisted identity contracts break."""
-    q = probed.crossJoin(F.broadcast(ranges)).select(
-        "query_id",
-        _dequantized(F.col("qv"), F.col("mn_arr"), F.col("mx_arr")).alias("qv"),
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
-    )
+    return _top_k(scored, k, "cos")
 
 
 def _dq_codes(codes: Column, mn_arr: Column, mx_arr: Column) -> Column:
-    """Dequantize STORED codes (what :func:`knn_persisted` reads
-    back from the index) — the read half of the canonical codec.
+    """Dequantize int8 codes (what :func:`_search` scores, persisted
+    or in memory) — the read half of the canonical codec.
     Bit-identical to :func:`_dequantized` over the raw vector, because
-    the stored code came from the same :func:`_quant_code`."""
+    the code came from the same :func:`_quant_code` (see
+    :func:`_encode` for the ``smallint`` envelope)."""
     return F.transform(
         codes,
         lambda c, i: _quant_dq(
@@ -1399,9 +1255,10 @@ def knn_pq_adc(
     :func:`knn_bruteforce` (codes are m ints per row, so the scan
     moves ~no data compared to raw vectors); at production scale the
     same scoring drops onto an IVF candidate stream exactly like
-    :func:`knn_ivf_pq` does. Scoring reads the broadcast per-query
-    ADC tables (:func:`pq_query_tables`); round-before-rank with a
-    total tie-break keeps the ordering cross-engine deterministic."""
+    :func:`knn_ivf` over a PQ codec does. Scoring reads the broadcast
+    per-query ADC tables (:func:`pq_query_tables`); round-before-rank
+    with a total tie-break keeps the ordering cross-engine
+    deterministic."""
     m, _, _ = _pq_shape(codebooks)
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
@@ -1420,14 +1277,7 @@ def knn_pq_adc(
             pq_adc_distance(F.col("pq_code"), F.col("adc_tab"), m), 6
         ).alias("adc_dist"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rn")
-    )
+    return _top_k(scored, k, "adc_dist", ascending=True)
 
 
 def clustered_corpus_numpy(
@@ -1506,93 +1356,6 @@ def clustered_corpus_centers(
     ]
 
 
-def knn_ivf_pq(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ — the production ANN index composition (the faiss
-    ``IVFx,PQy`` shape): coarse-quantize the corpus into cells, PQ-code
-    each vector, and search by probing ``n_probe`` cells and scoring
-    ONLY their candidates with ADC. The scan is bounded by the probed
-    cells' population and each candidate is m small ints — the 100 TB
-    posture is cells as partitions (pruned reads, see
-    ``write_ivf_index``) with 32x-compressed payloads.
-
-    Composition of the certified pieces: :func:`ivf_assign`/
-    :func:`probe_cells` for routing (ties toward the lower cell),
-    :func:`pq_encode` codes, :func:`pq_adc_distance` scoring,
-    round-before-rank output (query_id, neighbor_id, adc_dist, rn)."""
-    assigned, _, cmat = ivf_assign(
-        corpus,
-        centroids=centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
-    codes = pq_encode(
-        assigned, codebooks, vec_col="arr", id_col=id_col,
-        keep_cols=("cell",),
-    ).select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
-    return _pq_probe_and_score(
-        codes, queries, cmat, codebooks, k, n_probe, id_col, vec_col
-    )
-
-
-def _pq_probe_and_score(
-    codes: DataFrame,
-    queries: DataFrame,
-    cmat: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """THE IVF-PQ search: per-query ADC tables, probe ``n_probe``
-    cells, join candidates on cell, score from the tables, round-
-    before-rank. One implementation shared by the in-memory
-    composition (:func:`knn_ivf_pq`) and the persisted index
-    (:func:`knn_persisted`) — the two paths MUST rank identically
-    or the persisted contract's oracle reuse breaks."""
-    m, _, _ = _pq_shape(codebooks)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    qt = pq_query_tables(q, codebooks)
-    probed = probe_cells(qt, "qv", cmat, list(range(n_probe)))
-    probes = probed.select(
-        "query_id",
-        "adc_tab",
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-        ).alias("cell"),
-    )
-    scored = (
-        probes.join(codes, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                pq_adc_distance(F.col("pq_code"), F.col("adc_tab"), m), 6
-            ).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rn")
-    )
-
-
 def residual_vec(arr: Column, cmat_col: Column, cell: Column) -> Column:
     """``x − centroid[cell]`` component-wise — THE residual projection
     (one site, shared by residual encode and residual search, the
@@ -1616,122 +1379,26 @@ def pq_encode_residual(
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     arr_col: str = "arr",
+    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, cell, pq_code) with the codes taken over each vector's
-    CELL RESIDUAL (see :func:`residual_vec`) — the encode half of the
-    residual IVF-PQ codec. One projection over the 1-row broadcast
-    centroid attach feeding the shared :func:`pq_encode` argmin; the
-    input must already carry its ``cell`` (from :func:`assign_cells` /
-    :func:`ivf_assign`)."""
+    """(id, [keep_cols...,] cell, pq_code) with the codes taken over
+    each vector's CELL RESIDUAL (see :func:`residual_vec`) — the
+    encode half of the residual IVF-PQ codec. One projection over the
+    1-row broadcast centroid attach feeding the shared
+    :func:`pq_encode` argmin; the input must already carry its
+    ``cell`` (from :func:`assign_cells` / :func:`ivf_assign`)."""
     j = assigned.crossJoin(F.broadcast(cmat))
     resid = j.select(
         id_col,
+        *keep_cols,
         "cell",
         residual_vec(F.col(arr_col), F.col("cmat"), F.col("cell")).alias(
             "rv"
         ),
     )
     return pq_encode(
-        resid, codebooks, vec_col="rv", id_col=id_col, keep_cols=("cell",)
-    )
-
-
-def knn_ivf_pq_residual(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Residual-encoded IVF-PQ — the faiss ``IVFx,PQy`` codec proper:
-    corpus vectors are coarse-quantized into cells, their RESIDUALS
-    (``x − centroid[cell]``) are PQ-coded, and search scores each
-    probed cell's candidates by ADC against that cell's residual of
-    the query (``q − centroid[cell]``). Same routing, probing, and
-    rank discipline as :func:`knn_ivf_pq`; only what the codes mean
-    changes. The ADC tables become per-(query, probed cell) instead
-    of per-query — n_probe small table builds per query, each m×n_cw
-    doubles, still O(1) lookups per candidate and bounded by the
-    probe depth, never the corpus.
-
-    Why it exists next to :func:`knn_ivf_pq` (raw codes): residuals
-    shrink the dynamic range the codebooks must cover from the corpus
-    spread to the within-cell spread — measured on the fitted path at
-    the same m=4×n_cw=16 budget on the 64×64 clustered geometry, ADC
-    recall@5 against the full-precision IVF search is 0.117 raw vs
-    0.848 residual at spread 0.05 and 0.359 vs 0.759 at spread 0.3
-    (tests/test_similarity.py pins the ordering; SURVEY records the
-    numbers). Residual books are fit on the residual frame (what the
-    codec quantizes), the same bounded-sample :func:`pq_fit`."""
-    assigned, _, cmat = ivf_assign(
-        corpus, centroids=centroids, id_col=id_col, vec_col=vec_col
-    )
-    codes = pq_encode_residual(
-        assigned, cmat, codebooks, id_col=id_col
-    ).select(F.col(id_col).alias("neighbor_id"), "cell", "pq_code")
-    return _pq_residual_probe_and_score(
-        codes, queries, cmat, codebooks, k, n_probe, id_col, vec_col
-    )
-
-
-def _pq_residual_probe_and_score(
-    codes: DataFrame,
-    queries: DataFrame,
-    cmat: DataFrame,
-    codebooks: list[list[list[float]]],
-    k: int,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """THE residual IVF-PQ search: probe ``n_probe`` cells, project
-    the query's residual AGAINST EACH PROBED CELL's centroid, build
-    that (query, cell)'s ADC tables from the residual, join the
-    cell's candidates, score, round-before-rank. The residual and the
-    tables ride the exploded probe rows (n_probe per query), so the
-    per-cell geometry is exact and nothing grows with the corpus."""
-    m, _, _ = _pq_shape(codebooks)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    probed = probe_cells(q, "qv", cmat, list(range(n_probe)))
-    probes = probed.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-        ).alias("cell"),
-    )
-    jc = probes.crossJoin(F.broadcast(cmat))
-    rq = jc.select(
-        "query_id",
-        "cell",
-        residual_vec(F.col("qv"), F.col("cmat"), F.col("cell")).alias(
-            "rqv"
-        ),
-    )
-    qt = pq_query_tables(rq, codebooks, qv_col="rqv")
-    scored = (
-        qt.join(codes, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                pq_adc_distance(F.col("pq_code"), F.col("adc_tab"), m), 6
-            ).alias("adc_dist"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "adc_dist", "rn")
+        resid, codebooks, vec_col="rv", id_col=id_col,
+        keep_cols=(*keep_cols, "cell"),
     )
 
 
@@ -1838,15 +1505,21 @@ def vectors_dir(spark, path: str) -> str:
 @dataclass(frozen=True)
 class IndexCodec:
     """What a generation's codes MEAN — the coarse quantizer's
-    ``centroids`` plus exactly one payload codec, as the generation's
+    ``centroids`` plus at most one payload codec, as the generation's
     1-row ``_meta`` records it:
 
+    - float (neither ``ranges`` nor ``codebooks``): the payload is the
+      raw ``arr double[]``. In-memory only — it has no on-disk layout,
+      and :meth:`meta_frame` raises on it.
     - int8 scalar: ``ranges`` = per-dimension (mn[], mx[]); codes are
       ``code smallint[]``; meta columns ``mn_arr``/``mx_arr``/``n_cells``.
     - PQ: ``codebooks`` (m x n_codewords x d_sub); codes are
       ``pq_code int[]`` over the raw vector, or over its cell residual
       (:func:`residual_vec`) when ``residual``; meta columns
       ``codebooks``/``residual``.
+
+    An in-memory index (:func:`knn_ivf`) is a generation that was
+    never published: a codec plus the frame :func:`_encode` returns.
 
     The codec is an index property, never a caller argument: search,
     append, stream ingest and compaction all read it from the live
@@ -1875,6 +1548,10 @@ class IndexCodec:
 
     def meta_frame(self, spark) -> DataFrame:
         """The 1-row ``_meta`` in this codec's on-disk layout."""
+        if self.codebooks is None and self.ranges is None:
+            raise ValueError(
+                "the float IVF codec is in-memory only: it has no _meta layout"
+            )
         if self.codebooks is None:
             return spark.createDataFrame(
                 [(self.centroids, *self.ranges, self.n_cells)],
@@ -1896,7 +1573,19 @@ def open_index(spark, path: str) -> tuple[str, IndexCodec]:
     the columns the meta carries (``codebooks`` = PQ, else int8);
     doubles round-trip parquet exactly."""
     gen = vectors_dir(spark, path)
-    row = spark.read.parquet(f"{gen}/_meta").collect()[0]
+    # the part files by name: a read of the ``_meta`` directory itself
+    # logs "All paths were ignored" (Spark treats the leading
+    # underscore as hidden) and a ``_meta/*`` glob logs a metadata-
+    # directory warning
+    meta = f"{gen}/_meta"
+    parts = [
+        f"{meta}/{n}"
+        for n in fsio.list_names(meta, spark)
+        if n.startswith("part-") and n.endswith(".parquet")
+    ]
+    if not parts:
+        raise FileNotFoundError(f"{gen} has no _meta part file")
+    row = spark.read.parquet(*parts).collect()[0]
     cents = [[float(v) for v in c] for c in row["centroids"]]
     if "codebooks" in row.__fields__:
         books = [
@@ -2055,28 +1744,44 @@ def _assert_batch_visible(spark, path: str, target: str) -> None:
 
 
 def _encode(
-    assigned: DataFrame, codec: IndexCodec, cmat: DataFrame, id_col: str
+    assigned: DataFrame,
+    codec: IndexCodec,
+    cmat: DataFrame,
+    id_col: str,
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """THE write-side encode: (id, codes, cell) in the index's own
-    codec from a frame carrying ``arr`` and its ``cell`` (from
-    :func:`assign_cells` / :func:`ivf_assign`; ``cmat`` is the
-    matching centroid row). Single implementation shared by the base
-    build and every appended batch (:func:`index_append`): the two
-    MUST encode identically or the byte-identity contracts break only
-    for appended corpora (the two-site-drift failure mode the
-    canonical-codec convention exists to prevent)."""
+    """THE encode: (id, [keep...,] payload, cell) in ``codec`` from a
+    frame carrying ``arr`` and its ``cell`` (from :func:`assign_cells`
+    / :func:`ivf_assign`; ``cmat`` is the matching centroid row).
+    Single implementation shared by the base build, every appended
+    batch (:func:`index_append`) and every in-memory index
+    (:func:`knn_ivf`): they MUST encode identically or the
+    byte-identity contracts break only for one store (the two-site
+    drift the canonical-codec convention exists to prevent). Payload
+    per codec: float ``arr``, int8 ``code``, PQ ``pq_code``.
+
+    int8 envelope: a code is :func:`_quant_code` cast to ``smallint``
+    — in [0, QUANT_LEVELS] inside the fit [mn, mx], and the unclamped
+    affine code outside it, exact while it fits ``smallint`` (a value
+    within ~128 ranges of the fit interval). A value farther out
+    raises a cast overflow under ANSI, in memory as on write; inside
+    the envelope the decoded code (:func:`_dq_codes`) equals
+    :func:`_dequantized` over the raw value bit for bit."""
     if codec.codebooks is not None:
         if codec.residual:
             return pq_encode_residual(
-                assigned, cmat, codec.codebooks, id_col=id_col
+                assigned, cmat, codec.codebooks, id_col=id_col, keep_cols=keep
             )
         return pq_encode(
             assigned, codec.codebooks, vec_col="arr", id_col=id_col,
-            keep_cols=("cell",),
+            keep_cols=(*keep, "cell"),
         )
+    if codec.ranges is None:
+        return assigned.select(id_col, *keep, "arr", "cell")
     ranges = codec.ranges_frame(assigned.sparkSession)
     return assigned.crossJoin(F.broadcast(ranges)).select(
         F.col(id_col),
+        *keep,
         F.transform(
             F.col("arr"),
             lambda x, i: _quant_code(
@@ -2087,6 +1792,96 @@ def _encode(
         ).alias("code"),
         "cell",
     )
+
+
+def _search(
+    codes: DataFrame,
+    codec: IndexCodec,
+    queries: DataFrame,
+    cmat: DataFrame,
+    k: int,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+    q_keep: tuple[str, ...] = (),
+    c_keep: tuple[str, ...] = (),
+    where: Column | None = None,
+) -> DataFrame:
+    """THE IVF search, for every codec and both stores. ``codes`` are
+    a generation's coded candidates as :func:`_encode` writes them —
+    a pruned parquet read (:func:`knn_persisted`) or the encode
+    itself (:func:`knn_ivf`). Each query probes its ``n_probe``
+    nearest cells with the full-precision vector, explodes to one row
+    per probed cell and joins that cell's candidates; self pairs and
+    pairs failing ``where`` drop, the score is rounded to 6 digits
+    before the rank, and :func:`_top_k` keeps k per query. Only the
+    payload -> score step is codec-specific:
+
+    - float: round(cosine) over the raw vectors (``cos``);
+    - int8: round(cosine) over the decoded codes (:func:`_dq_codes`),
+      the query through the same codec (:func:`_dequantized`);
+    - PQ raw: ADC (``adc_dist``) from per-query tables, built once per
+      query BEFORE the probe explode;
+    - PQ residual: ADC from per-(query, probed cell) tables over the
+      query's residual against that cell's centroid.
+
+    ``q_keep`` / ``c_keep`` ride through from ``queries`` / ``codes``.
+    Output: (query_id, q_keep..., neighbor_id, c_keep..., score, rn)."""
+    books = codec.codebooks
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        *q_keep,
+        as_double(F.col(vec_col)).alias("qv"),
+    )
+    if books is not None and not codec.residual:
+        q = pq_query_tables(q, books)
+    q = explode_probes(q, "qv", cmat, n_probe)
+    if books is not None:
+        if codec.residual:
+            rq = q.crossJoin(F.broadcast(cmat)).select(
+                "query_id",
+                *q_keep,
+                "cell",
+                residual_vec(F.col("qv"), F.col("cmat"), F.col("cell")).alias(
+                    "rqv"
+                ),
+            )
+            q = pq_query_tables(rq, books, qv_col="rqv")
+        cv = F.col("pq_code")
+        score = pq_adc_distance(F.col("cv"), F.col("adc_tab"), len(books))
+        name, ascending = "adc_dist", True
+    else:
+        cv = F.col("arr")
+        if codec.ranges is not None:
+            ranges = F.broadcast(codec.ranges_frame(codes.sparkSession))
+            q = q.crossJoin(ranges).select(
+                "query_id",
+                *q_keep,
+                "cell",
+                _dequantized(
+                    F.col("qv"), F.col("mn_arr"), F.col("mx_arr")
+                ).alias("qv"),
+            )
+            codes = codes.crossJoin(ranges)
+            cv = _dq_codes(F.col("code"), F.col("mn_arr"), F.col("mx_arr"))
+        score = cosine(F.col("qv"), F.col("cv"))
+        name, ascending = "cos", False
+    c = codes.select(
+        F.col(id_col).alias("neighbor_id"), *c_keep, "cell", cv.alias("cv")
+    )
+    not_self = F.col("neighbor_id") != F.col("query_id")
+    scored = (
+        c.join(F.broadcast(q), "cell")
+        .filter(not_self if where is None else not_self & where)
+        .select(
+            "query_id",
+            *q_keep,
+            "neighbor_id",
+            *c_keep,
+            F.round(score, 6).alias(name),
+        )
+    )
+    return _top_k(scored, k, name, ascending=ascending)
 
 
 def _build_index(
@@ -2120,11 +1915,12 @@ def write_ivf_index(
     centroids: list[list[float]] | None = None,
     grace_keep: int = 1,
 ) -> None:
-    """Persist the int8 IVF index — the durable form of
-    :func:`knn_ivf_quantized`'s in-memory build, turning the "cell
-    partitioning prunes the scan to n_probe cells' files" claim into
-    an on-disk fact. Fits its own centroids (unless ``centroids`` is
-    given) and the scalar codebook (per-dimension mn/mx) from ``emb``.
+    """Persist the int8 IVF index — the published form of an
+    in-memory :func:`knn_ivf` over :func:`fit_int8_codec`, turning the
+    "cell partitioning prunes the scan to n_probe cells' files" claim
+    into an on-disk fact. Fits its own centroids (unless ``centroids``
+    is given) and the scalar codebook (per-dimension mn/mx) from
+    ``emb``.
 
     - the live generation: (id, code smallint[]) parquet in the
       TWO-level ``ingest=/cell=`` layout — the base build lands in
@@ -2140,7 +1936,6 @@ def write_ivf_index(
     Build once, search many: at 100 TB the build is one assignment
     scan + one partitioned write (the shuffle is paid here, not per
     query), and reruns only ever touch ``n_probe`` partitions."""
-    r = quantization_ranges(emb, vec_col).first()
     assigned, centroids, cmat = ivf_assign(
         emb,
         n_cells=n_cells,
@@ -2150,7 +1945,7 @@ def write_ivf_index(
         fit_sample_rows=fit_sample_rows,
         centroids=centroids,
     )
-    codec = IndexCodec(centroids, ranges=(list(r["mn_arr"]), list(r["mx_arr"])))
+    codec = fit_int8_codec(emb, centroids, vec_col)
     _build_index(assigned, cmat, path, codec, id_col, grace_keep)
 
 
@@ -2202,11 +1997,10 @@ def index_append(
     idempotent, the exactly-once foreachBatch sink pattern.
 
     int8 out-of-range values (an incoming dim exceeding the fit
-    corpus's [mn, mx]) keep the unclamped affine code, so a reader
-    dequantizes them exactly like the in-memory composition does; a
-    deployment preferring saturation would clamp to [0, QUANT_LEVELS]
-    here AND in the search-side codec (the two must stay one
-    expression).
+    corpus's [mn, mx]) keep the unclamped affine code inside
+    :func:`_encode`'s ``smallint`` envelope, so a reader decodes them
+    exactly like an in-memory index does; a deployment preferring
+    saturation would clamp to [0, QUANT_LEVELS] in :func:`_encode`.
 
     Scale shape: one projection over the batch + a write that touches
     only the batch's own ingest partition — existing partitions are
@@ -2254,16 +2048,14 @@ def knn_persisted(
     centroid matrix); collect the DISTINCT probed cells (bounded by
     n_cells — the one driver-side step, and what turns the cell set
     into scan-time literals); read the generation filtered to those
-    cells — partition pruning drops every other cell's files — then
-    score exactly like the in-memory composition of the same codec:
-
-    - int8: dequantized codes, round(cosine, 6) —
-      :func:`knn_ivf_quantized`'s tail; rows
-      ``(query_id, neighbor_id, cos, rn)``.
-    - PQ raw / residual: ADC from the query's (or the per-cell query
-      residual's) tables — :func:`knn_ivf_pq` /
-      :func:`knn_ivf_pq_residual`'s tail; rows
-      ``(query_id, neighbor_id, adc_dist, rn)``.
+    cells — partition pruning drops every other cell's files — and
+    hand the read to :func:`_search`, the search an in-memory
+    :func:`knn_ivf` over the same codec runs. Rows are
+    ``(query_id, neighbor_id, cos, rn)`` for int8 and
+    ``(query_id, neighbor_id, adc_dist, rn)`` for PQ. Because both
+    stores share the encode and the search, a persisted == in-memory
+    identity certifies only the parquet round trip and the partition
+    pruning.
 
     ``n_probe=None`` defaults to the depth recorded by
     :func:`tune_index_n_probe` (the recall-targeted ops knob, read
@@ -2278,49 +2070,21 @@ def knn_persisted(
         n_probe = index_tuned_n_probe(spark, path, k=k) or 2
     gen, codec = open_index(spark, path)
     cmat = codec.cmat(spark)
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    probed = probe_cells(q, "qv", cmat, range(n_probe))
+    q = queries.select(as_double(F.col(vec_col)).alias("qv"))
     cells = sorted(
         int(r["cell"])
-        for r in probed.select(
-            F.explode(
-                F.array(*[F.col(f"cell_p{p}") for p in range(n_probe)])
-            ).alias("cell")
-        )
+        for r in explode_probes(q, "qv", cmat, n_probe)
+        .select("cell")
         .distinct()
         .collect()
     )
-    codes = (
-        spark.read.parquet(gen)
-        .filter(F.col("cell").isin(cells))
-        .withColumnRenamed(id_col, "neighbor_id")
+    # a pruned read is a few files: widen it before the per-row
+    # decode and scoring (in-memory codes are widened before assignment)
+    codes = ensure_min_partitions(
+        spark.read.parquet(gen).filter(F.col("cell").isin(cells))
     )
-    if codec.codebooks is not None:
-        score = (
-            _pq_residual_probe_and_score
-            if codec.residual
-            else _pq_probe_and_score
-        )
-        res = score(
-            codes.select("neighbor_id", "cell", "pq_code"),
-            queries, cmat, codec.codebooks, k, n_probe, id_col, vec_col,
-        )
-        return res, cells
-    ranges = codec.ranges_frame(spark)
-    c = (
-        ensure_min_partitions(codes)
-        .crossJoin(F.broadcast(ranges))
-        .select(
-            "neighbor_id",
-            _dq_codes(
-                F.col("code"), F.col("mn_arr"), F.col("mx_arr")
-            ).alias("cv"),
-            "cell",
-        )
-    )
-    return _int8_probe_and_score(c, probed, ranges, k, n_probe), cells
+    res = _search(codes, codec, queries, cmat, k, n_probe, id_col, vec_col)
+    return res, cells
 
 
 def knn_pq_persisted_rerank(
@@ -2371,9 +2135,6 @@ def knn_pq_persisted_rerank(
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos"), F.asc("neighbor_id")
-    )
     # coverage guard (see CONTRACT above): a shortlist id the corpus
     # cannot supply raises instead of silently shrinking the top-k
     covered = F.when(
@@ -2392,7 +2153,7 @@ def knn_pq_persisted_rerank(
             )
         ),
     ).otherwise(F.col("cv"))
-    res = (
+    scored = (
         short.select("query_id", "neighbor_id")
         .join(c, "neighbor_id", "left")
         .join(F.broadcast(q), "query_id")
@@ -2401,11 +2162,8 @@ def knn_pq_persisted_rerank(
             "neighbor_id",
             F.round(cosine(F.col("qv"), covered), 6).alias("cos"),
         )
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cos", "rn")
     )
-    return res, cells
+    return _top_k(scored, k, "cos"), cells
 
 
 def ivf_index_compact(

@@ -133,7 +133,8 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
     return similarity.knn_ivf(
-        corpus, queries, k=K, n_probe=IVFPQ_PROBE, centroids=centers
+        corpus, queries, similarity.IndexCodec(centers), k=K,
+        n_probe=IVFPQ_PROBE,
     )
 
 
@@ -160,7 +161,8 @@ def knn_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     approx = similarity.knn_ivf(
-        emb, queries, k=K, centroids=_ivf_centroids(spark, sf_dir)
+        emb, queries, similarity.IndexCodec(_ivf_centroids(spark, sf_dir)),
+        k=K,
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
@@ -187,9 +189,10 @@ def knn_ivf_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.knn_bruteforce(emb, queries, k=K).select(
         "query_id", "neighbor_id"
     )
-    approx = similarity.knn_ivf_quantized(
-        emb, queries, k=K, centroids=_ivf_centroids(spark, sf_dir)
-    ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
+    codec = similarity.fit_int8_codec(emb, _ivf_centroids(spark, sf_dir))
+    approx = similarity.knn_ivf(emb, queries, codec, k=K).select(
+        "query_id", "neighbor_id", F.lit(1).alias("hit")
+    )
     return (
         exact.join(approx, ["query_id", "neighbor_id"], "left")
         .agg(
@@ -236,8 +239,9 @@ def knn_ivf_quantized_recall_p6(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.knn_bruteforce(emb, queries, k=K).select(
         "query_id", "neighbor_id"
     )
-    approx = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_probe=IVF_HIGH_PROBE, centroids=cents
+    approx = similarity.knn_ivf(
+        emb, queries, similarity.fit_int8_codec(emb, cents), k=K,
+        n_probe=IVF_HIGH_PROBE,
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit"))
     recall_row = exact.join(approx, ["query_id", "neighbor_id"], "left").agg(
         F.count(F.lit(1)).alias("n_truth"),
@@ -255,14 +259,7 @@ def knn_ivf_quantized_recall_p6(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         similarity.as_double(F.col("embedding")).alias("qv"),
     )
-    probed = similarity.probe_cells(
-        q, "qv", cmat, range(IVF_HIGH_PROBE)
-    ).select(
-        "query_id",
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(IVF_HIGH_PROBE)])
-        ).alias("cell"),
-    )
+    probed = similarity.explode_probes(q, "qv", cmat, IVF_HIGH_PROBE)
     cost = (
         probed.join(occ, "cell")
         .agg(F.sum("cnt").alias("_scanned"))
@@ -424,11 +421,13 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
 def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search over the PERSISTED cell-partitioned IVF index
     (similarity.write_ivf_index / knn_persisted): one row
-    certifying that (a) the pruned-scan search returns exactly the
-    in-memory composition's results over the same fit (codes on disk
-    lose nothing) and (b) the scan touched a strict subset of cells —
-    the partition-pruning fact, plan-asserted in
-    tests/test_ivf_persist.py with a negative control."""
+    certifying that (a) the pruned-scan search returns exactly an
+    in-memory ``knn_ivf`` over the index's own codec and (b) the scan
+    touched a strict subset of cells — the partition-pruning fact,
+    plan-asserted in tests/test_ivf_persist.py with a negative
+    control. Both searches run the same encode and the same
+    ``similarity._search``, so (a) certifies only the parquet round
+    trip (codes and meta on disk lose nothing) and the pruning."""
     emb = read_table(spark, sf_dir, "embeddings")
     path = _ensure_ivf_index(spark, sf_dir)
     queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
@@ -436,13 +435,8 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
     )
     _, codec = similarity.open_index(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        emb,
-        queries,
-        k=K,
-        n_cells=codec.n_cells,
-        n_probe=IVF_INDEX_PROBE,
-        centroids=codec.centroids,
+    mem = similarity.knn_ivf(
+        emb, queries, codec, k=K, n_probe=IVF_INDEX_PROBE
     )
     mism = res.exceptAll(mem).union(mem.exceptAll(res))
     return (
@@ -593,22 +587,19 @@ def _ensure_compacted(
 def _ivf_lifecycle_facts(spark: SparkSession, emb: DataFrame, path: str):
     """(search result, scanned cells, n_cells, 1-row facts) for the
     int8 lifecycle rows: the pruned search over the stage's index, and
-    a row of ``n_results``, ``_mm`` (rows differing from the in-memory
-    composition over the FULL corpus under the index's own fit
-    artifacts), ``_indexed`` and ``_total``."""
+    a row of ``n_results``, ``_mm`` (rows differing from an in-memory
+    ``knn_ivf`` over the FULL corpus under the index's own codec),
+    ``_indexed`` and ``_total``. Both sides share the encode and the
+    search, so ``_mm == 0`` certifies the parquet round trip, the
+    stage's ingest bookkeeping and the partition pruning — not the
+    scoring."""
     queries = emb.filter(F.col("vec_id") < IVF_INDEX_QUERIES)
     res, cells = similarity.knn_persisted(
         spark, path, queries, k=K, n_probe=IVF_INDEX_PROBE
     )
     gen, codec = similarity.open_index(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        emb,
-        queries,
-        k=K,
-        n_cells=codec.n_cells,
-        n_probe=IVF_INDEX_PROBE,
-        centroids=codec.centroids,
-        ranges=codec.ranges_frame(spark),
+    mem = similarity.knn_ivf(
+        emb, queries, codec, k=K, n_probe=IVF_INDEX_PROBE
     )
     mism = res.exceptAll(mem).union(mem.exceptAll(res))
     facts = (
@@ -626,8 +617,8 @@ def knn_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index INGESTION contract: append a corpus slice into the
     persisted IVF index (existing centroids + codebook, no refit —
     similarity.index_append), then certify that searching the
-    appended index returns exactly what the in-memory composition
-    computes over the FULL corpus under the same fit artifacts, and
+    appended index returns exactly what an in-memory ``knn_ivf``
+    computes over the FULL corpus under the index's codec, and
     that every corpus row is indexed. The ANN index absorbs a
     streaming corpus without rebuild — partition-append only touches
     the cells the batch lands in."""
@@ -648,8 +639,8 @@ def knn_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
 def knn_ivf_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-ingest contract (the knn_ivf_appended identity one
     level up): after the stream drains, searching the stream-built
-    persisted index returns exactly what the in-memory composition
-    computes over the FULL corpus under the same fit artifacts, every
+    persisted index returns exactly what an in-memory ``knn_ivf``
+    computes over the FULL corpus under the index's codec, every
     corpus row is indexed, and at least two genuine micro-batches
     flowed through foreachBatch (n_ingest_batches)."""
     from ..streaming.ann_ingest import committed_batches
@@ -678,7 +669,7 @@ def knn_ivf_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streamed-index MAINTENANCE contract: after three micro-batches
     accumulate their ingest partitions, compaction folds them into the
     base cell layout. One row certifies: search over the compacted
-    index == the pre-compaction snapshot == the in-memory composition
+    index == the pre-compaction snapshot == an in-memory ``knn_ivf``
     over the full corpus; the corpus is fully indexed; the ingest
     partitions collapsed to base only; the file count strictly
     dropped; the replay-guard markers survived; and the pruned scan
@@ -796,7 +787,9 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     >= 0.95 (full-precision IVF vs exact truth), (b) end-to-end recall
     >= 0.8 over the persisted int8 codes, (c) scan fraction <= 0.25 of
     the brute-force cross (measured 0.053), (d) persisted search ==
-    in-memory composition, (e) partition-pruned scan. ``n_truth`` and
+    in-memory ``knn_ivf`` over the index's codec (the same encode and
+    search, so this certifies the parquet round trip), (e)
+    partition-pruned scan. ``n_truth`` and
     ``truth_md5`` are derived by the oracle from the REPLICATED corpus
     formula — the exact brute-force truth set is certified
     cross-engine, not just counted."""
@@ -833,20 +826,13 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     end2end = recall_row(res, MANYCELL_RECALL_FLOOR, MANYCELL_RECALL_COL)
     routing = recall_row(
         similarity.knn_ivf(
-            nrm, q_nrm, k=K, n_probe=MANYCELL_PROBE, centroids=cents
+            nrm, q_nrm, similarity.IndexCodec(cents), k=K,
+            n_probe=MANYCELL_PROBE,
         ),
         MANYCELL_ROUTING_FLOOR,
         MANYCELL_ROUTING_COL,
     ).select(MANYCELL_ROUTING_COL)
-    mem = similarity.knn_ivf_quantized(
-        nrm,
-        q_nrm,
-        k=K,
-        n_cells=n_cells,
-        n_probe=MANYCELL_PROBE,
-        centroids=cents,
-        ranges=codec.ranges_frame(spark),
-    )
+    mem = similarity.knn_ivf(nrm, q_nrm, codec, k=K, n_probe=MANYCELL_PROBE)
     mism = (
         res.exceptAll(mem)
         .union(mem.exceptAll(res))
@@ -863,13 +849,8 @@ def knn_ivf_manycell_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         similarity.as_double(F.col("embedding")).alias("qv"),
     )
-    probed = similarity.probe_cells(
-        qv, "qv", codec.cmat(spark), range(MANYCELL_PROBE)
-    ).select(
-        "query_id",
-        F.explode(
-            F.array(*[F.col(f"cell_p{p}") for p in range(MANYCELL_PROBE)])
-        ).alias("cell"),
+    probed = similarity.explode_probes(
+        qv, "qv", codec.cmat(spark), MANYCELL_PROBE
     )
     cost = (
         probed.join(occ, "cell")
@@ -948,13 +929,7 @@ def hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "anchor_id", "negative_id"
     )
     approx = similarity.hard_negatives_ivf(
-        nrm,
-        a_nrm,
-        k=K,
-        n_cells=codec.n_cells,
-        n_probe=MANYCELL_PROBE,
-        centroids=codec.centroids,
-        ranges=codec.ranges_frame(spark),
+        nrm, a_nrm, codec, k=K, n_probe=MANYCELL_PROBE
     ).select("anchor_id", "negative_id", F.lit(1).alias("hit"))
     recall_row = exact.join(
         approx, ["anchor_id", "negative_id"], "left"
@@ -1499,8 +1474,9 @@ def knn_ivf_pq_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
     )
     queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    return similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=K, n_probe=IVFPQ_PROBE
+    return similarity.knn_ivf(
+        corpus, queries, similarity.IndexCodec(centers, codebooks=books),
+        k=K, n_probe=IVFPQ_PROBE,
     )
 
 
@@ -1527,8 +1503,9 @@ def knn_ivf_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         PQ_EXACT_M, PQ_EXACT_CW, PQ_EXACT_DSUB
     )
     queries = corpus.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
-    return similarity.knn_ivf_pq_residual(
-        corpus, queries, centers, books, k=K, n_probe=IVFPQ_PROBE
+    codec = similarity.IndexCodec(centers, codebooks=books, residual=True)
+    return similarity.knn_ivf(
+        corpus, queries, codec, k=K, n_probe=IVFPQ_PROBE
     )
 
 
@@ -1593,24 +1570,23 @@ def knn_pq_residual_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout, the codec flag riding the generation's 1-row meta, and
     the search dispatching to residual scoring off that flag alone
     (the caller never states the codec — knn_persisted reads it).
-    Held to the in-memory residual composition's value-exact oracle
-    VERBATIM: a lossy meta round-trip, a mis-dispatched scorer (raw
-    ADC over residual codes), or a mis-pruned partition breaks the
-    hash."""
+    Held to the in-memory residual row's value-exact oracle VERBATIM:
+    a lossy meta round-trip, a mis-read codec flag (raw ADC over
+    residual codes), or a mis-pruned partition breaks the hash."""
     return _pq_search(spark, _ensure_pq_index(spark, residual=True))
 
 
 def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted IVF-PQ index, searched — and held to the SAME
-    value-exact oracle as the in-memory composition: meta (centroids +
+    value-exact oracle as the in-memory row: meta (centroids +
     codebooks) read back from the index, candidates scanned only from
     the probed cells' partitions, ADC from per-query tables. Because
     corpus, centers, and codebooks are all formula-derived and the
-    persisted search shares :func:`_pq_probe_and_score` with
-    ``knn_ivf_pq_exact``, the oracle string is REUSED verbatim — any
-    divergence introduced by the persist/read/prune cycle (a lossy
-    meta round-trip, a mis-pruned partition, a code mismatch) breaks
-    the hash."""
+    persisted search is ``similarity._search``, the one search
+    ``knn_ivf_pq_exact`` runs in memory, the oracle string is REUSED
+    verbatim — any divergence introduced by the persist/read/prune
+    cycle (a lossy meta round-trip, a mis-pruned partition, a code
+    mismatch) breaks the hash."""
     return _pq_search(spark, _ensure_pq_index(spark))
 
 
@@ -1808,8 +1784,9 @@ def knn_ivf_persisted_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted meta round-trips those centers bit-for-bit — plus (b)
     ``used_tuned_default``: the metadata-defaulted search equals the
     explicit-depth search, and (c) ``persisted_eq_memory``: the
-    persisted search at the tuned depth equals the in-memory
-    composition over the same fit artifacts."""
+    persisted search at the tuned depth equals an in-memory
+    ``knn_ivf`` over the index's codec — the same encode and search,
+    so (c) certifies only the parquet round trip and the pruning."""
     raw, _ = _manycell_corpora(spark)
     path = _ensure_manycell_tuned_index(spark)
     queries = raw.filter(F.col("vec_id") % MANYCELL_QUERY_MOD == 0)
@@ -1823,10 +1800,7 @@ def knn_ivf_persisted_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, path, queries, k=K, n_probe=p
     )
     _, codec = similarity.open_index(spark, path)
-    mem = similarity.knn_ivf_quantized(
-        raw, queries, k=K, n_cells=codec.n_cells, n_probe=p,
-        centroids=codec.centroids, ranges=codec.ranges_frame(spark),
-    )
+    mem = similarity.knn_ivf(raw, queries, codec, k=K, n_probe=p)
     used_default = (
         res_tuned.exceptAll(res_explicit)
         .union(res_explicit.exceptAll(res_tuned))
@@ -1998,9 +1972,9 @@ def knn_ivf_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.knn_ivf(
         corpus,
         queries,
+        similarity.IndexCodec(kmeans.centroids_to_floats(cents)),
         k=K,
         n_probe=IVFPQ_PROBE,
-        centroids=kmeans.centroids_to_floats(cents),
     )
 
 
@@ -2238,7 +2212,9 @@ def _ivf_pq_residual_oracle() -> str:
     for each PROBED cell — the same exact IEEE subtraction order as
     residual_vec's zip_with), the shared PQ fragments pointed at the
     residual columns, candidates restricted to probed cells,
-    round-before-rank."""
+    round-before-rank. Each center is cut out of the literal once
+    (``cen``) and joined on cell: indexing the whole literal per
+    element cost ~11 s of DuckDB per run."""
     cents = similarity.clustered_corpus_centers(
         MANYCELL_CLUSTERS, MANYCELL_DIM
     )
@@ -2252,19 +2228,22 @@ def _ivf_pq_residual_oracle() -> str:
     dist_cols, code_cols, adc = _pq_sql_parts(vec="re", qv="rq")
     residual = (
         f"list_transform(generate_series(1, {MANYCELL_DIM}), "
-        f"i -> {{v}}[i] - ({cent_sql})[cell + 1][i])"
+        f"i -> {{v}}[i] - c[i])"
     )
     return f"""
         WITH {_manycell_routing_sql(IVFPQ_PROBE)},
+        cen AS (SELECT ci - 1 AS cell, ({cent_sql})[ci] AS c
+                FROM (SELECT unnest(generate_series(1, {len(cents)}))
+                          AS ci)),
         res AS (SELECT vec_id, cell,
                        {residual.format(v="e")} AS re
-                FROM assigned),
+                FROM assigned JOIN cen USING (cell)),
         dists AS (SELECT vec_id, cell, re, {dist_cols} FROM res),
         enc AS (SELECT vec_id AS neighbor_id, cell, {code_cols}
                 FROM dists),
         pres AS (SELECT query_id, cell,
                         {residual.format(v="qv")} AS rq
-                 FROM probes),
+                 FROM probes JOIN cen USING (cell)),
         scored AS (
             SELECT p.query_id, enc.neighbor_id,
                    ROUND({adc}, 6) AS adc_dist

@@ -52,8 +52,8 @@ def index_path(spark, sf_dir, tmp_path_factory):
 class _Case(NamedTuple):
     """One codec's lifecycle-test setup: the corpus, the query set,
     the cell count, ``build(df, path)`` writing the base index, and
-    ``mem(path)`` — the in-memory composition over the FULL corpus
-    under the index's own fit artifacts."""
+    ``mem(path)`` — an in-memory ``knn_ivf`` over the FULL corpus
+    under the index's own codec."""
 
     codec: str
     corpus: object
@@ -63,6 +63,13 @@ class _Case(NamedTuple):
     mem: Callable
 
 
+def _mem(spark, corpus, queries) -> Callable:
+    return lambda path: similarity.knn_ivf(
+        corpus, queries, similarity.open_index(spark, path)[1], k=K,
+        n_probe=2,
+    )
+
+
 def _case(spark, sf_dir, codec: str, n_cells: int = 4) -> _Case:
     """int8: the testdata embeddings, a fitted ``n_cells``-cell index.
     PQ: a small formula corpus (8 clusters x 16) with its closed-form
@@ -70,29 +77,19 @@ def _case(spark, sf_dir, codec: str, n_cells: int = 4) -> _Case:
     if codec == "int8":
         emb = read_table(spark, sf_dir, "embeddings")
         queries = emb.filter(F.col("vec_id") < 4)
-
-        def mem(path):
-            _, c = similarity.open_index(spark, path)
-            return similarity.knn_ivf_quantized(
-                emb, queries, k=K, n_cells=c.n_cells, n_probe=2,
-                centroids=c.centroids, ranges=c.ranges_frame(spark),
-            )
-
         return _Case(
             codec, emb, queries, n_cells,
             lambda df, path: similarity.write_ivf_index(
                 df, path, n_cells=n_cells, seed=42
             ),
-            mem,
+            _mem(spark, emb, queries),
         )
     corpus, centers, books = _pq_artifacts(spark)
     queries = corpus.filter("vec_id % 32 = 0")
     return _Case(
         codec, corpus, queries, 8,
         lambda df, path: similarity.write_pq_index(df, path, centers, books),
-        lambda path: similarity.knn_ivf_pq(
-            corpus, queries, centers, books, k=K, n_probe=2
-        ),
+        _mem(spark, corpus, queries),
     )
 
 
@@ -131,6 +128,13 @@ def test_meta_roundtrip(spark, index_path):
     assert len(codec.centroids) == N_CELLS
     r = codec.ranges_frame(spark).collect()[0]
     assert len(r["mn_arr"]) == len(codec.centroids[0])
+
+
+def test_float_codec_is_memory_only(spark):
+    """The raw-float codec (centroids only) has no on-disk layout: an
+    in-memory index may use it, a publish may not."""
+    with pytest.raises(ValueError, match="in-memory only"):
+        similarity.IndexCodec([[0.0, 1.0]]).meta_frame(spark)
 
 
 def test_search_scan_is_partition_pruned(spark, sf_dir, index_path):
@@ -622,11 +626,7 @@ def test_two_streams_interleaved_ingest_one_index(spark, sf_dir, tmp_path):
     # the FULL corpus under the same fit artifacts
     queries = emb.filter(F.col("vec_id") < 3)
     res, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
-    _, codec = similarity.open_index(spark, idx)
-    mem = similarity.knn_ivf_quantized(
-        emb, queries, k=K, n_cells=codec.n_cells, n_probe=2,
-        centroids=codec.centroids, ranges=codec.ranges_frame(spark),
-    )
+    mem = _mem(spark, emb, queries)(idx)
     assert res.exceptAll(mem).count() == 0
     assert mem.exceptAll(res).count() == 0
 
@@ -909,7 +909,7 @@ def test_pq_persisted_rerank_recovers_full_precision(spark, tmp_path):
     similarity.write_pq_index(corpus, idx, centers, books)
     queries = corpus.filter("vec_id % 32 = 0")
     full = similarity.knn_ivf(
-        corpus, queries, k=K, n_probe=2, centroids=centers
+        corpus, queries, similarity.IndexCodec(centers), k=K, n_probe=2
     )
     # covering shortlist: nearest-center occupancy can exceed the
     # construction's per-cluster width, so size with margin and
@@ -1082,8 +1082,9 @@ def test_lifecycle_torture_three_maintainers_one_pointer(
     # equals the in-memory composition over the full corpus, bit-equal
     queries = corpus.filter("vec_id % 32 = 0")
     res, _ = similarity.knn_persisted(spark, idx, queries, k=K, n_probe=2)
-    mem = similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=K, n_probe=2
+    mem = similarity.knn_ivf(
+        corpus, queries, similarity.IndexCodec(centers, codebooks=books),
+        k=K, n_probe=2,
     )
     assert res.exceptAll(mem).count() == 0
     assert mem.exceptAll(res).count() == 0
@@ -1114,8 +1115,10 @@ def test_residual_pq_index_full_lifecycle(spark, tmp_path):
         spark, idx, corpus.filter(F.col("vec_id") % 5 >= 2)
     )
     queries = corpus.filter("vec_id % 32 = 0")
-    mem = similarity.knn_ivf_pq_residual(
-        corpus, queries, centers, books, k=K, n_probe=2
+    mem = similarity.knn_ivf(
+        corpus, queries,
+        similarity.IndexCodec(centers, codebooks=books, residual=True),
+        k=K, n_probe=2,
     )
     res, cells = similarity.knn_persisted(
         spark, idx, queries, k=K, n_probe=2
@@ -1147,7 +1150,7 @@ def test_residual_pq_index_full_lifecycle(spark, tmp_path):
     # full-precision IVF search (the retention argument is codec-
     # independent once the shortlist covers the probed candidates)
     full = similarity.knn_ivf(
-        corpus, queries, k=K, n_probe=2, centroids=centers
+        corpus, queries, similarity.IndexCodec(centers), k=K, n_probe=2
     )
     rr, _ = similarity.knn_pq_persisted_rerank(
         spark, idx, corpus, queries, k=K, n_probe=2, shortlist=64

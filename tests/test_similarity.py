@@ -237,8 +237,8 @@ def test_knn_ivf_quantized_recall_floor(spark):
     exact = similarity.knn_bruteforce(emb, qs, k=5).select(
         "query_id", "neighbor_id"
     )
-    approx = similarity.knn_ivf_quantized(
-        emb, qs, k=5, n_cells=4, centroids=cents
+    approx = similarity.knn_ivf(
+        emb, qs, similarity.fit_int8_codec(emb, cents), k=5
     )
     got = approx.select("query_id", "neighbor_id",
                         F.lit(1).alias("hit"))
@@ -332,7 +332,7 @@ def test_manycell_geometry_bounds(spark):
     routed = {
         (r["query_id"], r["neighbor_id"])
         for r in sim.knn_ivf(
-            nrm, q, k=5, n_probe=plan.MANYCELL_PROBE, centroids=cents
+            nrm, q, sim.IndexCodec(cents), k=5, n_probe=plan.MANYCELL_PROBE
         ).collect()
     }
     assert len(exact & routed) / len(exact) >= plan.MANYCELL_ROUTING_FLOOR
@@ -357,8 +357,8 @@ def test_hard_negatives_ivf_recall_floor(spark):
         for r in sim.hard_negatives(raw, a_raw, k=5).collect()
     }
     rows = sim.hard_negatives_ivf(
-        nrm, a_nrm, k=5, n_cells=plan.MANYCELL_CELLS,
-        n_probe=plan.MANYCELL_PROBE, centroids=cents,
+        nrm, a_nrm, sim.fit_int8_codec(nrm, cents), k=5,
+        n_probe=plan.MANYCELL_PROBE,
     ).collect()
     got = {(r["anchor_id"], r["negative_id"]) for r in rows}
     assert len(exact & got) / len(exact) >= plan.HN_IVF_RECALL_FLOOR
@@ -451,16 +451,13 @@ def test_ivf_pq_all_probes_equals_full_scan(spark):
     full = similarity.knn_pq_adc(
         similarity.pq_encode(corpus, books), queries, books, k=5
     )
-    via_ivf = similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=5, n_probe=8
-    )
+    pq = similarity.IndexCodec(centers, codebooks=books)
+    via_ivf = similarity.knn_ivf(corpus, queries, pq, k=5, n_probe=8)
     canon = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
     assert canon(via_ivf) == canon(full)
     # pruned probe: every returned neighbor sits in one of its query's
     # 2 nearest cells
-    pruned = similarity.knn_ivf_pq(
-        corpus, queries, centers, books, k=5, n_probe=2
-    )
+    pruned = similarity.knn_ivf(corpus, queries, pq, k=5, n_probe=2)
     assigned, _, cmat = similarity.ivf_assign(corpus, centroids=centers)
     cell_of = {r["vec_id"]: r["cell"] for r in assigned.collect()}
     qp = similarity.probe_cells(
@@ -470,6 +467,23 @@ def test_ivf_pq_all_probes_equals_full_scan(spark):
     allowed = {r["query_id"]: {r["cell_p0"], r["cell_p1"]} for r in qp}
     for r in pruned.collect():
         assert cell_of[r["neighbor_id"]] in allowed[r["query_id"]]
+
+
+def test_ivf_int8_all_probes_equals_full_scan(spark, emb):
+    """In-memory IVF over an int8 codec fit from the corpus, with
+    n_probe == n_cells, must return EXACTLY knn_quantized's full-scan
+    int8 search — the int8 twin of the PQ test above. The IVF side
+    scores decoded smallint codes, the full scan re-derives each code
+    from the raw vector, so this checks the int8 scoring the persisted
+    and in-memory searches share against an independent path."""
+    q = emb.filter(F.col("vec_id") < 10)
+    cents = similarity.ivf_fit(emb, n_cells=4, seed=42)
+    codec = similarity.fit_int8_codec(emb, cents)
+    via_ivf = similarity.knn_ivf(emb, q, codec, k=5, n_probe=4)
+    full = similarity.knn_quantized(emb, q, k=5)
+    canon = lambda df: sorted(map(tuple, df.collect()))  # noqa: E731
+    assert canon(via_ivf) == canon(full)
+    assert len(canon(full)) == 50
 
 
 def test_pq_fit_replica_matches_spark_fit(spark):
@@ -526,7 +540,8 @@ def test_recall_curve_matches_physical_research(spark):
     for p in (1, 2, 4):
         measured = (
             similarity.knn_ivf(
-                corpus, queries, k=5, n_probe=p, centroids=centers
+                corpus, queries, similarity.IndexCodec(centers), k=5,
+                n_probe=p,
             )
             .select("query_id", "neighbor_id")
             .join(exact, ["query_id", "neighbor_id"])
@@ -587,19 +602,19 @@ def test_pq_probe_curve_transfer_needs_rerank(spark):
         F.desc("cos"), F.asc("neighbor_id")
     )
 
+    pq = similarity.IndexCodec(centers, codebooks=books)
+
     def hits_adc(p: int) -> int:
         return (
-            similarity.knn_ivf_pq(
-                corpus, queries, centers, books, k=5, n_probe=p
-            )
+            similarity.knn_ivf(corpus, queries, pq, k=5, n_probe=p)
             .select("query_id", "neighbor_id")
             .join(exact, ["query_id", "neighbor_id"])
             .count()
         )
 
     def hits_rerank(p: int, shortlist: int) -> int:
-        short = similarity.knn_ivf_pq(
-            corpus, queries, centers, books, k=shortlist, n_probe=p
+        short = similarity.knn_ivf(
+            corpus, queries, pq, k=shortlist, n_probe=p
         ).select("query_id", "neighbor_id")
         rr = (
             short.join(c, "neighbor_id")
@@ -633,7 +648,7 @@ def test_pq_probe_curve_transfer_needs_rerank(spark):
 
 
 def test_residual_pq_beats_raw_at_same_budget(spark):
-    """Residual encoding (knn_ivf_pq_residual — the faiss IVFx,PQy
+    """Residual encoding (a residual PQ codec — the faiss IVFx,PQy
     codec proper) lifts fitted-path ADC recall@5 over raw-vector codes
     at the SAME m×n_codewords budget: the books only have to cover the
     within-cell ball, not the corpus range. Measured on the 64×64
@@ -649,12 +664,14 @@ def test_residual_pq_beats_raw_at_same_budget(spark):
     queries = corpus.filter("vec_id % 64 = 0")
     k, n_probe = 5, 2
     truth = similarity.knn_ivf(
-        corpus, queries, k=k, n_probe=n_probe, centroids=centers
+        corpus, queries, similarity.IndexCodec(centers), k=k,
+        n_probe=n_probe,
     ).select("query_id", "neighbor_id")
     n_truth = truth.count()
     books_raw = similarity.pq_fit(corpus, m=4, n_codewords=16, seed=42)
-    raw = similarity.knn_ivf_pq(
-        corpus, queries, centers, books_raw, k=k, n_probe=n_probe
+    raw = similarity.knn_ivf(
+        corpus, queries, similarity.IndexCodec(centers, codebooks=books_raw),
+        k=k, n_probe=n_probe,
     ).select("query_id", "neighbor_id")
     assigned, _, cmat = similarity.ivf_assign(corpus, centroids=centers)
     resid = assigned.crossJoin(F.broadcast(cmat)).select(
@@ -666,8 +683,10 @@ def test_residual_pq_beats_raw_at_same_budget(spark):
     books_res = similarity.pq_fit(
         resid, m=4, n_codewords=16, seed=42, vec_col="rv"
     )
-    res = similarity.knn_ivf_pq_residual(
-        corpus, queries, centers, books_res, k=k, n_probe=n_probe
+    res = similarity.knn_ivf(
+        corpus, queries,
+        similarity.IndexCodec(centers, codebooks=books_res, residual=True),
+        k=k, n_probe=n_probe,
     ).select("query_id", "neighbor_id")
     r_raw = raw.join(truth, ["query_id", "neighbor_id"]).count() / n_truth
     r_res = res.join(truth, ["query_id", "neighbor_id"]).count() / n_truth

@@ -39,11 +39,11 @@ CROSS_JOIN_OK = {
     "sketch_accuracy",     # 1-row exact/sketch scalar attaches
     "lang_mixture_resample",  # 1-row weight-sum + T scalar attaches
     "knn_ivf",             # 1-row centroid-matrix broadcast attach
-    "knn_ivf_lloyd",       # same similarity.knn_ivf operator and attach
+    "knn_ivf_lloyd",       # same similarity.knn_ivf search and attach
     "token_budget_select",  # 1-row corpus token-budget scalar attach
     "knn_quantized",       # exactness demo of the quantized read path
     "knn_ivf_quantized_recall_p6",  # brute ground truth + 1-row cost attaches
-    "knn_ivf_persisted",   # 1-row codebook/centroid + contract attaches
+    "knn_ivf_persisted",   # 1-row codec/centroid + contract attaches
     "knn_ivf_appended",    # same contract shape over the appended index
     "knn_ivf_streamed",    # same contract shape over the stream-built index
     "knn_ivf_compacted",   # same contract shape over the compacted index
@@ -52,8 +52,8 @@ CROSS_JOIN_OK = {
     "hard_negative_mining_ivf",  # brute ground truth + contract attaches
     "knn_pq_adc_exact",    # declared full-scan ADC baseline (codes-only scan)
     "knn_pq_rerank_recall",  # brute ground truth + broadcast query attaches
-    "knn_ivf_pq_exact",    # 1-row centroid-matrix broadcast attach
-    "knn_ivf_pq_residual",  # same attaches (residual codec variant)
+    "knn_ivf_pq_exact",    # knn_ivf over a PQ codec: 1-row centroid attaches
+    "knn_ivf_pq_residual",  # same search and attaches, residual PQ codec
     "knn_pq_residual_persisted",  # same attaches over the persisted index
     "knn_ivf_pq_persisted",  # same attaches over the persisted index
     "knn_pq_persisted_rerank",  # same attaches + broadcast query re-rank
